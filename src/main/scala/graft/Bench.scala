@@ -7,6 +7,24 @@ object Bench {
       .getSystemLoadAverage
   } catch { case _: Throwable => -1.0 }
 
+  /** Body of a JSON string literal for `s`: backslash and quote
+    * escaped, and every control character (< 0x20) as its short escape
+    * or a `u00XX` escape — so a value can never break a record, nor
+    * the one-line stdout contract. */
+  private[graft] def jsonEscape(s: String): String = {
+    val b = new StringBuilder
+    s.foreach {
+      case '\\' => b ++= "\\\\"
+      case '"' => b ++= "\\\""
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < 0x20 => b ++= "\\u%04x".format(c.toInt)
+      case c => b += c
+    }
+    b.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -243,8 +261,7 @@ object Bench {
     // the raw extraConf string is stamped into BOTH records (even when
     // empty): an A/B-configured run's record must be distinguishable
     // from a default-config run if one is ever committed by mistake
-    val extraConfRaw = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .replace("\\", "\\\\").replace("\"", "\\\"")
+    val extraConfRaw = jsonEscape(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", ""))
     val stdoutLine =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","load1":${f3(runLoad)},"nqueries":${results.size},"shown":${picked.size},"full":"$outName","extra_conf":"$extraConfRaw"$canaryJson,"queries":$qs,"sf":"$sfDir"}"""
     // FULL results file: the driver keeps only a ~2,000-char tail of

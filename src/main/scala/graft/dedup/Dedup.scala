@@ -102,33 +102,9 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5,
-      maxDocFreq: Option[Int] = None): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n).cache()
-    val out = maxDocFreq match {
-      case None =>
-        // exact path: shared-counts straight off the shingle join (one
-        // join + one aggregate — no candidate materialization needed
-        // when every shared shingle contributes to the jaccard anyway)
-        jaccardFromShingles(sh, idCol, threshold)
-      case Some(cap) =>
-        // skew-guarded path: df-filter candidate generation, then exact
-        // verification on FULL shingle sets (jaccard values stay true)
-        val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap)
-          .select("shingle")
-        val pruned = sh.join(rare, Seq("shingle"), "left_semi")
-        val candidates = pruned.as("a")
-          .join(pruned.as("b"),
-            col("a.shingle") === col("b.shingle") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-        verifyJaccard(candidates, sh, idCol, threshold)
-    }
-    // shingle cache drops with the consuming action
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      df.sparkSession, out, CacheReleaseBudget, sh)
-    out
-  }
+      maxDocFreq: Option[Int] = None): DataFrame =
+    sharedShinglePairs(df, idCol, textCol, n, maxDocFreq,
+      jaccardScore(threshold))
 
   /** Benchmark DECONTAMINATION: flag (train doc, eval doc) pairs
     * sharing at least `minShared` distinct word n-grams — the standard
@@ -147,23 +123,9 @@ object Dedup {
     * and at n >= 8 shingles are near-unique so the cap rarely bites. */
   def contaminationPairs(train: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, n: Int = 8, minShared: Int = 1,
-      maxDocFreq: Option[Int] = None): DataFrame = {
-    val tr = shingles(train, idCol, textCol, n)
-      .withColumnRenamed(idCol, "train_id")
-    val ev0 = shingles(eval, idCol, textCol, n)
-      .withColumnRenamed(idCol, "eval_id")
-    val ev = maxDocFreq match {
-      case None => ev0
-      case Some(cap) =>
-        val rare = ev0.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("shingle")
-        ev0.join(rare, Seq("shingle"), "left_semi")
-    }
-    tr.join(ev, "shingle")
-      .groupBy("train_id", "eval_id")
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
+      maxDocFreq: Option[Int] = None): DataFrame =
+    contamination(train, eval, idCol, textCol, n, minShared, maxDocFreq,
+      bloomFpp = None)
 
   /** [[contaminationPairs]] with a bloom-filter PRE-PRUNE on the train
     * side — the shape that actually survives 100 TB. The plain version
@@ -182,40 +144,64 @@ object Dedup {
     * distributed pre-filter for small×huge joins. */
   def contaminationPairsBloom(train: DataFrame, eval: DataFrame,
       idCol: String, textCol: String, n: Int = 8, minShared: Int = 1,
-      maxDocFreq: Option[Int] = None, fpp: Double = 0.01): DataFrame = {
+      maxDocFreq: Option[Int] = None, fpp: Double = 0.01): DataFrame =
+    contamination(train, eval, idCol, textCol, n, minShared, maxDocFreq,
+      bloomFpp = Some(fpp))
+
+  /** The one body of [[contaminationPairs]] and
+    * [[contaminationPairsBloom]]: `bloomFpp` set = bloom-prune the
+    * train shingles before the join, the only difference between them. */
+  private def contamination(train: DataFrame, eval: DataFrame,
+      idCol: String, textCol: String, n: Int, minShared: Int,
+      maxDocFreq: Option[Int], bloomFpp: Option[Double]): DataFrame = {
     val tr = shingles(train, idCol, textCol, n)
       .withColumnRenamed(idCol, "train_id")
     val ev0 = shingles(eval, idCol, textCol, n)
       .withColumnRenamed(idCol, "eval_id")
-    val ev = maxDocFreq match {
-      case None => ev0
-      case Some(cap) =>
-        val rare = ev0.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("shingle")
-        ev0.join(rare, Seq("shingle"), "left_semi")
+    val ev = maxDocFreq.fold(ev0)(cap => docFreqWithin(ev0, "shingle", 1, cap))
+    val trSide = bloomFpp.fold(tr) { fpp =>
+      // two passes over the SMALL side (count to size the filter, then
+      // build) — eval is benchmark-suite-sized by contract, the train
+      // side is scanned exactly once
+      val evKeys = ev.select(col("shingle")).distinct()
+      val bloom = graft.plans.BloomFilterOps.buildBloom(
+        evKeys, col("shingle"), expectedItems = evKeys.count(), fpp = fpp)
+      tr.filter(graft.plans.BloomFilterOps.mightContain(
+        train.sparkSession, bloom, col("shingle")))
     }
-    val spark = train.sparkSession
-    // two passes over the SMALL side (count to size the filter, then
-    // build) — eval is benchmark-suite-sized by contract, the train
-    // side is scanned exactly once
-    val evKeys = ev.select(col("shingle")).distinct()
-    val bloom = graft.plans.BloomFilterOps.buildBloom(
-      evKeys, col("shingle"), expectedItems = evKeys.count())
-    val prunedTr = tr.filter(
-      graft.plans.BloomFilterOps.mightContain(spark, bloom, col("shingle")))
-    prunedTr.join(ev, "shingle")
+    trSide.join(ev, "shingle")
       .groupBy("train_id", "eval_id")
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }
 
-  /** Exact jaccard over an (id, shingle) table: one self-join on the
-    * shingle value (cost Σ_shingle df² — common-shingle skew is the
-    * scale hazard, see [[ngramJaccardPairs]]), one pair aggregate, two
-    * size attaches, threshold filter. */
-  private def jaccardFromShingles(sh: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    sharedCounts(sh, idCol)
+  /** Rows of `t` whose `key` value occurs in `minDf` to `cap` rows —
+    * the doc-frequency cap every skew-guarded operator applies (`t`
+    * holds one row per distinct (doc, key), so a key's row count IS
+    * its document frequency). `minDf = 2` also drops keys only one doc
+    * holds: they generate no pair. */
+  private def docFreqWithin(t: DataFrame, key: String, minDf: Int,
+      cap: Long): DataFrame =
+    t.join(t.groupBy(key).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(minDf, cap)).select(key),
+      Seq(key), "left_semi")
+
+  /** (id_a < id_b) pairs of docs sharing a value of every `keys`
+    * column — the bucket self-join each candidate generator runs
+    * (shuffled on the key, never all-pairs). A pair sharing several
+    * keys appears once per key: the verify stage's final semi-join
+    * dedups, so no pair-level `.distinct()` is needed. */
+  private def keyPairs(t: DataFrame, idCol: String, keys: String*): DataFrame =
+    t.as("a")
+      .join(t.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+
+  /** Jaccard scorer over the shared-counts relation ([[sharedCounts]]):
+    * shared / (n_a + n_b - shared), threshold filter. */
+  private def jaccardScore(threshold: Double)(counts: DataFrame): DataFrame =
+    counts
       .withColumn("jaccard",
         col("shared").cast("double") /
           (col("n_a") + col("n_b") - col("shared")).cast("double"))
@@ -238,34 +224,15 @@ object Dedup {
     * counts on full shingle sets. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.9,
-      maxDocFreq: Option[Int] = None): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n).cache()
-    // shared-counts relation (id_a, id_b, shared, n_a, n_b): exact
-    // path scores straight off the full self-join; capped path
-    // generates candidates from the df-pruned join, then RE-COUNTS on
-    // full shingle sets restricted to candidate docs (the
-    // ngramJaccardPairs discipline: the cap bounds candidate fan-out,
-    // reported values stay exact)
-    val pairCaches = scala.collection.mutable.ArrayBuffer[DataFrame](sh)
-    val counts = maxDocFreq match {
-      case None => sharedCounts(sh, idCol)
-      case Some(cap) =>
-        val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("shingle")
-        val pruned = sh.join(rare, Seq("shingle"), "left_semi")
-        val candidates = pruned.as("a")
-          .join(pruned.as("b"),
-            col("a.shingle") === col("b.shingle") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-          .distinct().cache()
-        pairCaches += candidates
-        val candIds = candidates.select(col("id_a").as(idCol))
-          .union(candidates.select(col("id_b"))).distinct()
-        sharedCounts(sh.join(candIds, Seq(idCol), "left_semi"), idCol)
-          .join(candidates, Seq("id_a", "id_b"), "left_semi")
-    }
-    val out = counts
+      maxDocFreq: Option[Int] = None): DataFrame =
+    sharedShinglePairs(df, idCol, textCol, n, maxDocFreq,
+        containmentScore(threshold))
+      .select("contained_id", "container_id", "shared", "containment")
+
+  /** Containment scorer over the shared-counts relation: the smaller
+    * shingle set (ties -> lower id) is the contained side. */
+  private def containmentScore(threshold: Double)(counts: DataFrame): DataFrame =
+    counts
       .withColumn("contained_id",
         when(col("n_a") <= col("n_b"), col("id_a")).otherwise(col("id_b")))
       .withColumn("container_id",
@@ -274,18 +241,42 @@ object Dedup {
         col("shared").cast("double") /
           least(col("n_a"), col("n_b")).cast("double"))
       .filter(col("containment") >= threshold)
-      .select("contained_id", "container_id", "shared", "containment")
-    // shingle (+ capped-path candidate) caches drop with the consumer
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      df.sparkSession, out, CacheReleaseBudget, pairCaches.toSeq: _*)
-    out
+
+  /** The shared-shingle pair operators ([[ngramJaccardPairs]],
+    * [[containmentPairs]]) differ only in `score`. Exact path (no cap):
+    * shared counts straight off the full shingle self-join (one join +
+    * one aggregate — no candidate materialization needed when every
+    * shared shingle contributes to the score anyway). Skew-guarded
+    * path: df-capped candidate generation, then the exact verify
+    * stage on FULL shingle sets, so reported values stay true. */
+  private def sharedShinglePairs(df: DataFrame, idCol: String,
+      textCol: String, n: Int, maxDocFreq: Option[Int],
+      score: DataFrame => DataFrame): DataFrame = {
+    val sh = shingles(df, idCol, textCol, n).cache()
+    maxDocFreq match {
+      case None =>
+        val out = score(sharedCounts(sh, idCol))
+        // shingle cache drops with the consuming action
+        graft.util.DeferredUnpersist.afterConsumedBudget(
+          df.sparkSession, out, CacheReleaseBudget, sh)
+        out
+      case Some(cap) =>
+        // every doc holding a live (df >= 2) shingle pairs with another
+        // doc through it, so the pruned table supplies the candidate ids
+        val pruned = docFreqWithin(sh, "shingle", 2, cap)
+        verifyPairs(keyPairs(pruned, idCol, "shingle"),
+          pruned.select(idCol).distinct(), graft.util.Parallelism.fanOut(df),
+          idCol, textCol, n, score, sh)
+    }
   }
 
   /** (id_a, id_b, shared, n_a, n_b) over a shingle relation — the
-    * shared head of [[jaccardFromShingles]] and [[containmentPairs]].
-    * Sizes come from the relation passed in, so callers restricting
-    * to candidate docs keep per-doc set sizes exact (restriction is
-    * per-doc, never per-shingle). */
+    * shared head of every pair scorer: one self-join on the shingle
+    * value (cost Σ_shingle df² — common-shingle skew is the scale
+    * hazard, see [[ngramJaccardPairs]]), one pair aggregate, two size
+    * attaches. Sizes come from the relation passed in, so callers
+    * restricting to candidate docs keep per-doc set sizes exact
+    * (restriction is per-doc, never per-shingle). */
   private def sharedCounts(sh: DataFrame, idCol: String): DataFrame = {
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     sh.as("a")
@@ -298,75 +289,75 @@ object Dedup {
       .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("n_b")), "id_b")
   }
 
-  /** Exact-jaccard verification of a candidate pair set against the
-    * full shingle table — the shared tail of [[ngramJaccardPairs]],
-    * [[minHashLshPairs]] and [[winnowNearDupPairs]].
+  /** THE verify stage: exact scoring of a candidate pair stream — the
+    * one tail of every near-dup pair operator ([[minHashLshPairs]],
+    * [[winnowNearDupPairs]], the capped [[ngramJaccardPairs]] /
+    * [[containmentPairs]], [[verifyCandidatePairs]],
+    * [[lshIncrementalIngest]]).
+    *
+    * Contract:
+    *   - `candidates`: (id_a, id_b) pairs, id_a < id_b. Duplicate pairs
+    *     are fine — the final semi-join dedups — so generators never
+    *     pay a pair-level `.distinct()`. Its one consumer here is that
+    *     semi-join, so the stage never caches it: at corpus scale the
+    *     raw pair stream is the largest relation in the pipeline, the
+    *     one thing NOT to pin in storage memory;
+    *   - `candIds`: a SUPERSET of the ids in `candidates`. Generators
+    *     already hold a cheap one (bucket members, live fingerprints,
+    *     the ingest coverage guard's cached id set), which spares a
+    *     scan of the much larger pair stream;
+    *   - `corpus`: the (id, text) frame, already fanned out
+    *     ([[graft.util.Parallelism.fanOut]]) — the stage never probes
+    *     it, because probing a join-bearing frame finalizes its
+    *     adaptive plan (see [[shingles]]);
+    *   - `score`: the threshold predicate over
+    *     (id_a, id_b, shared, n_a, n_b) — jaccard or containment;
+    *   - `caches`: the generator's own cached tables.
+    * The stage owns, in this one place, the corpus restriction, its
+    * shingle cache and ONE deferred release of that cache plus
+    * `caches`, fired by the first action that consumes the result
+    * (every caller's output contains it) — the per-call leak bound the
+    * streaming cluster gates need.
     *
     * Order of operations is the whole game (profiled on the 5k-doc
     * corpus, where a 200-doc fingerprint cap yields 2.6M candidate
     * pairs hiding 256 true ones):
-    *   1. semi-join the shingle table down to docs appearing in ANY
-    *      candidate pair (verification scales with candidate DOCS,
-    *      not corpus);
-    *   2. run the exact jaccard on that restricted shingle table
-    *      ([[jaccardFromShingles]]' Σ df² self-join — NOT a per-pair
-    *      shingle attach, whose Σ_pairs |A|+|B| cost multiplies every
-    *      candidate by document length: 15x slower measured);
+    *   1. semi-join the CORPUS down to candidate docs BEFORE the
+    *      shingle kernel runs (verification scales with candidate
+    *      DOCS, not corpus; the earlier full-corpus
+    *      `shingles(df).cache()` materialized every doc's shingle set
+    *      only for a later semi-join to discard the non-candidates — at
+    *      a 10% candidate rate 10x the rows verification can touch,
+    *      ~2 s of the per-query cost at sf0.1). The restricted shingle
+    *      table is cached: [[sharedCounts]] instantiates it three times
+    *      (self-join both sides + the per-doc sizes), and uncached each
+    *      instantiation re-planned the candIds derivation with its own
+    *      broadcast-exchange builds (the ~150 ms sequential builds
+    *      dominated the cluster-table ingest's CC edge collect);
+    *   2. score on that restricted table ([[sharedCounts]]' Σ df²
+    *      self-join — NOT a per-pair shingle attach, whose
+    *      Σ_pairs |A|+|B| cost multiplies every candidate by document
+    *      length: 15x slower measured);
     *   3. LEFT SEMI the (few) threshold-passing pairs against the raw
     *      candidate stream — which therefore never needs a pair-level
     *      `.distinct()`, the single most expensive stage of the
     *      candidates-first shape.
-    * Output: exactly the candidate pairs with true jaccard >=
-    * threshold — same contract as verifying each candidate, ~4x
-    * cheaper end-to-end on the profiled corpus. */
-  private def verifyJaccard(candidates: DataFrame, sh: DataFrame,
-      idCol: String, threshold: Double,
-      candIdsHint: Option[DataFrame] = None,
-      shPreRestricted: Boolean = false): DataFrame = {
-    // the candidate stream feeds both candIds legs and the final
-    // semi-join — cache it (pairs of ids only; spills to disk if big)
-    // or the generation join replays three times. With a pre-restricted
-    // shingle table the stream has exactly ONE consumer (the final
-    // semi-join), so caching it would be pure overhead — and at corpus
-    // scale the raw pair stream is the largest relation in the
-    // pipeline, the one thing NOT to pin in storage memory.
-    val cand = if (shPreRestricted) candidates else candidates.cache()
-    // callers whose candidate generation is a bucket join can hand the
-    // bucket-member doc ids straight in (docs holding a bucket key
-    // with >= 2 members), skipping a scan of the much larger pair
-    // stream; must be a SUPERSET of the ids in `candidates`.
-    // `shPreRestricted`: the caller built `sh` as shingles(corpus ⋈
-    // candIds) over those SAME ids, so the semi-join below would be a
-    // row-identical no-op — and an EXPENSIVE one: sharedCounts
-    // instantiates its input THREE times (self-join both sides + the
-    // per-doc sizes), and each uncached instantiation re-planned the
-    // whole candIds derivation with its own broadcast-exchange builds
-    // (measured: the ~150 ms sequential broadcast builds dominate the
-    // cluster-table ingest's CC edge collect — 64 of them per drop).
-    // With the flag the three instantiations are plain reads of the
-    // caller's CACHED shingle table.
-    val shCand =
-      if (shPreRestricted) sh
-      else {
-        val candIds = candIdsHint.getOrElse {
-          cand.select(col("id_a").as(idCol))
-            .union(cand.select(col("id_b")))
-            .distinct()
-        }
-        sh.join(candIds, Seq(idCol), "left_semi")
-      }
-    val out = jaccardFromShingles(shCand, idCol, threshold)
-      .join(cand, Seq("id_a", "id_b"), "left_semi")
-    // the cand cache lives until the returned plan is consumed (one
-    // action in every caller), then drops — per-call leak bound for
-    // the long-lived sessions (streaming gates ingest per micro-batch)
-    if (!shPreRestricted)
-      graft.util.DeferredUnpersist.afterConsumedBudget(
-        candidates.sparkSession, out, CacheReleaseBudget, cand)
+    * Output: exactly the candidate pairs passing `score`, with its
+    * columns — same contract as scoring each candidate, ~4x cheaper
+    * end-to-end on the profiled corpus. */
+  private def verifyPairs(candidates: DataFrame, candIds: DataFrame,
+      corpus: DataFrame, idCol: String, textCol: String, n: Int,
+      score: DataFrame => DataFrame, caches: DataFrame*): DataFrame = {
+    val sh = shingles(corpus.join(candIds, Seq(idCol), "left_semi"),
+      idCol, textCol, n, prefanned = true).cache()
+    val out = score(sharedCounts(sh, idCol))
+      .join(candidates, Seq("id_a", "id_b"), "left_semi")
+    graft.util.DeferredUnpersist.afterConsumedBudget(
+      corpus.sparkSession, out, CacheReleaseBudget, (sh +: caches): _*)
     out
   }
 
-  /** Action budget for the deferred cache releases below: the
+  /** Action budget for this object's deferred cache releases: the
     * cluster-table ingest interleaves ~10-15 eager store-probe/bloom/
     * commit actions between building a pair plan and consuming it (the
     * CC edge collect), so the default budget of 8 would fire the
@@ -382,34 +373,19 @@ object Dedup {
     * dedups), so band-collision multiplicity needs no upstream
     * `distinct`. */
   def verifyCandidatePairs(candidates: DataFrame, df: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, threshold: Double = 0.5,
-      candIdsHint: Option[DataFrame] = None): DataFrame = {
-    // same logical plan as verifyJaccard's internal cache -> one entry
+      textCol: String, n: Int = 3, threshold: Double = 0.5): DataFrame = {
+    // cached: the pair stream feeds both legs of the id derivation and
+    // the stage's final semi-join — uncached the external generation
+    // would replay three times (released with the stage's own cache)
     val cand = candidates.cache()
-    // candIdsHint: callers that already derived (and cached) the
-    // candidate doc-id set — e.g. the band-store ingest's coverage
-    // guard — hand it in, so this path does not re-instantiate the
-    // union+distinct subtree. Must be exactly the ids of `candidates`.
-    val candIds = candIdsHint.getOrElse(
-      cand.select(col("id_a").as(idCol))
-        .union(cand.select(col("id_b"))).distinct())
-    // shingle only the docs verification can touch (see
-    // minHashLshPairs) — candidate sets are a sliver of the corpus.
-    // The fan-out guard runs on the bare corpus frame (a scan probe is
-    // job-free) BEFORE the semi-join; probing the joined frame instead
-    // would execute the whole candidate pipeline once per probe.
-    val fdf = graft.util.Parallelism.fanOut(df)
-    val sh = shingles(fdf.join(candIds, Seq(idCol), "left_semi"),
-      idCol, textCol, n, prefanned = true).cache()
-    // sh is already candIds-restricted: skip verification's own
-    // semi-join (see verifyJaccard's shPreRestricted)
-    val out = verifyJaccard(cand, sh, idCol, threshold,
-        candIdsHint = Some(candIds), shPreRestricted = true)
+    val candIds = cand.select(col("id_a").as(idCol))
+      .union(cand.select(col("id_b"))).distinct()
+    // the fan-out guard runs on the bare corpus frame (a scan probe is
+    // job-free); probing the stage's joined frame instead would
+    // execute the whole candidate pipeline once per probe
+    verifyPairs(cand, candIds, graft.util.Parallelism.fanOut(df), idCol,
+        textCol, n, jaccardScore(threshold), cand)
       .select("id_a", "id_b", "jaccard")
-    // candidate + shingle caches drop with the consuming action
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      df.sparkSession, out, CacheReleaseBudget, cand, sh)
-    out
   }
 
   /** MinHash signature as a Column (nested HOFs): reference semantics
@@ -670,11 +646,6 @@ object Dedup {
         buckets.join(sized.filter(col("k").between(2, cap))
           .select("band", "bh"), Seq("band", "bh"), "left_semi")
     }
-    val candidates = joinSrc.as("a")
-      .join(joinSrc.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
     // candidate doc ids straight from the bucket table (docs sharing a
     // live bucket with >= 2 members) — cheaper than scanning the pair
     // stream; on the capped path the join source is already
@@ -684,33 +655,14 @@ object Dedup {
         .select("band", "bh"), Seq("band", "bh"), "left_semi")
       case Some(_) => joinSrc
     }).select(idCol).distinct()
-    // shingle table for exact verification, restricted to CANDIDATE
-    // docs BEFORE the shingle kernel ever runs: the previous
-    // full-corpus shingles(df).cache() materialized every doc's
-    // shingle set only for verifyJaccard's semi-join to discard all
-    // non-candidates — at a 10% candidate rate that cache was 10x the
-    // rows verification can touch (measured ~2s of the per-query cost
-    // at sf0.1). candIds is a superset of the ids in `candidates`, so
-    // verification still sees every needed shingle.
-    // prefanned: fdf's lineage runs through fdf0's fanOut, so the
-    // joined frame is never single-split — and probing it would
-    // re-execute the whole bucket pipeline (see shingles)
-    val sh = shingles(fdf.join(candIds, Seq(idCol), "left_semi"),
-      idCol, textCol, n, prefanned = true).cache()
-    // no pair-level distinct — verifyJaccard's final semi-join dedups.
-    // sh is ALREADY restricted to candIds (built that way above), so
-    // verification skips its own redundant semi-join (shPreRestricted)
-    val repPairs = verifyJaccard(candidates, sh, idCol, threshold,
-        Some(candIds), shPreRestricted = true)
+    // fdf's lineage runs through fdf0's fanOut (the stage's corpus
+    // contract); the bucket table (and, flooded, the member table)
+    // drop with the stage's release — `out` below contains repPairs
+    val repPairs = verifyPairs(keyPairs(joinSrc, idCol, "band", "bh"),
+        candIds, fdf, idCol, textCol, n, jaccardScore(threshold),
+        Seq(buckets) ++ Option(dupMem): _*)
       .select("id_a", "id_b", "jaccard")
-    if (!doCollapse) {
-      // bucket + shingle caches drop once the returned plan is
-      // consumed (every consumer's first action contains it) — the
-      // per-call leak bound the streaming cluster gates need
-      graft.util.DeferredUnpersist.afterConsumedBudget(
-        df.sparkSession, repPairs, CacheReleaseBudget, buckets, sh)
-      return repPairs
-    }
+    if (!doCollapse) return repPairs
     // ---- re-expansion (duplicate groups exist) ------------------
     // Cross-group: each rep pair fans out to its member products,
     // carrying the EXACT jaccard (identical shingle sets per group).
@@ -740,12 +692,7 @@ object Dedup {
       .select(col("a.__mid").as("id_a"), col("b.__mid").as("id_b"),
         lit(1.0).as("jaccard"))
       .filter(lit(1.0) >= threshold)
-    val out = expanded.union(cliques)
-    // same per-call release as the uncollapsed branch, plus the
-    // flood path's member table
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      df.sparkSession, out, CacheReleaseBudget, buckets, sh, dupMem)
-    out
+    expanded.union(cliques)
   }
 
   /** Winnowing near-dup pairs: candidate generation by SHARED WINNOW
@@ -788,33 +735,13 @@ object Dedup {
     val cap = math.max(5L, math.ceil(df.count() * maxDocFreqRatio).toLong)
     // df >= 2: a fingerprint seen in one doc generates no pair — the
     // bound cuts the pair-join input to the (small) shared tail
-    val rare = fpsAll.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, cap))
-      .select("fp")
-    val fps = fpsAll.join(rare, Seq("fp"), "left_semi").cache()
-    val candidates = fps.as("a")
-      .join(fps.as("b"),
-        col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+    val fps = docFreqWithin(fpsAll, "fp", 2, cap).cache()
     // every doc in a candidate pair holds a live fingerprint, so the
-    // fp table (not the pair stream) supplies the candidate doc ids
-    val candIds = fps.select(idCol).distinct()
-    // shingles restricted to candidate docs BEFORE the kernel runs —
-    // see minHashLshPairs: the full-corpus shingle cache existed only
-    // to be semi-joined down to this same set
-    // prefanned via the shared fdf (see shingles: probing the joined
-    // frame would run the fingerprint pipeline once per probe)
-    val sh = shingles(fdf.join(candIds, Seq(idCol), "left_semi"),
-      idCol, textCol, n, prefanned = true).cache()
-    // sh is already candIds-restricted: skip verification's own
-    // semi-join (see verifyJaccard's shPreRestricted)
-    val out = verifyJaccard(candidates, sh, idCol, threshold,
-      candIdsHint = Some(candIds), shPreRestricted = true)
+    // fp table (not the pair stream) supplies the candidate doc ids;
+    // fdf is the stage's fanned corpus, fingerprint caches drop with it
+    verifyPairs(keyPairs(fps, idCol, "fp"), fps.select(idCol).distinct(),
+        fdf, idCol, textCol, n, jaccardScore(threshold), fpsAll, fps)
       .select("id_a", "id_b", "jaccard")
-    // fingerprint + shingle caches drop with the consuming action
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      df.sparkSession, out, CacheReleaseBudget, fpsAll, fps, sh)
-    out
   }
 
   /** 64-bit SimHash over whitespace tokens: bit b is set when the
@@ -1712,7 +1639,7 @@ object Dedup {
     *      indexed, so an at-least-once re-delivery cannot duplicate
     *      index rows (mirrors [[incrementalIngest]]'s idempotence);
     *   6. exact-jaccard verification over the candidate docs' texts
-    *      only ([[verifyCandidatePairs]] — `texts` must supply BOTH
+    *      only (the [[verifyPairs]] stage — `texts` must supply BOTH
     *      sides). Candidate store ids with no text row fail loudly:
     *      silently dropping them (the inner joins would) turns an
     *      incomplete `texts` view into invisible recall loss.
@@ -1889,17 +1816,15 @@ object Dedup {
       least(col("drop_id"), col("store_id")).as("id_a"),
       greatest(col("drop_id"), col("store_id")).as("id_b"))
     // the coverage guard's cached id set IS the candidate id set —
-    // share it with verification instead of re-deriving it
-    val verified = verifyCandidatePairs(sorted, tx, idCol, textCol,
-      n, threshold, candIdsHint = Some(candIds))
-    val out = cand.join(verified,
+    // the stage shares it (and releases it) instead of re-deriving it,
+    // so the one-consumer pair stream needs no cache of its own
+    val verified = verifyPairs(sorted, candIds,
+      graft.util.Parallelism.fanOut(tx), idCol, textCol, n,
+      jaccardScore(threshold), candIds)
+    cand.join(verified,
         least(col("drop_id"), col("store_id")) === col("id_a") &&
           greatest(col("drop_id"), col("store_id")) === col("id_b"))
       .select(col("drop_id"), col("store_id"), col("jaccard"))
-    // candIds drops once the classified pairs are consumed
-    graft.util.DeferredUnpersist.afterConsumedBudget(
-      ss, out, CacheReleaseBudget, candIds)
-    out
     }
   }
 

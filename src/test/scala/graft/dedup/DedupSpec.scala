@@ -1376,4 +1376,49 @@ class DedupSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("pair operators: every call's caches drop with its consuming " +
+      "action (verify-stage release, both sides of each gate)") {
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val b = "one two three four five six seven eight nine ten"
+    // docs 1 and 2 are identical (collapse pressure 1 extra pair), 3
+    // contains 1, 5 contains 4, 6 pairs with nothing
+    val corpus = Seq((1L, a), (2L, a), (3L, a + " tail"), (4L, b),
+      (5L, b + " more"), (6L, "wholly novel words unseen anywhere here"))
+      .toDF("doc_id", "text")
+    val external = Seq((1L, 3L), (1L, 3L), (4L, 5L), (1L, 6L))
+      .toDF("id_a", "id_b")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashLshPairs below the collapse gate" -> (() =>
+        Dedup.minHashLshPairs(corpus, "doc_id", "text")),
+      "minHashLshPairs above the collapse gate" -> (() =>
+        Dedup.minHashLshPairs(corpus, "doc_id", "text",
+          collapseAtExtraPairs = 0)),
+      "winnowNearDupPairs" -> (() =>
+        Dedup.winnowNearDupPairs(corpus, "doc_id", "text")),
+      "ngramJaccardPairs exact" -> (() =>
+        Dedup.ngramJaccardPairs(corpus, "doc_id", "text")),
+      "ngramJaccardPairs capped" -> (() =>
+        Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
+          maxDocFreq = Some(3))),
+      "containmentPairs exact" -> (() =>
+        Dedup.containmentPairs(corpus, "doc_id", "text")),
+      "containmentPairs capped" -> (() =>
+        Dedup.containmentPairs(corpus, "doc_id", "text",
+          maxDocFreq = Some(3))),
+      "verifyCandidatePairs" -> (() =>
+        Dedup.verifyCandidatePairs(external, corpus, "doc_id", "text")))
+    spark.catalog.clearCache()
+    org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
+    val base = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    ops.foreach { case (name, op) =>
+      val rows = op().collect()
+      assert(rows.nonEmpty, s"$name: the fixture should yield pairs")
+      org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet
+        .count(!base.contains(_))
+      assert(leaked == 0,
+        s"$name leaked $leaked cached RDD(s) after its result was consumed")
+    }
+  }
 }
