@@ -70,7 +70,11 @@ object BloomFilterOps {
     * the same relation — ingest paths that build a probe filter and an
     * idempotence filter from one cached drop otherwise pay one
     * scheduled job per filter (guide §1.2: fewer actions). Same
-    * empty-input contract per filter. */
+    * empty-input contract per filter. Every filter is sized from the
+    * one `expectedItems`, so it must bound the distinct count of EVERY
+    * key; a key with more distinct values than that gets a fuller
+    * filter and a false-positive rate above `fpp` (never false
+    * negatives). The row count of `df` bounds them all. */
   def buildBlooms(df: DataFrame, keys: Seq[Column], expectedItems: Long,
       fpp: Double = 0.01): Seq[Array[Byte]] = {
     val spark = df.sparkSession

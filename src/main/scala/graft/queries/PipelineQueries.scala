@@ -119,16 +119,20 @@ object PipelineQueries {
     // links without touching the shared inodes. Cuts the per-gate COW
     // staging from a full store copy to directory metadata. Falls
     // back to the plain recursive copy when the filesystem refuses
-    // links (cross-device, non-posix).
+    // links (cross-device, non-posix) or read-only bits.
     // ENFORCE the invariant the sharing leans on: the pristine source
     // files go read-only before the first clone (idempotent, metadata
     // only). Rename/unlink on clone or source still work (directory
     // perms untouched), but any future in-place write — the one
     // mutation class that would corrupt the shared inodes and every
     // later gate cloned from them — fails loudly instead of silently.
+    // LIMIT: a process with CAP_DAC_OVERRIDE (root) writes through
+    // read-only bits, so there the freeze guards nothing. The real
+    // protection is that every store mutation is unlink + create-new
+    // (ManifestIo.writeAtomic, StoreLock.stampEpoch), never a rewrite.
     def freezeTree(f: java.io.File): Unit =
       if (f.isDirectory) f.listFiles().foreach(freezeTree)
-      else { f.setWritable(false, false); () }
+      else require(f.setWritable(false, false), s"cow: cannot freeze $f")
     def linkTree(from: java.io.File, to: java.io.File): Unit = {
       if (from.isDirectory) {
         require(to.isDirectory || to.mkdirs(), s"cow: mkdir $to failed")

@@ -11,17 +11,18 @@ import graft.ops.{HistogramOps => H}
   * The reference evaluates ONE (month, group, specialty, pathway,
   * IS-slice) cell per call, re-scanning the full fact table each time;
   * the cube driver (`3b.:44-57`) issues ~50k such calls — so slow its
-  * authors cached the output. Here the ENTIRE cube is one job:
+  * authors cached the output. Here the ENTIRE cube is one query:
   *
   *   1. finest-grain aggregation (month × group × specialty × pathway ×
   *      IS) — the only shuffle that touches fact-table volume; the band
   *      histogram rides through it as `maxBands` partial-aggregated
   *      sums (map-side combine, no row explosion);
   *   2. the ENGLAND rollup (`2.:146-150`) and the IS "All" slice
-  *      (`2.:344-353`) are re-aggregations OVER THE SMALL RESULT of
-  *      step 1 (thousands of rows/month, not billions) — deliberately
-  *      NOT a Spark `cube()`, whose Expand operator would multiply
-  *      fact-table shuffle volume 4x at 100 TB;
+  *      (`2.:344-353`) are ONE grouping-sets aggregation over the SMALL
+  *      result of step 1 (thousands of rows/month, not billions): its
+  *      Expand quadruples step-1 rows, never fact rows — a `cube()` on
+  *      the fact itself would multiply fact-table shuffle volume 4x at
+  *      100 TB;
   *   3. quantiles/rates/suppression are per-row expression work on the
   *      aggregated cells, fully codegen'd (see [[graft.ops.HistogramOps]]).
   *
@@ -64,12 +65,8 @@ object DashboardStats {
     // globally (2.:318); pushed into the parquet scan by Catalyst.
     val f = fact.filter(col("commissioner_code") =!= "NONC")
 
-    // Step 1 — single shuffle at the finest grain. CACHED: the four
-    // grouping-set re-aggregations below would otherwise each replay
-    // the full fact scan+aggregate (Catalyst's exchange reuse does not
-    // fire across the union branches), turning 1 fact pass into 4 —
-    // the exact failure mode this design exists to avoid at 100 TB.
-    // The cached side is the small aggregate, not the fact table.
+    // Step 1 — single shuffle at the finest grain. Not cached: step 2
+    // is its only consumer, inside the same plan.
     // band vectors aggregate through the native typed-imperative
     // band_sum (ONE primitive long[] buffer per group vs maxBands
     // separate sum aggregates — see graft.plans.BandSumAgg; equality
@@ -84,7 +81,6 @@ object DashboardStats {
         bandSum(col("weeks")).as("weeks"),
         coalesce(sum("unknown_start"), lit(0L)).as("unknown_start"),
         coalesce(sum("total_all"), lit(0L)).as("total_all"))
-      .cache()
 
     statsFromBase(base, cfg)
   }
@@ -99,23 +95,21 @@ object DashboardStats {
     def bandSum(c: Column): Column =
       graft.plans.BandSumAgg.bandSum(base.sparkSession, c, cfg.maxBands)
 
-    // Step 2 — hierarchical re-aggregation of the SMALL base: the four
-    // grouping sets {(grp,is), (ENGLAND,is), (grp,All), (ENGLAND,All)}.
-    def reagg(grp: Column, isSlice: Column): DataFrame =
-      base.groupBy(col("monthyr"), grp.as("grp2"), col("specialty"),
-          col("pathway"), isSlice.as("is_slice"))
-        .agg(
-          bandSum(col("weeks")).as("weeks"),
-          coalesce(sum("unknown_start"), lit(0L)).as("unknown_start"),
-          coalesce(sum("total_all"), lit(0L)).as("total_all"))
-        .withColumnRenamed("grp2", "grp")
-
-    val cells = Seq(
-      reagg(col("grp"), col("is_provider").cast("string")),
-      reagg(lit(cfg.groupTotalLabel), col("is_provider").cast("string")),
-      reagg(col("grp"), lit("All")),
-      reagg(lit(cfg.groupTotalLabel), lit("All")))
-      .reduce(_.unionByName(_))
+    // Step 2 — the four grouping sets {(grp,is), (ENGLAND,is),
+    // (grp,All), (ENGLAND,All)} as one Expand + aggregate over the small
+    // base. spark_grouping_id is part of the key, so a real group named
+    // like the total label (or a null group) stays a row of its own.
+    val (m, sp, pw, grp, is) = (col("monthyr"), col("specialty"),
+      col("pathway"), col("grp"), col("is_provider"))
+    val cells = base
+      .groupingSets(Seq(Seq(m, sp, pw, grp, is), Seq(m, sp, pw, is),
+        Seq(m, sp, pw, grp), Seq(m, sp, pw)), m, sp, pw, grp, is)
+      .agg(
+        bandSum(col("weeks")).as("weeks"),
+        coalesce(sum("unknown_start"), lit(0L)).as("unknown_start"),
+        coalesce(sum("total_all"), lit(0L)).as("total_all"),
+        grouping(grp).as("grp_total"),
+        grouping(is).as("is_all"))
 
     // Step 3 — per-cell statistics (pure expressions, no further shuffle).
     val withTotals = cells
@@ -147,16 +141,19 @@ object DashboardStats {
         .as(s"weeks_${math.round(q * 100)}")
     }
 
+    val isStr = is.cast("string")
     withTotals.select(
       Seq(
-        col("monthyr"),
-        col("grp"),
+        m,
+        when(col("grp_total") === 1, cfg.groupTotalLabel).otherwise(grp)
+          .as("grp"),
         // IS slice labels per 2.:344-353 (0 → Non-IS, 1 → IS, All).
-        when(col("is_slice") === "0", "Non-IS")
-          .when(col("is_slice") === "1", "IS")
-          .otherwise(col("is_slice")).as("is_slice"),
-        col("specialty"),
-        col("pathway"),
+        when(col("is_all") === 1, "All")
+          .when(isStr === "0", "Non-IS")
+          .when(isStr === "1", "IS")
+          .otherwise(isStr).as("is_slice"),
+        sp,
+        pw,
         col("total_patients"),
         ifEligible(H.countAtOrBelow(col("cum"), 18)).as("number_18_or_less"),
         // Rates are x10-bigint fixed point (261 = 26.1%): rounded doubles

@@ -1,8 +1,13 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{ExpandExec, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.ops.{HistogramOps => H}
 
 case class FactRow(
     monthyr: String, provider: String, specialty: String, pathway: String,
@@ -27,7 +32,7 @@ class DashboardStatsSpec extends AnyFunSuite {
     a.toSeq
   }
 
-  private lazy val fact: DataFrame = Seq(
+  private val factRows = Seq(
     // Group A: two rows summed; unknown_start must be IGNORED (incomplete)
     FactRow("Apr21", "P1", "Total", "incomplete", 0,
       bands(1 -> 10L, 2 -> 10L), 5L, 0L, "C1"),
@@ -52,7 +57,8 @@ class DashboardStatsSpec extends AnyFunSuite {
     // NONC row: must be excluded everywhere
     FactRow("Apr21", "P1", "Total", "incomplete", 0,
       bands(1 -> 1000L), 0L, 0L, "NONC")
-  ).toDF()
+  )
+  private lazy val fact: DataFrame = factRows.toDF()
 
   private lazy val result =
     DashboardStats.compute(fact, "provider",
@@ -151,5 +157,112 @@ class DashboardStatsSpec extends AnyFunSuite {
     assert(df.collect().map(_.getString(0)).toSeq == Seq(
       "incomplete", "incompleteDTA", "completeadmitted",
       "completenonadmitted", "newRTT", "Something Else"))
+  }
+
+  /** The four-branch formulation the grouping-sets rollup replaced,
+    * frozen as the reference: the step-1 base re-aggregated once per
+    * grouping set {(grp,is), (ENGLAND,is), (grp,All), (ENGLAND,All)},
+    * unioned, then the same per-cell statistics. */
+  private def unionReference(facts: DataFrame,
+      cfg: DashboardStats.Config): DataFrame = {
+    def bandSum(c: Column): Column =
+      graft.plans.BandSumAgg.bandSum(spark, c, cfg.maxBands)
+    def totals(df: DataFrame, keys: Column*): DataFrame =
+      df.groupBy(keys: _*).agg(
+        bandSum($"weeks").as("weeks"),
+        coalesce(sum("unknown_start"), lit(0L)).as("unknown_start"),
+        coalesce(sum("total_all"), lit(0L)).as("total_all"))
+    val base = totals(facts, $"monthyr", $"provider".as("grp"), $"specialty",
+      $"pathway", $"is_provider")
+    def reagg(grp: Column, isSlice: Column): DataFrame =
+      totals(base, $"monthyr", grp.as("grp2"), $"specialty", $"pathway",
+        isSlice.as("is_slice")).withColumnRenamed("grp2", "grp")
+    val cells = Seq(
+      reagg($"grp", $"is_provider".cast("string")),
+      reagg(lit(cfg.groupTotalLabel), $"is_provider".cast("string")),
+      reagg($"grp", lit("All")),
+      reagg(lit(cfg.groupTotalLabel), lit("All")))
+      .reduce(_.unionByName(_))
+      .withColumn("cum", H.cumulative($"weeks"))
+      .withColumn("total_nonmiss", element_at($"cum", cfg.maxBands))
+      .withColumn("total_patients",
+        when($"pathway".isin("completeadmitted", "completenonadmitted"),
+          $"total_nonmiss" + $"unknown_start")
+          .when($"pathway" === "newRTT", $"total_all")
+          .otherwise($"total_nonmiss"))
+      .withColumn("eligible",
+        $"total_nonmiss" >= cfg.minTotal && $"pathway" =!= "newRTT")
+    def ifEligible(stat: Column): Column =
+      when($"eligible", stat).otherwise(lit(null))
+    val n18 = H.countAtOrBelow($"cum", 18)
+    val n52 = H.countAbove($"cum", $"total_nonmiss", 52)
+    cells.select(Seq(
+      $"monthyr", $"grp",
+      when($"is_slice" === "0", "Non-IS").when($"is_slice" === "1", "IS")
+        .otherwise($"is_slice").as("is_slice"),
+      $"specialty", $"pathway", $"total_patients",
+      ifEligible(n18).as("number_18_or_less"),
+      ifEligible(H.rateX10(n18, $"total_nonmiss")).as("rate_18wks_or_less_x10"),
+      ifEligible(n52).as("number_52_or_more"),
+      ifEligible(H.rateX10(n52, $"total_nonmiss")).as("rate_52wks_or_more_x10")) ++
+      cfg.quantiles.map(q => ifEligible(
+        graft.plans.HistogramQuantileExpr.histogramQuantile(
+          spark, $"weeks", $"total_nonmiss", lit(q)))
+        .as(s"weeks_${math.round(q * 100)}")): _*)
+  }
+
+  /** The fixture plus the rows that tell grouping-set rollup rows from
+    * real groups: a provider literally named like the total label, a
+    * null provider and a null IS flag. */
+  private lazy val edgeFact: DataFrame = (factRows ++ Seq(
+    FactRow("Apr21", "ENGLAND", "Total", "incomplete", 1,
+      bands(1 -> 15L, 30 -> 10L), 0L, 0L, "C1"),
+    FactRow("Apr21", null, "Total", "incomplete", 0,
+      bands(2 -> 25L), 3L, 0L, "C1"),
+    FactRow("May21", "P6", "Total", "completeadmitted", 0,
+      bands(1 -> 12L, 60 -> 9L), 4L, 0L, "C1"))).toDF()
+    .withColumn("is_provider",
+      when($"provider" === "P6", lit(null).cast("int"))
+        .otherwise($"is_provider"))
+
+  test("grouping-sets rollup equals the four-branch union, in one Expand") {
+    val cfg = DashboardStats.Config(maxBands = B)
+    val got = DashboardStats.compute(edgeFact, "provider", cfg)
+    val want = unionReference(
+      edgeFact.filter($"commissioner_code" =!= "NONC"), cfg)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    def multiset(df: DataFrame): Map[Row, Int] =
+      df.collect().groupBy(identity).view.mapValues(_.length).toMap
+    val (g, w) = (multiset(got), multiset(want))
+    assert(g == w, s"\nonly in compute: ${g.toSet -- w.toSet}" +
+      s"\nonly in reference: ${w.toSet -- g.toSet}")
+    // the edge rows are really in play: a real ENGLAND group beside the
+    // ENGLAND rollup, a null group, a null IS slice
+    val englandIs = got.filter($"grp" === "ENGLAND" && $"is_slice" === "IS" &&
+      $"pathway" === "incomplete").collect()
+    assert(englandIs.length == 2)
+    assert(got.filter($"grp".isNull).count() > 0L)
+    assert(got.filter($"is_slice".isNull).count() > 0L)
+    // one Expand + aggregate over the base: no union, no cached base
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = got.queryExecution.executedPlan
+    assert(helper.collect(plan) { case e: ExpandExec => e }.length == 1, plan)
+    assert(helper.collect(plan) { case u: UnionExec => u }.isEmpty, plan)
+    assert(helper.collect(plan) { case c: InMemoryTableScanExec => c }.isEmpty,
+      plan)
+  }
+
+  test("compute leaves nothing cached") {
+    // other suites' localCheckpoints may linger in getPersistentRDDs and
+    // only ever disappear: count ids that appear during the call
+    spark.catalog.clearCache()
+    val cacheManager = spark.sharedState.cacheManager
+    assert(cacheManager.isEmpty)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    DashboardStats.compute(fact, "provider",
+      DashboardStats.Config(maxBands = B)).collect()
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"compute persisted RDD(s) $added")
+    assert(cacheManager.isEmpty, "compute left a plan in the CacheManager")
   }
 }
