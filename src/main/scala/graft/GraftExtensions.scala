@@ -91,6 +91,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("portable_hash64",
       "portable_hash64(s) - engine-portable 64-bit string hash",
       es => PortableHash64Expr(es(0)))
+    inject("vec_dot",
+      "vec_dot(a, b) - double dot product of two array<float|double> " +
+        "vectors, folded in array order",
+      es => VecDotExpr(es(0), es(1)))
+    inject("unit_vec",
+      "unit_vec(v) - v / sqrt(vec_dot(v, v)) as array<double>; NULL " +
+        "for a zero, empty or null-bearing vector",
+      es => UnitVecExpr(es(0)))
     inject("stopword_hits",
       "stopword_hits(text) - stopword occurrence count in one pass",
       es => StopwordHitsExpr(es(0)))

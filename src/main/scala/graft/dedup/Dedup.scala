@@ -441,11 +441,14 @@ object Dedup {
       .select(col(idCol),
         graft.plans.MinHashSigExpr.minHashSignature(
           ss, col(textCol), n, numHashes).as("sig"))
-      .filter(size(col("sig")) > 0)
+      // the emptiness test lives INSIDE the generator (explode(null)
+      // emits no rows): a Filter on `sig` would be pushed below the
+      // projection and run the signature kernel twice per document
       .select(col(idCol),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("sig"), b * rows + lit(1), lit(rows))).as("bh"))))
+        explode(when(size(col("sig")) > 0,
+          transform(sequence(lit(0), lit(bands - 1)),
+            b => struct(b.as("band"),
+              xxhash64(slice(col("sig"), b * rows + lit(1), lit(rows))).as("bh")))))
           .as("bucket"))
       .select(col(idCol), col("bucket.band"), col("bucket.bh"))
   }

@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`).
   *
-  * Baseline: brute-force cosine top-k — a broadcast cross join with
-  * codegen'd HOF arithmetic (zip_with product + sequential aggregate
-  * sum in double). Scale path: sign-random-projection LSH bucketing —
+  * Baseline: brute-force cosine top-k — a broadcast cross join whose
+  * vector arithmetic runs in native kernels ([[graft.plans.VecDotExpr]]
+  * and [[graft.plans.UnitVecExpr]]: a sequential double fold in array
+  * order; Spark's higher-order functions would evaluate it
+  * interpreted, one lambda call per element). Scale path:
+  * sign-random-projection LSH bucketing —
   * candidates share a bucket key, so the join is an equi-join shuffle
   * instead of a cross product (the 100 TB shape; recall is tunable via
   * number of planes / tables).
@@ -18,10 +21,10 @@ object Similarity {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Elementwise-cast to double then dot product; sequential
-    * left-to-right summation (deterministic per pair). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+    * left-to-right summation (deterministic per pair). One compiled
+    * kernel ([[graft.plans.VecDotExpr]]); NULL for a NULL vector, a
+    * NULL element or vectors of different lengths. */
+  def dot(a: Column, b: Column): Column = graft.plans.VectorExprs.vecDot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -73,12 +76,10 @@ object Similarity {
   /** Unit-normalized double vector as a separate projection step: the
     * norm is computed ONCE per row (hoisted out of the per-pair work —
     * inside a join predicate it would re-evaluate per pair). Zero
-    * vectors normalize to null (cosine undefined). */
+    * vectors normalize to null (cosine undefined). One compiled kernel
+    * ([[graft.plans.UnitVecExpr]]). */
   private def withUnitVec(df: DataFrame, vecCol: String, out: String): DataFrame =
-    df.withColumn("__n", norm(col(vecCol)))
-      .withColumn(out, when(col("__n") === 0.0 || col("__n").isNull, lit(null))
-        .otherwise(transform(col(vecCol), x => x.cast("double") / col("__n"))))
-      .drop("__n")
+    df.withColumn(out, graft.plans.VectorExprs.unitVec(col(vecCol)))
 
   final case class Scored(query_id: Long, neighbor_id: Long, sim: Double)
 
@@ -197,7 +198,7 @@ object Similarity {
     import ss.implicits._
     val psB = ss.sparkContext.broadcast(planeSets.toArray)
     df.select(col(idCol).cast("long"),
-        transform(col(vecCol), _.cast("double")).as("v"))
+        col(vecCol).cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val sets = psB.value
@@ -1043,8 +1044,8 @@ object Similarity {
     * `code_i = round(x_i / scale)` in [-127, 127]. Codes are EXACT
     * integers, so every downstream aggregate over them is engine-exact
     * by construction; the scale is pinned as a x1e9 bigint. All-zero
-    * vectors quantize to all-zero codes with scale 0. Pure codegen'd
-    * HOF arithmetic — runs inside the scan projection. */
+    * vectors quantize to all-zero codes with scale 0. HOF arithmetic
+    * (interpreted per element) — runs inside the scan projection. */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol),
         transform(col(vecCol), x => x.cast("double")).as("v"))
@@ -1222,7 +1223,7 @@ object Similarity {
     * matrix from the seed alone, so there is no randomness to
     * coordinate. Small matrices (up to `broadcastCoeffThreshold`
     * coefficients, default 64k — 768->64 sits under it) inline as a
-    * literal coefficient array in a codegen'd HOF; larger ones
+    * literal coefficient array in a HOF; larger ones
     * switch to the native [[graft.plans.RandomProjectExpr]], whose
     * matrix rides the broadcast task binary instead of the plan
     * (plan text stays O(1) in dIn*dOut). Both paths run the same

@@ -80,6 +80,25 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(q.getInt(5) == 1)                       // 4 nearer 5 than 0
   }
 
+  test("vector kernels resolve from plain SQL and agree with register()") {
+    val sql =
+      """SELECT
+        |  vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
+        |  vec_dot(array(CAST(1.5 AS FLOAT)), array(2.0D)) AS mixed,
+        |  vec_dot(array(1.0D), array(1.0D, 2.0D)) AS mismatched,
+        |  unit_vec(array(3.0D, 4.0D)) AS u,
+        |  unit_vec(array(0.0D, 0.0D)) AS zero""".stripMargin
+    val q = spark.sql(sql).head()
+    assert(q.getDouble(0) == 11.0)
+    assert(q.getDouble(1) == 3.0)
+    assert(q.isNullAt(2))
+    assert(q.getSeq[Double](3) == Seq(0.6, 0.8))
+    assert(q.isNullAt(4))
+    val s2 = TestSpark.spark
+    graft.plans.VectorExprs.register(s2)
+    assert(s2.sql(sql).head() == q)
+  }
+
   test("integral-literal scale args: BIGINT literals accepted, rest rejected usably") {
     // a Scala/SQL Long literal must work (was a raw ClassCastException)
     val sig = spark.sql("SELECT minhash_signature('a b c d', 2L, 4L) AS s")
