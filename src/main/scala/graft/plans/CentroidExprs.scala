@@ -10,28 +10,27 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Coarse-centroid CELL-ASSIGNMENT kernels whose centroid table rides
-  * the EXPRESSION OBJECT (broadcast to executors once per stage via
-  * the task binary) instead of the plan — the large-table twin of
-  * [[graft.similarity.Similarity]]'s literal-HOF assign/probe path,
-  * exactly the [[RandomProjectExpr]]/[[BpeSegmentExpr]] escape hatch:
-  * the literal path inlines an `array(struct(cell, cent), ...)` with
-  * one tree node per centroid coefficient, fine at gate sizes but
-  * plan bloat past ~10^5 coefficients (serialized into every plan
-  * copy, walked by every optimizer rule, and — in the Lloyd loop —
-  * REBUILT every iteration), while the production cell counts the
+/** Coarse-centroid CELL-ASSIGNMENT kernels — the one implementation
+  * behind [[graft.similarity.Similarity]]'s assign, probe, residual
+  * and PQ-subspace assign steps. The centroid table rides the
+  * EXPRESSION OBJECT (broadcast to executors once per stage via the
+  * task binary) instead of the plan, the [[RandomProjectExpr]] /
+  * [[BpeSegmentExpr]] pattern: the plan carries ONE node whatever the
+  * table size, where an inlined `array(struct(cell, cent), ...)`
+  * literal would put one tree node per centroid coefficient into
+  * every plan copy and optimizer pass (and, in the Lloyd loop,
+  * rebuild it every iteration) — the production cell counts the
   * adaptive sizing implies (cells ~ sqrt(n): 10^4-10^5 cells x
-  * 512-1024 dims at 10^8-10^9 vectors) put 10^7-10^8 literal longs in
-  * every assign/serve plan. Here the plan carries ONE node.
+  * 512-1024 dims at 10^8-10^9 vectors) are 10^7-10^8 longs.
   *
-  * ARITHMETIC IS BIT-IDENTICAL to the literal path (spec-asserted,
-  * CentroidExprsSpec): distances are exact int64 sums of
+  * ARITHMETIC IS EXACT: distances are int64 sums of
   * `(scale*x_d - cent_d)^2` and all candidates are totally ordered by
   * `(distance, cell id)` — integer arithmetic has no summation-order
-  * drift, so literal and carrier paths cannot disagree on any input.
-  * An early-abandon cutoff (stop accumulating a cell's distance once
-  * it exceeds the current best) is safe for the same reason: terms
-  * are non-negative, the final comparison is on exact values.
+  * drift, so any engine replaying the same order (the DuckDB oracle
+  * does) gets the same cells. An early-abandon cutoff (stop
+  * accumulating a cell's distance once it exceeds the current best)
+  * is safe for the same reason: terms are non-negative, the final
+  * comparison is on exact values.
   *
   * The table is FLAT-ENCODED as one `Array[Long]`
   * (`[nCells, dim, scale, cell_0, cent_0 x dim, cell_1, ...]`, cells
@@ -43,10 +42,9 @@ import org.apache.spark.sql.types._
   * Null semantics: a NULL codes vector yields NULL (these columns are
   * produced by quantizeInt8 from non-null embeddings; NULL passes
   * through rather than inventing a cell). A NULL element or a
-  * dim-mismatched vector fails loudly — the literal path's behavior
-  * there is a null-poisoned struct ordering accident no caller
-  * depends on, and a wrong-dim vector reaching cell assignment is
-  * always a bug upstream. */
+  * dim-mismatched vector fails loudly — a code vector never carries
+  * a null element, and a wrong-dim vector reaching cell assignment
+  * is always a bug upstream. */
 object CentroidExprs {
 
   /** Flat-encode a cell -> centroid map (cells ascending). `scale` is
@@ -150,7 +148,7 @@ object CentroidExprs {
     }
 
     /** the `n` nearest cells by (distance, cell id) ascending — the
-      * kernel twin of slice(array_sort(struct(d, c)), 1, n). */
+      * order of slice(array_sort(struct(d, c)), 1, n) in SQL. */
     def probes(x: Array[Long], n: Int): Array[Int] = {
       val k = math.min(n, nCells)
       // selection over (d, cell) pairs; nCells-bounded scratch
@@ -309,8 +307,8 @@ sealed trait CentroidKernelExpr extends UnaryExpression {
   }
 }
 
-/** Per-SUBSPACE argmin cell — the PQ-Lloyd twin of [[AssignCellExpr]]
-  * ([[graft.similarity.Similarity]]'s pqLloydLoop): the row carries
+/** Per-SUBSPACE argmin cell — [[AssignCellExpr]] for the PQ Lloyd
+  * loop ([[graft.similarity.Similarity]]'s pqLloydLoop): the row carries
   * its subspace id `j` and a pre-scaled subvector `sub`; the table
   * holds `m` stacked codebooks of `ks` centroids x `dsub` dims
   * (flat encode `[m, ks, dsub, cents (j, c)-major]`,

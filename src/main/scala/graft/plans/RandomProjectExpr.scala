@@ -9,25 +9,25 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Johnson–Lindenstrauss random projection as ONE native expression —
-  * the large-`dOut` twin of
-  * [[graft.similarity.Similarity.randomProjection]]'s literal-HOF
-  * path. The literal path inlines dIn*dOut sign coefficients into the
-  * PLAN (fine at 768->64; plan bloat beyond ~10^5 coefficients: the
-  * literal is serialized into every plan copy and walked by every
-  * optimizer rule); here the sign matrix lives in the EXPRESSION
-  * OBJECT, which executors receive once per stage via the
-  * broadcast task binary — plan text stays O(1) in the matrix size.
+  * the kernel behind [[graft.similarity.Similarity.randomProjection]].
+  * The sign matrix lives in the EXPRESSION OBJECT, which executors
+  * receive once per stage via the broadcast task binary, so the plan
+  * text stays O(1) in dIn*dOut (an inlined coefficient literal would
+  * be serialized into every plan copy and walked by every optimizer
+  * rule).
   *
-  * Arithmetic is BIT-IDENTICAL to the HOF path (spec-asserted): for
-  * each output j, a sequential left-fold over i ascending of
-  * `acc + sign(i, j) * toDouble(v[i])` from 0.0 — the same IEEE op
-  * sequence, so hash-gated downstream checks cannot tell the paths
-  * apart. Signs derive from the seed alone
-  * (`parity(md5_32("rp:<seed>:<i>:<j>"))`, [[RandomProjectExpr.sign]])
+  * Arithmetic: for each output j, a sequential left-fold over i
+  * ascending of `acc + sign(i, j) * toDouble(v[i])` from 0.0 — the
+  * IEEE op sequence of the SQL formulation
+  * `transform(sequence(0, dOut-1), j -> aggregate(sequence(0, dIn-1),
+  * 0D, (acc, i) -> acc + signs[j*dIn+i] * double(v[i]))`, so any
+  * engine replaying it (the DuckDB oracle does) matches bit for bit.
+  * Signs derive from the seed alone
+  * (`parity(md5_32("rp:<seed>:<i>:<j>"))`, [[RandomProjectExpr.signs]])
   * — nothing random to coordinate, any engine reproduces the matrix.
   *
-  * Null semantics mirror the HOF: a NULL vector yields dOut NULL
-  * elements (the HOF's outer `transform` runs over a literal
+  * Null semantics are that formulation's: a NULL vector yields dOut
+  * NULL elements (the outer `transform` runs over a literal
   * sequence); a NULL element poisons every output (each fold reads
   * all of v); a vector shorter than dIn fails loudly (ANSI
   * element_at). */
@@ -109,7 +109,7 @@ case class RandomProjectExpr(child: Expression, seed: Long,
 object RandomProjectExpr {
 
   /** Engine-portable 32-bit fold of md5's first 8 hex chars — the
-    * same derivation the literal path and the DuckDB oracle use. */
+    * same derivation the DuckDB oracle uses. */
   private def md5Fold32(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -118,9 +118,7 @@ object RandomProjectExpr {
   }
 
   /** The full sign matrix in output-major order
-    * (`signs(j * dIn + i)` = sign of input i in output j) — shared by
-    * this expression and the literal-HOF path so both derive the
-    * IDENTICAL matrix from the seed. */
+    * (`signs(j * dIn + i)` = sign of input i in output j). */
   def signs(seed: Long, dIn: Int, dOut: Int): Array[Double] =
     Array.tabulate(dOut * dIn) { k =>
       val j = k / dIn; val i = k % dIn

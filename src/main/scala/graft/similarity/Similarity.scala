@@ -128,9 +128,11 @@ object Similarity {
     // never re-consumed). On a multi-split corpus the scan is already
     // parallel; on a one-split fixture the shuffle costs more than the
     // single-core scoring it parallelizes (measured r6: 1.27->3.01 s).
+    // zero/null vectors (null cv) are skipped inside the kernel: a
+    // null Filter would be pushed below the projection and normalise
+    // every corpus vector twice
     val scored = withUnitVec(corpus, vecCol, "cv")
       .select(col(idCol).cast("long").as("neighbor_id"), col("cv"))
-      .filter(col("cv").isNotNull)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val qs = qB.value
@@ -139,7 +141,7 @@ object Similarity {
         // head is the WORST kept entry (lowest sim, then highest id)
         val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
           Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
-        it.foreach { case (cid, cvA) =>
+        it.filter(_._2 != null).foreach { case (cid, cvA) =>
           var qi = 0
           while (qi < qs.length) {
             val (qid, qv) = qs(qi)
@@ -275,14 +277,15 @@ object Similarity {
     *   - distances are exact int64 sums of `(1000*code_d - cent_d)^2`
     *     (|diff| <= 254,000, squared ~6.5e10, x dim far inside
     *     int64 — no ANSI overflow at any dim the codes support);
-    *   - argmin tie-breaks on the lower cell id (struct array_min);
+    *   - argmin tie-breaks on the lower cell id;
     *   - empty cells keep their previous centroid;
     *   - seeds = the k lowest-id vectors' codes (deterministic).
     *
-    * Scale shape per round: centroids go DOWN as a k x dim broadcast
-    * literal (driver-built, dimension-sized), assignments are a pure
-    * map, and the update comes UP as one (cell, pos)-keyed
-    * partial-agg shuffle of k x dim rows — the corpus is scanned
+    * Scale shape per round: centroids go DOWN inside the assignment
+    * kernel ([[graft.plans.AssignCellExpr]]: the k x dim table rides
+    * the task binary, the plan carries one node), assignments are a
+    * pure map, and the update comes UP as one cell-keyed partial-agg
+    * shuffle of k dim-array rows — the corpus is scanned
     * `iters + 1` times and never collected, the driver holds k x dim
     * longs of state. Returns `(id, cell)` — the trained assignment
     * under the final centroids. */
@@ -304,100 +307,44 @@ object Similarity {
     assigned
   }
 
-  /** The k x dim centroid map as a broadcast array-of-struct literal
-    * (`__cents` convention: `struct(cell INT, cent ARRAY<BIGINT>)`,
-    * sorted by cell). */
-  private def centsLiteral(cents: Map[Int, Array[Long]]): Column =
-    array(cents.toSeq.sortBy(_._1).map { case (c, v) =>
-      struct(lit(c).as("cell"), typedlit(v.toSeq).as("cent"))
-    }: _*)
-
-  /** Deterministic argmin cell over `__cents` by (exact int64
-    * squared-L2 on the milli grid, cell id): structs order
-    * lexicographically, so array_min IS the argmin with the lower
-    * cell id breaking ties. */
-  private def assignCellExpr(codesCol: String): Column = expr(
-    s"""array_min(transform(__cents, ct -> struct(
-       |  aggregate(zip_with(`$codesCol`, ct.cent, (x, m) -> (1000 * x - m) * (1000 * x - m)),
-       |    CAST(0 AS BIGINT), (a, b) -> a + b) AS d,
-       |  ct.cell AS c))).c""".stripMargin)
-
-  // ---- size-thresholded centroid-table carrier -------------------
+  // ---- centroid-table kernels -----------------------------------
   //
-  // The literal path above inlines one plan node PER CENTROID
-  // COEFFICIENT (array of struct(cell, typedlit(cent))): right for
-  // gate-sized tables (fully codegen-inlined, zero setup), but plan
-  // bloat past ~10^5 coefficients — serialized into every plan copy,
-  // walked by every optimizer rule, rebuilt per Lloyd iteration —
-  // and the adaptive cell sizing (cells ~ sqrt(n)) GROWS into that
-  // regime at production corpus sizes (10^4-10^5 cells x 512-1024
-  // dims). Above the threshold the table rides the expression object
-  // instead ([[graft.plans.CentroidExprs]], the RandomProjectExpr /
-  // BpeSegmentExpr pattern): plan text stays O(1) in the table size,
-  // executors get the table once per stage via the task binary.
-  // Identical exact-integer arithmetic on both paths — argmin /
-  // probe order by (int64 squared distance, cell id) cannot drift
-  // with summation order — spec-pinned in CentroidExprsSpec.
-
-  /** Conf-tunable coefficient threshold (specs set it to 0 to force
-    * the carrier path at toy sizes). */
-  private def centroidLiteralMaxCoeffs(ss: org.apache.spark.sql.SparkSession): Long =
-    ss.conf.get("spark.graft.ann.centroidLiteralMaxCoeffs",
-      "65536").toLong
-
-  private def useCarrier(ss: org.apache.spark.sql.SparkSession,
-      cents: Map[Int, Array[Long]]): Boolean =
-    cents.size.toLong * cents.head._2.length >
-      centroidLiteralMaxCoeffs(ss)
+  // Assignment, probing and residuals run in the native kernels of
+  // [[graft.plans.CentroidExprs]]: the flat-encoded table rides the
+  // EXPRESSION OBJECT (executors get it once per stage via the task
+  // binary), so the plan carries one node whatever the table size —
+  // the adaptive cell sizing (cells ~ sqrt(n)) reaches 10^4-10^5
+  // cells x 512-1024 dims at production corpus sizes, and the Lloyd
+  // loop rebuilds the assign plan every iteration. Distances are
+  // exact int64 and candidates are totally ordered by (distance,
+  // cell id), so the result is independent of evaluation order.
 
   /** `df` + `cell` = the argmin cell of `codesCol` under `cents`
     * (milli-grid distance, ties to the lower cell id). */
   private[graft] def withAssignedCell(df: DataFrame, codesCol: String,
       cents: Map[Int, Array[Long]]): DataFrame =
-    if (useCarrier(df.sparkSession, cents))
-      df.withColumn("cell", graft.plans.CentroidExprs.assignCell(
-        df.sparkSession, col(codesCol),
-        graft.plans.CentroidExprs.encode(cents, 1000L)))
-    else
-      df.withColumn("__cents", centsLiteral(cents))
-        .withColumn("cell", assignCellExpr(codesCol))
-        .drop("__cents")
+    df.withColumn("cell", graft.plans.CentroidExprs.assignCell(
+      df.sparkSession, col(codesCol),
+      graft.plans.CentroidExprs.encode(cents, 1000L)))
 
   /** `df` + exploded `cell` = the `nProbe` nearest cells of
     * `codesCol` under `cents`, (distance, cell) ascending. */
   private[graft] def withProbedCells(df: DataFrame, codesCol: String,
       cents: Map[Int, Array[Long]], nProbe: Int): DataFrame =
-    if (useCarrier(df.sparkSession, cents))
-      df.withColumn("cell", explode(graft.plans.CentroidExprs.probeCells(
-        df.sparkSession, col(codesCol),
-        graft.plans.CentroidExprs.encode(cents, 1000L), nProbe)))
-    else
-      df.withColumn("__cents", centsLiteral(cents))
-        .withColumn("cell", explode(expr(
-          s"""transform(slice(array_sort(transform(__cents, ct -> struct(
-             |  aggregate(zip_with(`$codesCol`, ct.cent, (x, m) -> (1000 * x - m) * (1000 * x - m)),
-             |    CAST(0 AS BIGINT), (a, b) -> a + b) AS d,
-             |  ct.cell AS c))), 1, $nProbe), p -> p.c)""".stripMargin)))
-        .drop("__cents")
+    df.withColumn("cell", explode(graft.plans.CentroidExprs.probeCells(
+      df.sparkSession, col(codesCol),
+      graft.plans.CentroidExprs.encode(cents, 1000L), nProbe)))
 
   /** `df` + `cell` + `res` where `res = 1000*codes - cent[cell]` —
-    * the IVFADC residual leg, one kernel pass on the carrier path. */
+    * the IVFADC residual leg, one kernel pass. */
   private[graft] def withCellAndResidual(df: DataFrame, codesCol: String,
       cents: Map[Int, Array[Long]]): DataFrame =
-    if (useCarrier(df.sparkSession, cents))
-      df.withColumn("__cr", graft.plans.CentroidExprs.assignResidual(
-          df.sparkSession, col(codesCol),
-          graft.plans.CentroidExprs.encode(cents, 1000L)))
-        .withColumn("cell", col("__cr.cell"))
-        .withColumn("res", col("__cr.res"))
-        .drop("__cr")
-    else
-      df.withColumn("__cents", centsLiteral(cents))
-        .withColumn("cell", assignCellExpr(codesCol))
-        .withColumn("res", expr(
-          s"""zip_with(`$codesCol`, element_at(filter(__cents, ct -> ct.cell = cell), 1).cent,
-             |  (x, mm) -> 1000 * x - mm)""".stripMargin))
-        .drop("__cents")
+    df.withColumn("__cr", graft.plans.CentroidExprs.assignResidual(
+        df.sparkSession, col(codesCol),
+        graft.plans.CentroidExprs.encode(cents, 1000L)))
+      .withColumn("cell", col("__cr.cell"))
+      .withColumn("res", col("__cr.res"))
+      .drop("__cr")
 
   /** The Lloyd training loop over a cached `(id, codes)` relation —
     * see [[kmeansFitInt8]] for the exactness and scale contract.
@@ -467,8 +414,8 @@ object Similarity {
     * exhaustive-probe oracle, the trained centroids and the probe
     * pruning are themselves under test.
     *
-    * Scale shape: centroids broadcast down as k x dim literals; the
-    * corpus is assigned map-side; query probes are query-bounded and
+    * Scale shape: centroids ride down inside the assign/probe kernels;
+    * the corpus is assigned map-side; query probes are query-bounded and
     * broadcast into the candidate join (the corpus side streams, only
     * probed-cell rows are scored); final top-k is a per-query window
     * over candidate rows. Zero-norm vectors score null and are
@@ -477,15 +424,14 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, nCells: Int, nProbe: Int,
       iters: Int = 2, simDecimals: Int = 4): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, "need 1 <= nProbe <= nCells")
-    val nsq = (c: Column) => aggregate(c,
-      lit(0L), (a, x) => a + x * x)
     val corpusCodes = quantizeInt8(corpus, idCol, vecCol)
       .select(col(idCol).cast("long").as("id"), col("codes"))
       .transform(graft.util.Parallelism.fanOut)
       .cache()
     val cents = kmeansTrain(corpusCodes, nCells, iters)
     val assigned = withAssignedCell(corpusCodes, "codes", cents)
-      .select(col("id"), col("codes"), nsq(col("codes")).as("nsq"), col("cell"))
+      .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
+        col("cell"))
     // nProbe nearest cells per query by the same exact distance
     // ((distance, cell-id) order)
     val qProbes = withProbedCells(
@@ -494,13 +440,12 @@ object Similarity {
             col("codes").as("qcodes")),
         "qcodes", cents, nProbe)
       .select(col("query_id"), col("qcodes"),
-        nsq(col("qcodes")).as("qnsq"), col("cell"))
+        nsqOf(col("qcodes")).as("qnsq"), col("cell"))
     val scored = broadcast(qProbes).join(assigned, Seq("cell"))
       .where(col("id") =!= col("query_id") &&
         col("qnsq") > 0L && col("nsq") > 0L)
       .withColumn("sim", round(
-        aggregate(zip_with(col("qcodes"), col("codes"), (a, b) => a * b),
-          lit(0L), (a, x) => a + x).cast("double") /
+        codesDot(col("qcodes"), col("codes")).cast("double") /
           (sqrt(col("qnsq").cast("double")) * sqrt(col("nsq").cast("double"))),
         simDecimals))
     val w = org.apache.spark.sql.expressions.Window
@@ -518,8 +463,13 @@ object Similarity {
     topk
   }
 
+  /** Exact int64 squared norm of an int8 codes vector. */
   private def nsqOf(c: Column): Column =
     aggregate(c, lit(0L), (a, x) => a + x * x)
+
+  /** Exact int64 dot product of two int8 codes vectors. */
+  private def codesDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, p) => acc + p)
 
   /** Read a persisted centroid table back as the trained cell -> cent
     * map (dimension-sized BY CONSTRUCTION: nCells x dim longs — the
@@ -691,8 +641,7 @@ object Similarity {
       .where(col("id") =!= col("query_id") &&
         col("qnsq") > 0L && col("nsq") > 0L)
       .withColumn("sim", round(
-        aggregate(zip_with(col("qcodes"), col("codes"), (a, b) => a * b),
-          lit(0L), (a, x) => a + x).cast("double") /
+        codesDot(col("qcodes"), col("codes")).cast("double") /
           (sqrt(col("qnsq").cast("double")) * sqrt(col("nsq").cast("double"))),
         simDecimals))
     val w = Window.partitionBy("query_id")
@@ -957,9 +906,9 @@ object Similarity {
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
     val qB = ss.sparkContext.broadcast(qByCell)
     val kk = k; val dec = simDecimals
+    // null cv skipped in the kernel (see bruteForceTopK)
     val scored = withUnitVec(corpus, vecCol, "cv")
       .select(col(idCol).cast("long").as("neighbor_id"), col("cv"))
-      .filter(col("cv").isNotNull)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val byCell = qB.value
@@ -968,7 +917,7 @@ object Similarity {
         def heapFor(qid: Long) = heaps.getOrElseUpdate(qid,
           new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
             Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
-        it.foreach { case (cid, cvA) =>
+        it.filter(_._2 != null).foreach { case (cid, cvA) =>
           val cell = {
             // assign this corpus vector to its nearest centroid
             var best = 0; var bestS = Double.NegativeInfinity; var i = 0
@@ -1022,12 +971,13 @@ object Similarity {
     val par = ss.sparkContext.defaultParallelism
     withUnitVec(df, vecCol, "uv")
       .select(col(idCol).cast("long").as("id_b"), col("uv"))
-      .filter(col("uv").isNotNull)
       .repartition(par)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val as = aB.value
-        it.flatMap { case (idB, vbA) =>
+        // null uv (zero/null vector) skipped here, not by a Filter
+        // (see bruteForceTopK)
+        it.filter(_._2 != null).flatMap { case (idB, vbA) =>
           as.iterator.collect {
             case (idA, va) if idA < idB =>
               (idA, roundHalfUp(dotLoop(va, vbA), 6))
@@ -1172,12 +1122,12 @@ object Similarity {
       .distinct()
     // exact verification: vectors rejoin the (bucket-pruned) candidate
     // set — two shuffles sized by candidates, not corpus^2
+    // null va/vb (zero/null vectors) are skipped in the kernel below,
+    // not by a Filter (see bruteForceTopK)
     val va = withUnitVec(df, vecCol, "va")
       .select(col(idCol).cast("long").as("id_a"), col("va"))
-      .filter(col("va").isNotNull)
     val vb = withUnitVec(df, vecCol, "vb")
       .select(col(idCol).cast("long").as("id_b"), col("vb"))
-      .filter(col("vb").isNotNull)
     val thr = threshold
     candidates
       .join(va, Seq("id_a"))
@@ -1189,23 +1139,15 @@ object Similarity {
       .as[(Long, Long, Array[Double], Array[Double])]
       .mapPartitions { it =>
         it.flatMap { case (a2, b2, va2, vb2) =>
-          val sim = roundHalfUp(dotLoop(va2, vb2), 6)
-          if (sim >= thr) Iterator.single(DupPair(a2, b2, sim)) else Iterator.empty
+          if (va2 == null || vb2 == null) Iterator.empty
+          else {
+            val sim = roundHalfUp(dotLoop(va2, vb2), 6)
+            if (sim >= thr) Iterator.single(DupPair(a2, b2, sim)) else Iterator.empty
+          }
         }
       }
       .toDF()
       .select("id_a", "id_b", "sim")
-  }
-
-  /** Engine-portable 32-bit value of an md5 digest's first 8 hex
-    * chars — the same fold any SQL engine reproduces from `md5(s)`
-    * (see [[graft.functions.Dsir.featureBucket]] for the column-side
-    * twin). */
-  private def md5Fold32(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.lang.Integer.toUnsignedLong(
-      java.nio.ByteBuffer.wrap(d, 0, 4).getInt)
   }
 
   /** Johnson–Lindenstrauss RANDOM PROJECTION for embedding
@@ -1221,16 +1163,12 @@ object Similarity {
     * `sign(i, j) = parity of the md5-hex fold of "rp:<seed>:<i>:<j>"`
     * — any engine (including the DuckDB oracle) reproduces the exact
     * matrix from the seed alone, so there is no randomness to
-    * coordinate. Small matrices (up to `broadcastCoeffThreshold`
-    * coefficients, default 64k — 768->64 sits under it) inline as a
-    * literal coefficient array in a HOF; larger ones
-    * switch to the native [[graft.plans.RandomProjectExpr]], whose
-    * matrix rides the broadcast task binary instead of the plan
-    * (plan text stays O(1) in dIn*dOut). Both paths run the same
-    * sequential left-fold in index order — the same IEEE op sequence
-    * in any engine, bit-identical outputs (spec-asserted), so
-    * downstream scaled-integer checks are hash-exact either way.
-    * Zero-shuffle in both paths.
+    * coordinate. The projection is one native expression
+    * ([[graft.plans.RandomProjectExpr]]) whose matrix rides the task
+    * binary, not the plan (plan text stays O(1) in dIn*dOut): per
+    * output a sequential left-fold in index order — the same IEEE op
+    * sequence in any engine, so downstream scaled-integer checks are
+    * hash-exact. Zero-shuffle.
     *
     * Output column: `array<double>` of length `dOut`, the raw signed
     * sums (callers wanting the JL isometry scale by 1/sqrt(dOut)
@@ -1238,26 +1176,10 @@ object Similarity {
     * engine-exact). */
   def randomProjection(df: DataFrame, vecCol: String, dIn: Int,
       dOut: Int, seed: Long = 0L,
-      outCol: String = "projected",
-      broadcastCoeffThreshold: Int = 65536): DataFrame = {
+      outCol: String = "projected"): DataFrame = {
     require(dIn > 0 && dOut > 0, "dimensions must be positive")
-    if (dIn.toLong * dOut > broadcastCoeffThreshold) {
-      // large matrices ride the task binary inside the native
-      // expression instead of bloating the plan as a literal — same
-      // seed-derived matrix, same IEEE fold order, bit-identical
-      // output (RandomProjectExprSpec)
-      df.withColumn(outCol, graft.plans.RandomProjectExpr
-        .randomProject(df.sparkSession, col(vecCol), seed, dIn, dOut))
-    } else {
-      val signs: Seq[Double] =
-        graft.plans.RandomProjectExpr.signs(seed, dIn, dOut).toSeq
-      val sLit = typedLit(signs)
-      df.withColumn(outCol,
-        transform(sequence(lit(0), lit(dOut - 1)), j =>
-          aggregate(sequence(lit(0), lit(dIn - 1)), lit(0.0), (acc, i) =>
-            acc + element_at(sLit, j * dIn + i + 1) *
-              element_at(col(vecCol), i + 1).cast("double"))))
-    }
+    df.withColumn(outCol, graft.plans.RandomProjectExpr
+      .randomProject(df.sparkSession, col(vecCol), seed, dIn, dOut))
   }
 
   // ---- Product quantization (PQ / ADC) ---------------------------
@@ -1292,11 +1214,12 @@ object Similarity {
     * seeds = the `ks` lowest-id vectors' subvectors. The whole loop
     * replays as DuckDB CTEs for the hash gate.
     *
-    * Scale shape per iteration: centroids go DOWN as an
-    * (m x ks)-struct broadcast literal (dimension-sized — m*ks*dsub =
-    * ks*dim longs), assignment is a pure map over the exploded
-    * (id, subspace) relation, and the update comes UP as one
-    * (subspace, cell, pos)-keyed partial-agg shuffle of ks*dim rows.
+    * Scale shape per iteration: the m x ks codebook (m*ks*dsub =
+    * ks*dim longs) goes DOWN inside the subspace-assign kernel
+    * ([[graft.plans.SubspaceAssignExpr]], one plan node), assignment
+    * is a pure map over the exploded (id, subspace) relation, and the
+    * update comes UP as one (subspace, cell)-keyed partial-agg
+    * shuffle of m*ks dsub-array rows.
     * The corpus is never collected; the driver holds ks*dim longs. */
   def pqTrain(df: DataFrame, idCol: String, vecCol: String,
       m: Int, ks: Int, iters: Int): PqCodebook = {
@@ -1340,42 +1263,20 @@ object Similarity {
     * updates are `round((1.0 * sum) / n)` (exact-int to double, IEEE
     * division, HALF_UP), empty cells keep their centroid. One corpus
     * scan per iteration covers all subspaces; the update shuffle is
-    * ks x dim rows. */
+    * m x ks dsub-array rows. */
   private def pqLloydLoop(sub: DataFrame, iters: Int,
       seeds: Map[(Int, Int), Array[Long]]): Map[(Int, Int), Array[Long]] = {
     var cents = seeds
-    def centsLit: Column = array(cents.toSeq.sortBy(_._1).map { case ((j, c), v) =>
-      struct(lit(j).as("j"), lit(c).as("cell"), typedlit(v.toSeq).as("cent"))
-    }: _*)
-    // argmin cell within this row's subspace — the assignCellExpr rule
-    // with a subspace filter
-    def assignExpr: Column = expr(
-      """array_min(transform(filter(__cents, ct -> ct.j = j), ct -> struct(
-        |  aggregate(zip_with(sub, ct.cent, (x, mm) -> (x - mm) * (x - mm)),
-        |    CAST(0 AS BIGINT), (a, b) -> a + b) AS d,
-        |  ct.cell AS c))).c""".stripMargin)
-    // same threshold as the coarse table: ks x dim total coefficients
-    // (m*ks*dsub) inline fine at gate sizes; production ks=256 over
-    // 512-1024 dims crosses the plan-bloat line, and this literal is
-    // rebuilt EVERY iteration — carry it in the expression object
-    // instead (SubspaceAssignExpr; bit-identical exact-int argmin)
-    val carrier = seeds.size.toLong * seeds.head._2.length >
-      centroidLiteralMaxCoeffs(sub.sparkSession)
-    def withCell(df: DataFrame): DataFrame =
-      if (carrier)
-        df.withColumn("cell", graft.plans.CentroidExprs.subspaceAssign(
-          df.sparkSession, col("j"), col("sub"),
-          graft.plans.CentroidExprs.encodeSub(cents)))
-      else
-        df.withColumn("__cents", centsLit)
-          .withColumn("cell", assignExpr)
     val dsub = seeds.head._2.length
     for (_ <- 1 to iters) {
       // per-(subspace, cell) vector sums via the native band_sum
       // aggregate — see kmeansTrain: one dsub-array row per (j, cell)
       // through the shuffle instead of a posexplode'd dsub-fold, same
       // integer arithmetic (subs are fixed-width by construction)
-      val sums = withCell(sub)
+      val sums = sub
+        .withColumn("cell", graft.plans.CentroidExprs.subspaceAssign(
+          sub.sparkSession, col("j"), col("sub"),
+          graft.plans.CentroidExprs.encodeSub(cents)))
         .groupBy("j", "cell")
         .agg(count(col("sub")).as("n"),
           graft.plans.BandSumAgg.bandSum(sub.sparkSession,

@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions route must expose every native function to PLAIN SQL
   * in a fresh session context, and agree with the per-session
   * register() route (same expression tree → same results). */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // The `spark.sql.extensions` CONF is static: it only applies when
   // the SparkContext itself is created, and this forked test JVM
@@ -14,8 +15,16 @@ class GraftExtensionsSpec extends AnyFunSuite {
   // through builder.withExtensions instead (the conf route calls the
   // exact same GraftExtensions.apply through Spark's applyExtensions).
   // Session slots are cleared so getOrCreate builds a NEW session
-  // rather than returning another suite's.
+  // rather than returning another suite's; afterAll puts the shared
+  // session back (later suites resolve SparkSession.active).
+  private var saved: Option[(Option[SparkSession], Option[SparkSession])] =
+    None
+
   private lazy val spark = {
+    // the shared context first, so the new session reuses it
+    TestSpark.spark
+    saved = Some((SparkSession.getActiveSession,
+      SparkSession.getDefaultSession))
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     SparkSession.builder()
@@ -25,6 +34,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+  }
+
+  override def afterAll(): Unit = {
+    // restore, never stop: the SparkContext is shared by every suite
+    try saved.foreach { case (active, default) =>
+      default.fold(SparkSession.clearDefaultSession())(
+        SparkSession.setDefaultSession)
+      active.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+      assert(SparkSession.active eq TestSpark.spark,
+        "the suite must leave the shared session active")
+    } finally super.afterAll()
   }
 
   test("all injected functions resolve and compute from plain SQL") {

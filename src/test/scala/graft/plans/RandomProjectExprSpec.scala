@@ -1,15 +1,29 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.similarity.Similarity
 
 /** The broadcast-matrix expression must be BIT-identical to the
-  * literal-HOF path — same seed-derived signs, same IEEE fold order —
+  * literal-HOF formulation it replaced (frozen below as the
+  * reference) — same seed-derived signs, same IEEE fold order —
   * including the HOF's null semantics. */
 class RandomProjectExprSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** The replaced literal-HOF projection: the sign matrix inlined as
+    * one literal, a per-output left-fold in index order. */
+  private def hofProjection(df: DataFrame, vecCol: String, dIn: Int,
+      dOut: Int, seed: Long): DataFrame = {
+    val sLit = typedLit(RandomProjectExpr.signs(seed, dIn, dOut).toSeq)
+    df.withColumn("projected",
+      transform(sequence(lit(0), lit(dOut - 1)), j =>
+        aggregate(sequence(lit(0), lit(dIn - 1)), lit(0.0), (acc, i) =>
+          acc + element_at(sLit, j * dIn + i + 1) *
+            element_at(col(vecCol), i + 1).cast("double"))))
+  }
 
   private def vecs(dIn: Int) = {
     import spark.implicits._
@@ -25,10 +39,8 @@ class RandomProjectExprSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
-  private def collectProj(threshold: Int, dIn: Int, dOut: Int) =
-    Similarity.randomProjection(vecs(dIn), "embedding", dIn, dOut,
-        seed = 42L, broadcastCoeffThreshold = threshold)
-      .orderBy("vec_id").select("projected")
+  private def collectProj(df: DataFrame) =
+    df.orderBy("vec_id").select("projected")
       .collect().map { r =>
         if (r.isNullAt(0)) null
         else r.getSeq[Any](0).map(x => Option(x)).toList
@@ -37,8 +49,10 @@ class RandomProjectExprSpec extends AnyFunSuite {
   test("expression path == literal-HOF path bit-for-bit, including " +
       "null vector -> dOut nulls and null element poisoning") {
     val dIn = 48; val dOut = 6
-    val hof = collectProj(threshold = Int.MaxValue, dIn, dOut)
-    val expr = collectProj(threshold = 0, dIn, dOut)
+    val hof = collectProj(hofProjection(vecs(dIn), "embedding", dIn, dOut,
+      seed = 42L))
+    val expr = collectProj(Similarity.randomProjection(vecs(dIn),
+      "embedding", dIn, dOut, seed = 42L))
     assert(hof == expr, s"hof=$hof\nexpr=$expr")
     // the null-semantics pins (both paths)
     assert(expr(3) == List.fill(dOut)(None), "null vec must give dOut nulls")
@@ -50,9 +64,8 @@ class RandomProjectExprSpec extends AnyFunSuite {
       "dIn*dOut doubles in the plan text") {
     val dIn = 512; val dOut = 32 // 16k coefficients
     val big = Similarity.randomProjection(vecs(dIn), "embedding",
-      dIn, dOut, seed = 7L, broadcastCoeffThreshold = 0)
-    val lit = Similarity.randomProjection(vecs(dIn), "embedding",
-      dIn, dOut, seed = 7L, broadcastCoeffThreshold = Int.MaxValue)
+      dIn, dOut, seed = 7L)
+    val lit = hofProjection(vecs(dIn), "embedding", dIn, dOut, seed = 7L)
     val bigPlan = big.queryExecution.analyzed.toString
     val litPlan = lit.queryExecution.analyzed.toString
     assert(bigPlan.length < litPlan.length / 4,
@@ -63,5 +76,22 @@ class RandomProjectExprSpec extends AnyFunSuite {
     val b = lit.orderBy("vec_id").select("projected").collect()
       .map(r => if (r.isNullAt(0)) null else r.getSeq[Any](0).toList).toList
     assert(a == b)
+  }
+
+  test("randomProjection equals the literal-HOF formulation bit for " +
+      "bit on the sf0.001 embeddings (64 -> 16 and 64 -> 32)") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    for (dOut <- Seq(16, 32)) {
+      val rows = Similarity.randomProjection(emb, "embedding", 64, dOut,
+          outCol = "kernel")
+        .transform(hofProjection(_, "embedding", 64, dOut, seed = 0L))
+        .select("kernel", "projected").collect()
+      assert(rows.length == 500)
+      rows.foreach { r =>
+        def bits(i: Int) = r.getSeq[Double](i)
+          .map(java.lang.Double.doubleToRawLongBits)
+        assert(bits(0) == bits(1), s"dOut=$dOut: $r")
+      }
+    }
   }
 }

@@ -170,4 +170,40 @@ class VectorExprsSpec extends AnyFunSuite {
       assert(hofs.isEmpty, s"$name runs $hofs:\n$plan")
     }
   }
+
+  test("every similarity operator normalises each vector column once; " +
+      "a zero vector leaves the output unchanged") {
+    val emb = Tables.embeddings(spark, sf)
+    // cached inputs: one scan per corpus, so the projection is not
+    // pushed into (and counted once per) union branch
+    val dups = Similarity.plantCosineDups(emb, "vec_id", "embedding",
+      1000000L).cache()
+    // a zero vector normalises to null and must be skipped, not scored
+    val withZero = dups.union(dups.limit(1).select(
+      lit(999999999L).cast(dups.schema("vec_id").dataType).as("vec_id"),
+      transform(col("embedding"), _ * 0.0f).as("embedding"))).cache()
+    val q = emb.filter(col("vec_id") < 5).select("vec_id", "embedding")
+    val ops: Seq[(String, DataFrame => DataFrame, Int)] = Seq(
+      ("bruteForceTopK", c => Similarity.bruteForceTopK(q, c, "vec_id",
+        "embedding", k = 3), 1),
+      ("ivfTopK", c => Similarity.ivfTopK(q, c, "vec_id", "embedding",
+        k = 3), 1),
+      ("bruteForceNearDupPairs", c => Similarity.bruteForceNearDupPairs(c,
+        "vec_id", "embedding", 0.95), 1),
+      ("embeddingNearDupPairs", c => Similarity.embeddingNearDupPairs(c,
+        "vec_id", "embedding", 0.95), 2)) // va and vb
+    ops.foreach { case (name, op, columns) =>
+      val base = op(dups)
+      val expected = base.collect().map(_.toString).sorted.toSeq
+      assert(expected.nonEmpty, name)
+      val out = op(withZero)
+      assert(out.collect().map(_.toString).sorted.toSeq == expected, name)
+      val plan = out.queryExecution.executedPlan
+      val kernels = new AdaptiveSparkPlanHelper {}.collect(plan) { case p =>
+        p.expressions.flatMap(_.collect { case u: UnitVecExpr => u })
+      }.flatten
+      assert(kernels.length == columns, s"$name:\n$plan")
+    }
+    withZero.unpersist(); dups.unpersist()
+  }
 }
