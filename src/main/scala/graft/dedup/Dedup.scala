@@ -841,158 +841,102 @@ object Dedup {
     * the component label is the minimum member id, so
     * `id === cluster` selects the canonical keepers.
     *
-    * Algorithm: iterative min-label propagation — each round, every
-    * doc takes the min of its own label and its neighbors' labels (one
-    * edge join + one groupBy-min shuffle per round), until the global
-    * label sum stops falling (the sum is strictly decreasing until the
-    * fixpoint, so this needs no row-level diff). Rounds = component
-    * diameter; near-dup clusters are dense (diameter 1-2 — every copy
-    * pairs with every other), so 2-3 rounds in practice. For graphs
-    * with LONG CHAINS at billion-node scale, use
-    * [[connectedComponentsStar]] (Kiveris et al. large-star/small-star
-    * — same join shape, O(log n) rounds, same output contract);
-    * propagation is chosen as the default because dedup components are
-    * clique-like, where it converges faster with
-    * simpler rounds. `localCheckpoint` truncates the per-round lineage
-    * (iterative plans otherwise grow exponentially in the optimizer).
+    * One bounded fetch picks the algorithm. The pair leg is cached and
+    * at most `LocalEdgeLimit + 1` edge rows are collected in one job:
+    *  - at most `LocalEdgeLimit` rows (every dedup graph the engine
+    *    builds — verified near-dup pairs are duplicate-rate-sized, and
+    *    the cluster table's ingest/retract graphs are delta-sized by
+    *    construction): union-find on the driver over the fetched rows,
+    *    and the labels go back to the docs through a broadcast left
+    *    join. `docs` is never collected, so the corpus side stays
+    *    distributed and singletons label themselves;
+    *  - more rows, or non-integral ids (string doc keys): the
+    *    large-star/small-star loop of [[connectedComponentsStar]] over
+    *    the cached leg, O(log n) rounds on any id ordering and any
+    *    component diameter.
+    * The pair subtree (typically the LSH verify plan) runs once on
+    * either branch; the cache is released before this returns.
     *
-    * CLUSTER DURABILITY: `localCheckpoint` stores blocks on executors —
-    * fast, but NOT recoverable after executor loss, which on a
-    * 1000-executor cluster would kill an hour-long CC job at iteration
-    * 40 over one lost node. Pass `checkpointDir = Some(reliableFsPath)`
-    * (HDFS/S3) for cluster runs: per-round truncation then goes through
-    * `df.checkpoint()` against that directory, and a re-submitted stage
-    * recomputes from the durable files instead of dying. Labels are
-    * bit-identical either way (DedupSpec asserts it) — the knob trades
-    * per-round write cost for fault tolerance, nothing else.
+    * CLUSTER DURABILITY: `checkpointDir` applies to the star branch
+    * only — see [[connectedComponentsStar]].
     */
   def connectedComponents(docs: DataFrame, idCol: String,
-      pairs: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None,
-      localEdgeLimit: Long = 0L): DataFrame = {
-    bindCheckpointDir(docs, checkpointDir)
-    // cache the BASE pair leg, not the symmetrized union: Spark does
-    // not common-subexpression the two union branches, so caching the
-    // union materializes the (possibly expensive — LSH verify) pair
-    // subtree twice in one job. The per-iteration union over the
-    // cached base is a free cache read.
-    val base = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .cache()
-    // DRIVER FAST PATH (opt-in via localEdgeLimit > 0): when the edge
-    // set is bounded — the cluster-table ingest's delta graph is
-    // delta-sized BY CONSTRUCTION — the iterative loop's per-round
-    // fixed cost (a join + checkpoint + convergence job per round,
-    // diameter-many rounds) dwarfs the data. Collecting <= limit edge
-    // rows (a bounded, increment-sized collect — the same contract as
-    // the BPE vocabulary table) and running union-find driver-side
-    // replaces ~10 scheduled rounds with one job + one broadcast.
-    // Labels are identical (min member id per component); `docs` is
-    // never collected — singletons label themselves through the left
-    // join, so the corpus side stays distributed. Ids must be
-    // integral here; anything else falls through to the loop.
+      pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame =
+    connectedComponentsUpTo(docs, idCol, pairs, checkpointDir, LocalEdgeLimit)
+
+  /** Edge rows [[connectedComponents]] brings to the driver: 2M rows of
+    * two longs is tens of MB — the same bounded-collect contract as the
+    * BPE vocabulary table. */
+  private val LocalEdgeLimit = 2000000
+
+  /** [[connectedComponents]] with the driver fast path's edge bound as
+    * a parameter, so specs can force the distributed branch. */
+  private[dedup] def connectedComponentsUpTo(docs: DataFrame, idCol: String,
+      pairs: DataFrame, checkpointDir: Option[String],
+      edgeLimit: Int): DataFrame = {
+    val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
     val idT = docs.schema(idCol).dataType
     val integralId = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType,
       org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.ShortType).contains(idT)
-    if (localEdgeLimit > 0 && integralId &&
-        base.count() <= localEdgeLimit) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      // iterative find + path compression: min-root union without
-      // rank can chain O(n) deep, so a recursive find would overflow
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      base.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().foreach { r =>
-          val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      val touched = parent.keySet ++ parent.values
-      val ss = docs.sparkSession
-      import ss.implicits._
-      val labDf = touched.toSeq.map(id => (id, find(id))).toDF("id", "__c")
-        .select(col("id").cast(idT).as("id"), col("__c").cast(idT).as("__c"))
-      base.unpersist()
-      return docs.select(col(idCol).as("id"))
-        .join(broadcast(labDf), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__c"), col("id")).as("cluster"))
+    // non-integral ids: star's round-0 checkpoint is the leg's only reader
+    if (!integralId) starComponents(docs, idCol, edges, 50, checkpointDir)
+    else {
+      // the fetch and (past the bound) star's round 0 both read the
+      // leg: the cache keeps the pair subtree to one run
+      edges.cache()
+      try {
+        val fetched = edges.select(col("u").cast("long"), col("v").cast("long"))
+          .limit(edgeLimit + 1).collect()
+        // star's rounds are eager and the union-find labels are local
+        // rows, so neither result reads the cache once this returns
+        if (fetched.length > edgeLimit)
+          starComponents(docs, idCol, edges, 50, checkpointDir)
+        else unionFindComponents(docs, idCol, fetched)
+      } finally edges.unpersist()
     }
-    val edges = base.union(base.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = truncateLineage(
-      docs.select(col(idCol).as("id"), col(idCol).as("cluster")), checkpointDir)
-    var prevSum = Option.empty[BigInt]
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("cluster"))
-      // the convergence metric rides the checkpoint's own job via
-      // observe() instead of costing a separate aggregate job per
-      // round; the listener delivery is async, so a short wait plus
-      // the old aggregate as fallback keeps this hang-proof (the
-      // fallback reads the in-memory checkpoint — cheap, just not
-      // free). The metric is a 64-bit hash sum (exact decimal
-      // accumulation) rather than sum(cluster) so NON-NUMERIC ids
-      // (string doc keys) work too — same signature scheme and same
-      // negligible-collision argument as connectedComponentsStar.
-      val sigCol = coalesce(
-        sum(xxhash64(col("id"), col("cluster")).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO)).as("s")
-      val obs = org.apache.spark.sql.Observation()
-      val next = truncateLineage(
-        labels.union(viaEdges)
-          .groupBy("id").agg(min("cluster").as("cluster"))
-          .observe(obs, sigCol),
-        checkpointDir)
-      val s = try {
-        BigInt(scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(2, "s"))
-          .getAs[java.math.BigDecimal]("s").toBigInteger)
-      } catch { case _: java.util.concurrent.TimeoutException =>
-        // visible, not silent: a configuration where the observed
-        // metric never posts (checkpoint job not wrapped in a SQL
-        // execution) would otherwise pay 2s + a fallback aggregate
-        // EVERY round with no signal
-        log.warn(s"connectedComponents: observe() metric did not post " +
-          s"within 2s at iteration $iter — falling back to an explicit " +
-          "convergence aggregate (correct, but one extra job per round)")
-        BigInt(next.agg(sigCol).head()
-          .getAs[java.math.BigDecimal]("s").toBigInteger)
-      }
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      labels = next
-      iter += 1
-    }
-    base.unpersist()
-    // A silent exit at maxIter would hand back partially-propagated
-    // labels and corrupt every keep/drop decision built on them —
-    // chain-diameter graphs must fail loudly, not approximately.
-    require(converged,
-      s"connectedComponents did not converge in $maxIter rounds; " +
-        "raise maxIter (diameter-shaped graph?) or switch to " +
-        "connectedComponentsStar (large-star/small-star, O(log n) rounds)")
-    labels
   }
 
-  /** [[connectedComponents]] for DIAMETER-SHAPED graphs: the
-    * large-star/small-star scheme (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014) converges in
-    * O(log n) ROUNDS regardless of component diameter, where min-label
-    * propagation needs diameter-many rounds — the right tool when the
-    * dedup graph contains long chains (A~B~C~... paraphrase chains)
-    * rather than the clique-like clusters propagation is chosen for.
-    * Same contract: `(id, cluster)` for every doc, cluster = min
-    * member id, singletons cluster to themselves.
+  /** Driver union-find over fetched `(long, long)` edge rows; labels
+    * reach `docs` through a broadcast left join. */
+  private def unionFindComponents(docs: DataFrame, idCol: String,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    // iterative find + path compression: min-root union without
+    // rank can chain O(n) deep, so a recursive find would overflow
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val touched = parent.keySet ++ parent.values
+    val idT = docs.schema(idCol).dataType
+    val ss = docs.sparkSession
+    import ss.implicits._
+    val labDf = touched.toSeq.map(id => (id, find(id))).toDF("id", "__c")
+      .select(col("id").cast(idT).as("id"), col("__c").cast(idT).as("__c"))
+    docs.select(col(idCol).as("id"))
+      .join(broadcast(labDf), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__c"), col("id")).as("cluster"))
+  }
+
+  /** Connected components by the large-star/small-star scheme
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014): O(log n) ROUNDS regardless of component diameter, so
+    * long chains (A~B~C~... paraphrase chains) close as fast as
+    * cliques. This is [[connectedComponents]]' distributed branch,
+    * callable directly to run it at any graph size. Same contract:
+    * `(id, cluster)` for every doc, cluster = min member id,
+    * singletons cluster to themselves.
     *
-    * Per round (each a handful of key-shuffles, like one propagation
-    * round):
+    * Per round (three key-shuffles):
     *  - LARGE-STAR: each node u attaches every LARGER neighbor to
     *    `m = min(N(u) ∪ u)` — long chains fold toward small ids from
     *    every node at once, which is where the log comes from;
@@ -1004,36 +948,48 @@ object Dedup {
     * negligible against ~2^64). At the fixpoint the edge set is a
     * union of stars centered on component minima, so labels read off
     * edges directly. Ids need only an ordering (numeric or string).
+    * Each round's edge set is checkpointed, which truncates the lineage
+    * (iterative plans otherwise grow exponentially in the optimizer).
     *
-    * `checkpointDir`: same cluster-durability knob as
-    * [[connectedComponents]] — reliable per-round truncation instead
-    * of executor-resident `localCheckpoint`.
+    * CLUSTER DURABILITY: `localCheckpoint` (the default) stores blocks
+    * on executors — fast, but NOT recoverable after executor loss,
+    * which on a 1000-executor cluster would kill an hour-long CC job
+    * over one lost node. Pass `checkpointDir = Some(reliableFsPath)`
+    * (HDFS/S3) for cluster runs: per-round truncation then goes through
+    * `df.checkpoint()` against that directory, and a re-submitted stage
+    * recomputes from the durable files instead of dying. Labels are
+    * bit-identical either way (DedupSpec asserts it) — the knob trades
+    * per-round write cost for fault tolerance, nothing else.
     */
   def connectedComponentsStar(docs: DataFrame, idCol: String,
       pairs: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None,
-      roundObserver: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      sym.join(mins, "u")
+      checkpointDir: Option[String] = None): DataFrame =
+    starComponents(docs, idCol,
+      pairs.select(col("id_a").as("u"), col("id_b").as("v")),
+      maxIter, checkpointDir)
+
+  /** [[connectedComponentsStar]] over an `(u, v)` edge frame. */
+  private def starComponents(docs: DataFrame, idCol: String,
+      uv: DataFrame, maxIter: Int,
+      checkpointDir: Option[String]): DataFrame = {
+    // each star's per-node minimum is a window over one hash exchange
+    // on u: no separate aggregate to join back onto the edges
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy("u")
+    def largeStar(e: DataFrame): DataFrame =
+      e.union(e.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(min("v").over(byU), col("u")))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val or = e.select(greatest(col("u"), col("v")).as("u"),
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(greatest(col("u"), col("v")).as("u"),
           least(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      val mins = or.groupBy("u").agg(min("v").as("mn")) // all v < u, so mn is the min incl. u
-      or.join(mins, "u")
-        .select(col("v").as("u"), col("mn").as("v"))
-        .union(mins.select(col("u"), col("mn").as("v")))
+        .filter(col("u") =!= col("v"))
+        .withColumn("mn", min("v").over(byU)) // all v < u: the min incl. u
+        .select(explode(array(struct(col("v").as("u"), col("mn").as("v")),
+          struct(col("u"), col("mn").as("v")))).as("e"))
+        .select(col("e.u"), col("e.v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-    }
     def signature(e: DataFrame): (Long, BigInt) = {
       // decimal(38,0) sum: exact and overflow-proof under ANSI mode
       // (a long sum of 64-bit hashes overflows after a handful of rows)
@@ -1044,16 +1000,11 @@ object Dedup {
     }
     bindCheckpointDir(docs, checkpointDir)
     var edges = truncateLineage(
-      pairs
-        .select(col("id_a").as("u"), col("id_b").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct(),
-      checkpointDir)
+      uv.filter(col("u") =!= col("v")).distinct(), checkpointDir)
     var sig = signature(edges)
     log.info(s"connectedComponentsStar: round 0 edges=${sig._1}")
-    roundObserver(0, sig._1)
     var iter = 0
-    var converged = edges.isEmpty
+    var converged = sig._1 == 0
     while (!converged && iter < maxIter) {
       edges = truncateLineage(smallStar(largeStar(edges)), checkpointDir)
       val s = signature(edges)
@@ -1064,7 +1015,6 @@ object Dedup {
       // designed cost; PER-ROUND edge growth would compound at 1000x
       log.info(s"connectedComponentsStar: round $iter edges=${s._1}" +
         (if (converged) " (fixpoint)" else ""))
-      roundObserver(iter, s._1)
     }
     require(converged,
       s"connectedComponentsStar did not converge in $maxIter rounds — " +
@@ -1078,11 +1028,11 @@ object Dedup {
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
   }
 
-  /** Per-round lineage truncation for the iterative CC loops:
-    * executor-resident `localCheckpoint` by default (fast, dies with
-    * an executor), reliable `df.checkpoint()` when the caller passed a
-    * durable directory (cluster runs — see [[connectedComponents]]'s
-    * Scaladoc). The context checkpoint dir is set ONCE per CC call by
+  /** Per-round lineage truncation for the star loop: executor-resident
+    * `localCheckpoint` by default (fast, dies with an executor),
+    * reliable `df.checkpoint()` when the caller passed a durable
+    * directory (cluster runs — see [[connectedComponentsStar]]'s
+    * Scaladoc). The context checkpoint dir is set ONCE per star call by
     * [[bindCheckpointDir]] — `setCheckpointDir` mints a fresh UUID
     * subdirectory each time, so per-round re-binding would scatter one
     * directory per iteration. */
@@ -1916,14 +1866,12 @@ object Dedup {
         bands, threshold, maxBucketSize, nfcFold,
         precomputedBuckets = Some(fullBuckets))
       .select("id_a", "id_b")
-    // same bounded driver union-find shortcut as the ingest/retract
-    // delta graphs: the verified near-dup pair set is duplicate-rate-
-    // sized, not corpus-sized (the count gate proves it before any
-    // collect), so the init CC at small-to-mid scale is one job + one
-    // broadcast instead of diameter-many propagation rounds; above the
-    // edge bound it falls through to the distributed loop unchanged
+    // the verified near-dup pair set is duplicate-rate-sized, not
+    // corpus-sized, so connectedComponents' bounded fetch normally
+    // takes the driver union-find (one job + one broadcast); a pair set
+    // past its edge bound takes the large-star/small-star branch
     val labelRows = connectedComponents(corpus, idCol, pairs,
-        checkpointDir = checkpointDir, localEdgeLimit = 2000000L)
+        checkpointDir = checkpointDir)
       .select(col("id").as(idCol), col("cluster"))
       .withColumn("ver", lit(0L))
       // STABLE partition key (id bucket, never the mutable label):
@@ -2122,13 +2070,12 @@ object Dedup {
     val nodes = drop.select(col(idCol))
       .unionByName(xLab.select(col("id_b").as(idCol)))
       .distinct()
-    // delta graph: drop ids + touched labels only — and delta-sized
-    // by construction, so edge sets under ~2M rows (tens of MB)
-    // union-find on the driver instead of paying the iterative
-    // loop's per-round job overhead; bigger deltas fall through to
-    // the distributed loop
+    // delta graph: drop ids + touched labels only — delta-sized by
+    // construction, so connectedComponents' bounded fetch takes the
+    // driver union-find; a delta past its edge bound takes the
+    // large-star/small-star branch
     val comp = connectedComponents(nodes, idCol, edges,
-      checkpointDir = checkpointDir, localEdgeLimit = 2000000L).cache()
+      checkpointDir = checkpointDir).cache()
     xLab.unpersist()
     // version source: the session cache when our own merge was the
     // store's last mutation (priorEpoch proves no interloper), else
@@ -2318,10 +2265,10 @@ object Dedup {
         "clusters, or they would silently disappear from the table")
     val pairs = minHashLshPairs(surTexts, idCol, textCol, n, numHashes,
       bands, threshold, nfcFold = nfcFold).select("id_a", "id_b")
-    // affected-cluster-sized by construction (see method doc): the
-    // same bounded driver union-find shortcut as the ingest's delta
+    // affected-cluster-sized by construction (see method doc), so the
+    // bounded fetch takes the driver union-find, as for the ingest delta
     val relab = connectedComponents(surTexts.select(col(idCol)), idCol,
-      pairs, checkpointDir = checkpointDir, localEdgeLimit = 2000000L)
+      pairs, checkpointDir = checkpointDir)
     val newVer = labels.agg(coalesce(max("ver"), lit(0L)))
       .head().getLong(0) + 1L
     val ibOf = (c: Column) =>

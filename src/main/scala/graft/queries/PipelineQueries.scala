@@ -584,17 +584,17 @@ object PipelineQueries {
       val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text",
           n = 3, numHashes = 64, bands = 16, threshold = 0.5)
         .select("id_a", "id_b")
-      // bounded driver union-find shortcut (labels identical — DedupSpec
-      // pins fast path == loop; the edge-count gate keeps it scale-safe)
-      Dedup.connectedComponents(docs, "doc_id", pairs,
-          localEdgeLimit = 2000000L)
+      // the bounded edge fetch takes the driver union-find here
+      // (DedupSpec pins its labels == the large-star/small-star branch)
+      Dedup.connectedComponents(docs, "doc_id", pairs)
         .select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
         .orderBy("doc_id")
     }),
 
     // The SAME clustering through the large-star/small-star algorithm
     // (Kiveris et al. SoCC'14 — O(log n) rounds regardless of
-    // component diameter, the chain-graph fallback to propagation).
+    // component diameter), the branch connectedComponents takes past
+    // its driver edge bound, run here directly at any size.
     // Connected components are algorithm-independent, so this shares
     // q_dedup_clusters' recursive-closure oracle verbatim: both
     // engines-under-test must produce identical min-member labels.
@@ -1817,21 +1817,21 @@ object PipelineQueries {
     // keep one item per transitive cluster of embedding-cosine
     // near-dups. Pairs come from the high-sim LSH bucket path over the
     // same planted-dup corpus as q_sim_embed_neardup (recall exactly 1
-    // there — see that query's comment), closure via distributed
-    // min-label propagation — the full composition never leaves
-    // hash-bucket equi-joins + per-round shuffles, so it scales where
-    // the paper's per-cluster numpy step would not. Every cluster is a
-    // known {original, planted} pair, so the keep/drop verdict is
-    // fully determined and the recursive-CTE SQL oracles it.
+    // there — see that query's comment), closure via
+    // connectedComponents — a bounded driver union-find, or past its
+    // edge bound large-star/small-star rounds of hash-key shuffles, so
+    // it scales where the paper's per-cluster numpy step would not.
+    // Every cluster is a known {original, planted} pair, so the
+    // keep/drop verdict is fully determined and the recursive-CTE SQL
+    // oracles it.
     "q_semdedup" -> ((s, d) => {
       val aug = Similarity.plantCosineDups(
         Tables.embeddings(s, d), "vec_id", "embedding", offset = 10000000L)
       val pairs = Similarity.embeddingNearDupPairs(aug, "vec_id", "embedding",
           threshold = 0.95, planes = 10, tables = 8)
         .select(col("id_a"), col("id_b"))
-      // bounded driver union-find shortcut (see q_dedup_clusters)
-      Dedup.connectedComponents(aug.select(col("vec_id")), "vec_id", pairs,
-          localEdgeLimit = 2000000L)
+      // bounded driver union-find (see q_dedup_clusters)
+      Dedup.connectedComponents(aug.select(col("vec_id")), "vec_id", pairs)
         .select(col("id").as("vec_id"), col("cluster").as("rep_id"),
           (col("id") === col("cluster")).cast("bigint").as("keep"))
         .orderBy("vec_id")
@@ -2829,7 +2829,7 @@ object PipelineQueries {
       |ORDER BY train_id, eval_id""".stripMargin
 
   // Recursive closure over exact-jaccard pairs — shared by
-  // q_dedup_clusters (min-label propagation) and q_dedup_ccstar
+  // q_dedup_clusters (driver union-find) and q_dedup_ccstar
   // (large-star/small-star): connected components are unique, so both
   // algorithms must hash-match the same SQL.
   /** Recursive-closure CTE chain shared by every LSH->CC oracle:
@@ -3650,7 +3650,7 @@ object PipelineQueries {
     "q_decontaminate_bloom" -> decontaminateOracle,
     "q_dedup_clusters" -> clustersOracle,
     // same closure — components are algorithm-independent, so the
-    // star-scheme run must hash-match the propagation run's oracle
+    // star-scheme run must hash-match the union-find run's oracle
     "q_dedup_ccstar" -> clustersOracle,
     // incremental == from-scratch: the ingest gate shares the same
     // full-corpus closure oracle verbatim

@@ -273,24 +273,57 @@ class DedupSpec extends AnyFunSuite {
     assert(kept == Seq(1L, 3L)) // whitespace-normalized dup collapses to min id
   }
 
+  /** Runs one graph through every connected-components path — the
+    * gate's driver union-find, the gate forced past its edge bound
+    * (large-star/small-star over the cached pair leg) and
+    * [[Dedup.connectedComponentsStar]] — and asserts on each that the
+    * pair subtree ran exactly once (a counting filter on `pairs`) and
+    * that no CacheManager entry outlives the call. Returns the labels,
+    * which must agree across the three paths. */
+  private def ccAllPaths(nodes: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame,
+      checkpointDir: Option[String] = None): Map[Any, Any] = {
+    import org.apache.spark.sql.DataFrame
+    val nPairs = pairs.count()
+    val reads = spark.sparkContext.longAccumulator("cc-pair-reads")
+    val counted = pairs.filter(
+      udf(() => { reads.add(1L); true }).asNondeterministic()())
+    val cm = spark.sharedState.cacheManager
+    def run(path: String, cc: DataFrame => DataFrame) = {
+      spark.catalog.clearCache()
+      reads.reset()
+      val got = cc(counted).collect().map(r => r.get(0) -> r.get(1)).toMap
+      assert(reads.value == nPairs,
+        s"$path: the pair subtree ran ${reads.value} rows for $nPairs pairs")
+      assert(cm.isEmpty, s"$path: a cache entry outlived the call")
+      got
+    }
+    val fast = run("fast path", Dedup.connectedComponents(nodes, "doc_id", _,
+      checkpointDir))
+    val dist = run("gate past its bound", Dedup.connectedComponentsUpTo(nodes,
+      "doc_id", _, checkpointDir, edgeLimit = 0))
+    val star = run("star", Dedup.connectedComponentsStar(nodes, "doc_id", _,
+      checkpointDir = checkpointDir))
+    assert(dist == fast, "the distributed branch disagrees with the fast path")
+    assert(star == fast, "connectedComponentsStar disagrees with the fast path")
+    fast
+  }
+
   test("connectedComponents: chains, cliques, singletons") {
     import spark.implicits._
-    // component {1,2,3,4} is a CHAIN (diameter 3 — exercises multi-round
-    // propagation), {10,11,12} a clique, {20} and {21} singletons
+    // component {1,2,3,4} is a CHAIN (diameter 3 — multi-round on the
+    // star branch), {10,11,12} a clique, {20} and {21} singletons
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L, 21L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(nodes, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 21L))
+    assert(ccAllPaths(nodes, pairs) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      4L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 21L))
   }
 
   test("connectedComponents agrees with brute-force closure on the fixture pairs") {
-    val got = Dedup.connectedComponents(docs, "doc_id",
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5)
-          .select("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = ccAllPaths(docs,
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5)
+        .select("id_a", "id_b"))
     // brute-force union-find over the exact pair set
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -306,11 +339,20 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("connectedComponents: every path agrees on the q_dedup_clusters LSH pairs") {
+    // the pair set q_dedup_clusters clusters, LSH verify plan and all
+    val got = ccAllPaths(docs, Dedup.minHashLshPairs(docs, "doc_id", "text",
+        n = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      .select("id_a", "id_b"))
+    assert(got.size == docs.count())
+    assert(got.exists { case (id, c) => id != c },
+      "fixture should contain at least one non-singleton cluster")
+  }
+
   test("connectedComponentsStar: path graph with diameter > 50 in O(log n) rounds") {
     import spark.implicits._
-    // a 64-node PATH — diameter 63 — is exactly the graph propagation's
-    // default 50-round budget cannot close; large/small-star must close
-    // it in ~log2(64) + change rounds (maxIter = 15 enforces the bound)
+    // a 64-node PATH — diameter 63 — must close in ~log2(64) + change
+    // rounds of large/small-star (maxIter = 15 enforces the bound)
     val n = 64
     val nodes = (0L until n.toLong).toDF("doc_id")
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -319,7 +361,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == (0L until n.toLong).map(_ -> 0L).toMap)
   }
 
-  test("connectedComponentsStar equals propagation on random graphs (+ singletons)") {
+  test("connectedComponents: every path agrees on random graphs (+ singletons)") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     (1 to 3).foreach { trial =>
@@ -330,17 +372,33 @@ class DedupSpec extends AnyFunSuite {
       val pairs = Seq.fill(140)(
         (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
         .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val star = Dedup.connectedComponentsStar(nodes, "doc_id", pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prop = Dedup.connectedComponents(nodes, "doc_id", pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop, s"trial $trial")
+      withClue(s"trial $trial: ") {
+        assert(ccAllPaths(nodes, pairs).size == nNodes)
+      }
     }
+  }
+
+  test("connectedComponents: deep max-id-first chain and string ids, every path") {
+    import spark.implicits._
+    // a DEEP chain fed max-id-first: during construction the union-find
+    // parent forest chains thousands deep — the shape a recursive find
+    // would overflow on; labels must still be the component min (0)
+    val n = 5000
+    val nodes = (0L until n.toLong).toDF("doc_id")
+    val chain = (0L until (n - 1).toLong).reverse.map(i => (i, i + 1))
+      .toDF("id_a", "id_b").coalesce(1) // one partition: preserves feed order
+    assert(ccAllPaths(nodes, chain) == (0L until n.toLong).map(_ -> 0L).toMap)
+    // string ids: the fast path requires integral ids — every path
+    // takes the star branch, no crash
+    val snodes = Seq("a", "b", "c", "z").toDF("doc_id")
+    val spairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
+    assert(ccAllPaths(snodes, spairs) ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "z" -> "z"))
   }
 
   test("reliable checkpointDir path yields identical labels (both CC algorithms)") {
     import spark.implicits._
-    // chain + clique + singleton — multi-round on both algorithms, so
+    // chain + clique + singleton — multi-round on the star branch, so
     // every round truncates through the RELIABLE df.checkpoint() leg
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
@@ -349,14 +407,12 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L)
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
     try {
-      val prop = Dedup.connectedComponents(nodes, "doc_id", pairs,
-          checkpointDir = Some(dir.toString))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(prop == expected)
-      val star = Dedup.connectedComponentsStar(nodes, "doc_id", pairs,
-          checkpointDir = Some(dir.toString))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == expected)
+      // the driver fast path checkpoints nothing, so binds no directory
+      Dedup.connectedComponents(nodes, "doc_id", pairs,
+        checkpointDir = Some(dir.toString)).collect()
+      assert(dir.toFile.list().isEmpty,
+        "the driver fast path bound a checkpoint dir")
+      assert(ccAllPaths(nodes, pairs, Some(dir.toString)) == expected)
       // the durable leg actually wrote checkpoint files
       val wrote = java.nio.file.Files.walk(dir)
         .filter(java.nio.file.Files.isRegularFile(_)).count()
@@ -1205,44 +1261,6 @@ class DedupSpec extends AnyFunSuite {
     }
     val hl = Dedup.storeHealth(spark, cdir + "/labels").collect()
     assert(hl.head.getAs[Long]("max_files_per_dir") <= 2L)
-  }
-
-  test("connectedComponents localEdgeLimit: driver union-find equals the " +
-      "distributed loop; non-integral ids fall through") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    (1 to 3).foreach { trial =>
-      val nNodes = 300
-      val nodes = (0L until nNodes.toLong).toDF("doc_id")
-      val pairs = Seq.fill(200)(
-        (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val local = Dedup.connectedComponents(nodes, "doc_id", pairs,
-          localEdgeLimit = 1000000L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.connectedComponents(nodes, "doc_id", pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist, s"trial $trial")
-    }
-    // a DEEP chain fed max-id-first: during construction the parent
-    // forest chains thousands deep — the shape a recursive find would
-    // overflow on; labels must still be the component min (0)
-    val n = 5000
-    val nodes = (0L until n.toLong).toDF("doc_id")
-    val chain = (0L until (n - 1).toLong).reverse.map(i => (i, i + 1))
-      .toDF("id_a", "id_b").coalesce(1) // one partition: preserves feed order
-    val got = Dedup.connectedComponents(nodes, "doc_id", chain,
-        localEdgeLimit = 1000000L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L until n.toLong).map(_ -> 0L).toMap)
-    // string ids: the fast path requires integral ids — same labels via
-    // the distributed loop, no crash
-    val snodes = Seq("a", "b", "c", "z").toDF("doc_id")
-    val spairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
-    val sgot = Dedup.connectedComponents(snodes, "doc_id", spairs,
-        localEdgeLimit = 1000000L)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(sgot == Map("a" -> "a", "b" -> "a", "c" -> "a", "z" -> "z"))
   }
 
   test("clusterTableIngest: an empty drop is a no-op (labels and version " +
