@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** S6 — REST geocoding enrichment (`1c. Look for provider
   * locations.R:139-216, 260-345`): the reference calls a places API

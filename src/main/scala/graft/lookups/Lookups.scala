@@ -1,6 +1,6 @@
 package graft.lookups
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.RelationalOps
 import graft.spatial.Spatial

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -645,7 +645,6 @@ private[graft] object TableLayout {
     val fs = fsOf(ss, path)
     val v = snap.version + 1L
     val newDir = new Path(root, genDirName(fam, v))
-    val touchedSet = touchedVals.toSet
     // fold decision BEFORE writing: past MaxGens the new generation
     // absorbs every non-base generation's live rows (minus the
     // touched values, which the replacement supersedes)
@@ -821,7 +820,7 @@ private[graft] object TableLayout {
     * trigger. */
   def filesPerPartition(ss: SparkSession, path: String,
       snap: Snapshot): Map[String, Long] = {
-    val pc = snap.pcol.getOrElse(return Map.empty)
+    if (snap.pcol.isEmpty) return Map.empty
     val root = rootOf(path)
     val fs = fsOf(ss, path)
     snap.gens.flatMap { g =>

@@ -89,7 +89,7 @@ case class BpeSegmentExpr(child: Expression, mergesEnc: String)
   private def segmentWord(s: String, start: Int, end: Int,
       out: scala.collection.mutable.ArrayBuffer[Any]): Unit = {
     // initial symbols: code points (Spark substr counts code points)
-    var syms = new Array[String](end - start)
+    val syms = new Array[String](end - start)
     var n = 0
     var i = start
     while (i < end) {

@@ -27,16 +27,25 @@ object PipelineQueries {
     * suite itself. Correctness does not lean on the sharing: every
     * riding query still hash-matches its own from-scratch DuckDB
     * closure oracle, so a stale or wrong table fails the gate. */
-  private val clusterTableDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def memoClusterTable(s: SparkSession, d: String, tag: String)(
       corpus: => DataFrame): String =
-    clusterTableDirs.computeIfAbsent(
+    memoStore(s, d, "clustertable-" + tag)(dir =>
+      Dedup.clusterTableInit(corpus, "doc_id", "text",
+        dir, n = 3, numHashes = 64, bands = 16, threshold = 0.5))
+
+  /** Build-once store memo behind every shared fixture store (cluster
+    * tables, the text index, the IVF and IVFADC indexes): the first
+    * call per (app, data dir, tag) runs `build` into a fresh scoped
+    * dir, later calls return that dir. */
+  private val storeDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def memoStore(s: SparkSession, d: String, tag: String)(
+      build: String => Unit): String =
+    storeDirs.computeIfAbsent(
       s.sparkContext.applicationId + "|" + d + "|" + tag, _ => {
-        val dir = graft.util.TempDirs.scoped("graft-clustertable-" + tag)
-          .toString + "/store"
-        Dedup.clusterTableInit(corpus, "doc_id", "text",
-          dir, n = 3, numHashes = 64, bands = 16, threshold = 0.5)
+        val dir = graft.util.TempDirs.scoped("graft-" + tag).toString +
+          "/store"
+        build(dir)
         dir
       })
   private def sharedClusterTable(s: SparkSession, d: String): String =
@@ -48,17 +57,6 @@ object PipelineQueries {
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .where(col("doc_id") % 3 =!= 0))
 
-  /** Copy-on-write handoff for gates that MUTATE a cluster table:
-    * file-copy the memoized pristine store into a private dir and
-    * mutate the copy. The thing under test in those gates is the
-    * incremental OPERATOR (ingest / retraction / streamed drops), not
-    * the init — which q_dedup_clusters and the memo's first consumer
-    * already measure — and production maintains ONE standing table
-    * per corpus rather than re-clustering per consumer (the
-    * cluster-once discipline, extended to mutators). Correctness does
-    * not lean on the sharing: every mutating gate still hash-matches
-    * its own from-scratch DuckDB closure oracle over the post-mutation
-    * corpus, so a stale or wrong pristine table fails the gate. */
   /** Build-once memo for the FULL-CORPUS text index (the
     * cluster-table discipline applied to retrieval): q_text_bm25_topk,
     * q_text_phrase and q_text_hybrid_rrf serve the identical
@@ -72,17 +70,10 @@ object PipelineQueries {
     * re-runs these gates in the SAME Spark app, they fail red against
     * the fresh-corpus oracle (safe direction) — use a fresh app per
     * data generation, as Verify/Bench do. */
-  private val textIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sharedTextIndex(s: SparkSession, d: String): String =
-    textIndexDirs.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val p = graft.util.TempDirs.scoped("graft-textidx-shared")
-          .toString + "/index"
-        TextIndex.build(Tables.documents(s, d), "doc_id", "text", p,
-          nBuckets = 32)
-        p
-      })
+    memoStore(s, d, "textidx-shared")(p =>
+      TextIndex.build(Tables.documents(s, d), "doc_id", "text", p,
+        nBuckets = 32))
 
   /** Build-once memo for the trained+appended IVF index (the shared
     * text-index discipline applied to the ANN family): train/build on
@@ -93,21 +84,40 @@ object PipelineQueries {
     * sharing: every consumer still hash-matches its own from-scratch
     * training-replay oracle, so a stale or wrong shared index fails
     * the gate. */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sharedIvfIndex(s: SparkSession, d: String): String =
-    ivfIndexDirs.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d, _ => {
-        val e = Tables.embeddings(s, d)
-        val p = graft.util.TempDirs.scoped("graft-ivf-shared").toString +
-          "/index"
-        Similarity.ivfIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-          "vec_id", "embedding", nCells = 8, iters = 2, path = p)
-        Similarity.ivfIndexAppend(e.filter(col("vec_id") % 10 === 9),
-          "vec_id", "embedding", path = p)
-        p
-      })
+    memoStore(s, d, "ivf-shared") { p =>
+      val e = Tables.embeddings(s, d)
+      Similarity.ivfIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
+        "vec_id", "embedding", nCells = 8, iters = 2, path = p)
+      Similarity.ivfIndexAppend(e.filter(col("vec_id") % 10 === 9),
+        "vec_id", "embedding", path = p)
+    }
 
+  /** The IVFADC twin of [[sharedIvfIndex]]: coarse cells and the
+    * residual codebook trained on the base slice, the held-out tenth
+    * appended — the index q_sim_ann_ivfpq_index serves and the IVFADC
+    * recall, retraction and maintain gates read or clone. */
+  private def sharedIvfPqIndex(s: SparkSession, d: String): String =
+    memoStore(s, d, "ivfpq-shared") { p =>
+      val e = Tables.embeddings(s, d)
+      Similarity.ivfPqIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
+        "vec_id", "embedding", nCells = 8, itersCoarse = 2,
+        m = 4, ks = 4, itersPq = 1, path = p)
+      Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 10 === 9),
+        "vec_id", "embedding", path = p)
+    }
+
+  /** Copy-on-write handoff for gates that MUTATE a cluster table:
+    * file-copy the memoized pristine store into a private dir and
+    * mutate the copy. The thing under test in those gates is the
+    * incremental OPERATOR (ingest / retraction / streamed drops), not
+    * the init — which q_dedup_clusters and the memo's first consumer
+    * already measure — and production maintains ONE standing table
+    * per corpus rather than re-clustering per consumer (the
+    * cluster-once discipline, extended to mutators). Correctness does
+    * not lean on the sharing: every mutating gate still hash-matches
+    * its own from-scratch DuckDB closure oracle over the post-mutation
+    * corpus, so a stale or wrong pristine table fails the gate. */
   private def cowClusterTable(s: SparkSession, src: String,
       tag: String): String = {
     val dst = graft.util.TempDirs.scoped(tag).toString + "/store"
@@ -1780,14 +1790,10 @@ object PipelineQueries {
     // oracle recomputes exact-vs-approx overlap per query in SQL.
     "q_sim_ann_recall" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val path = graft.util.TempDirs.scoped("graft-ivf-recall").toString
-      Similarity.ivfIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-        "vec_id", "embedding", nCells = 8, iters = 2, path = path)
-      Similarity.ivfIndexAppend(e.filter(col("vec_id") % 10 === 9),
-        "vec_id", "embedding", path = path)
+      // read-only: serves the shared build+append index
       Similarity.ivfIndexTopKWithRecall(e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, nProbe = 2, path = path,
-          sampleMod = 1L)
+          "vec_id", "embedding", k = 5, nProbe = 2,
+          path = sharedIvfIndex(s, d), sampleMod = 1L)
         .orderBy("query_id", "rank")
     }),
 
@@ -1912,14 +1918,9 @@ object PipelineQueries {
     // everything — exactly what build+append must reconstruct.
     "q_sim_ann_ivfpq_index" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val path = graft.util.TempDirs.scoped("graft-ivfpq-index").toString
-      Similarity.ivfPqIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-        "vec_id", "embedding", nCells = 8, itersCoarse = 2,
-        m = 4, ks = 4, itersPq = 1, path = path)
-      Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 10 === 9),
-        "vec_id", "embedding", path = path)
       Similarity.ivfPqIndexTopK(e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, nProbe = 2, path = path)
+          "vec_id", "embedding", k = 5, nProbe = 2,
+          path = sharedIvfPqIndex(s, d))
         .orderBy("query_id", "rank")
     }),
 
@@ -1933,12 +1934,9 @@ object PipelineQueries {
     // draw from the full table; retraction never retrains).
     "q_sim_ann_ivfpq_retract" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val path = graft.util.TempDirs.scoped("graft-ivfpq-retr").toString
-      Similarity.ivfPqIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-        "vec_id", "embedding", nCells = 8, itersCoarse = 2,
-        m = 4, ks = 4, itersPq = 1, path = path)
-      Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 10 === 9),
-        "vec_id", "embedding", path = path)
+      // copy-on-write from the shared build+append index
+      val path = cowClusterTable(s, sharedIvfPqIndex(s, d),
+        "graft-ivfpq-retr")
       val gone = e.filter(col("vec_id") % 7 === 3)
         .select(col("vec_id").cast("long")).collect().map(_.getLong(0))
       Similarity.annIndexRetract(s, path, gone.toSeq)
@@ -1954,15 +1952,9 @@ object PipelineQueries {
     // metric inside the hash.
     "q_sim_ann_ivfpq_recall" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val path = graft.util.TempDirs.scoped("graft-ivfpq-recall").toString
-      Similarity.ivfPqIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-        "vec_id", "embedding", nCells = 8, itersCoarse = 2,
-        m = 4, ks = 4, itersPq = 1, path = path)
-      Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 10 === 9),
-        "vec_id", "embedding", path = path)
       Similarity.ivfPqIndexTopKWithRecall(e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, nProbe = 2, path = path,
-          sampleMod = 1L)
+          "vec_id", "embedding", k = 5, nProbe = 2,
+          path = sharedIvfPqIndex(s, d), sampleMod = 1L)
         .orderBy("query_id", "rank")
     }),
 
@@ -2044,12 +2036,9 @@ object PipelineQueries {
     // that silently stops tripping turns the gate red.
     "q_sim_ann_ivfpq_maintain" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val path = graft.util.TempDirs.scoped("graft-ivfpq-maintain").toString
-      Similarity.ivfPqIndexBuild(e.filter(col("vec_id") % 10 =!= 9),
-        "vec_id", "embedding", nCells = 8, itersCoarse = 2,
-        m = 4, ks = 4, itersPq = 1, path = path)
-      Similarity.ivfPqIndexAppend(e.filter(col("vec_id") % 10 === 9),
-        "vec_id", "embedding", path = path)
+      // the rebuild mutates a copy-on-write clone of the shared index
+      val path = cowClusterTable(s, sharedIvfPqIndex(s, d),
+        "graft-ivfpq-maintain")
       val rep = Similarity.ivfPqIndexMaintain(e.filter(col("vec_id") < 10),
         e, "vec_id", "embedding", k = 5, nProbe = 2, path = path,
         recallFloor = 0.999, itersCoarse = 2, itersPq = 1)

@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The RTT fact-table data model (SURVEY.md §1): wide-to-array

@@ -83,6 +83,34 @@ object Similarity {
 
   final case class Scored(query_id: Long, neighbor_id: Long, sim: Double)
 
+  /** Bounded per-query top-k heap of the compiled scoring kernels:
+    * keeps the `k` best `(sim, id)` by sim descending, then id
+    * ascending. The queue dequeues its ordering's MAX, so ordering by
+    * `(-sim, id)` makes the head the WORST kept entry (lowest sim,
+    * then highest id). */
+  private final class TopK(k: Int) {
+    private val h = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+      Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) })
+    def offer(sim: Double, id: Long): Unit =
+      if (h.size < k) h.enqueue((sim, id))
+      else {
+        val (ws, wid) = h.head
+        if (sim > ws || (sim == ws && id < wid)) { h.dequeue(); h.enqueue((sim, id)) }
+      }
+    def iterator: Iterator[(Double, Long)] = h.iterator
+  }
+
+  /** Per-query top-`k` of `(query_id, neighbor_id, sim)` candidate
+    * rows: ranked by the ROUNDED sim (stable across engines and
+    * summation orders), ties to the lower neighbor id. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("bigint"))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id", "sim")
+  }
+
   /** Spark `round(x, d)` semantics on the JVM side (HALF_UP over the
     * canonical decimal repr) — keeps mapPartitions kernels hash-equal
     * to expression-computed results. */
@@ -136,23 +164,14 @@ object Similarity {
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val qs = qB.value
-        // per-query bounded worst-first heap: (sim asc, id desc)
-        // PQ dequeues the ordering's MAX; order by (-sim, id) so the
-        // head is the WORST kept entry (lowest sim, then highest id)
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+        val heaps = qs.map(_ => new TopK(kk))
         it.filter(_._2 != null).foreach { case (cid, cvA) =>
           var qi = 0
           while (qi < qs.length) {
             val (qid, qv) = qs(qi)
             if (qid != cid) {
               val sim = roundHalfUp(dotLoop(qv, cvA), dec)
-              val h = heaps(qi)
-              if (h.size < kk) h.enqueue((sim, cid))
-              else {
-                val (ws, wid) = h.head
-                if (sim > ws || (sim == ws && cid < wid)) { h.dequeue(); h.enqueue((sim, cid)) }
-              }
+              heaps(qi).offer(sim, cid)
             }
             qi += 1
           }
@@ -161,12 +180,7 @@ object Similarity {
           heaps(qi).iterator.map { case (s, cid) => Scored(qid, cid, s) }
         }
       }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.toDF()
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored.toDF(), k)
   }
 
   /** Deterministic random hyperplanes: `planes` x `dim` components in
@@ -249,11 +263,7 @@ object Similarity {
       .join(broadcast(qv), Seq("query_id"))
       .join(cv, Seq("neighbor_id"))
       .withColumn("sim", round(dot(col("qv"), col("cv")), simDecimals))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored, k)
   }
 
   private def dimOf(df: DataFrame, vecCol: String): Int =
@@ -291,11 +301,8 @@ object Similarity {
     * under the final centroids. */
   def kmeansFitInt8(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
-    val codes = quantizeInt8(df, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut) // consumed iters+1 times
-      .cache()
-    val cents = kmeansTrain(codes, k, iters)
+    val codes = trainingCodes(df, idCol, vecCol)
+    val cents = kmeansTrain(codes, k, iters).cents
     val assigned = withAssignedCell(codes, "codes", cents)
       .select(col("id"), col("cell"))
     // training collects are eager; the returned assignment still reads
@@ -346,11 +353,31 @@ object Similarity {
       .withColumn("res", col("__cr.res"))
       .drop("__cr")
 
+  /** `(id long, codes)`: the int8 codes of `df` keyed by a long id —
+    * the relation every IVF/PQ training, assignment and append reads. */
+  private def idCodes(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    quantizeInt8(df, idCol, vecCol)
+      .select(col(idCol).cast("long").as("id"), col("codes"))
+
+  /** [[idCodes]] fanned out and cached: the training relation, scanned
+    * `iters + 1` times by a Lloyd loop and once more by assignment.
+    * The caller unpersists it. */
+  private def trainingCodes(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    idCodes(df, idCol, vecCol)
+      .transform(graft.util.Parallelism.fanOut)
+      .cache()
+
+  /** A trained coarse quantizer: cell -> milli-grid centroid, and `n`,
+    * the rows the last Lloyd iteration assigned (the training corpus
+    * size, read off the update aggregate — no separate count job). */
+  private final case class Coarse(cents: Map[Int, Array[Long]], n: Long)
+
   /** The Lloyd training loop over a cached `(id, codes)` relation —
-    * see [[kmeansFitInt8]] for the exactness and scale contract.
-    * Returns the trained cell -> milli-grid centroid map. */
+    * see [[kmeansFitInt8]] for the exactness and scale contract. */
   private def kmeansTrain(codes: DataFrame, k: Int, iters: Int,
-      warmInit: Option[Map[Int, Array[Long]]] = None): Map[Int, Array[Long]] = {
+      warmInit: Option[Map[Int, Array[Long]]] = None): Coarse = {
     require(k >= 1, "k must be positive")
     require(iters >= 1, "iters must be positive")
     var cents: Map[Int, Array[Long]] = warmInit match {
@@ -370,6 +397,7 @@ object Similarity {
         }.toMap
     }
     val dim = cents.head._2.length
+    var nAssigned = 0L
     for (_ <- 1 to iters) {
       // per-cell vector sums via the native band_sum aggregate: ONE
       // dim-array row per cell through the (map-side-combined)
@@ -388,6 +416,7 @@ object Similarity {
         .collect() // k rows, each a dim-array — dimension-sized
         .map(r => r.getInt(0) -> (r.getLong(1), r.getSeq[Long](2)))
         .toMap
+      nAssigned = sums.values.map(_._1).sum
       cents = cents.map { case (c, old) =>
         sums.get(c) match {
           case Some((n, sx)) =>
@@ -399,7 +428,7 @@ object Similarity {
         }
       }
     }
-    cents
+    Coarse(cents, nAssigned)
   }
 
   /** END-TO-END TRAINED IVF over int8 codes: train the coarse
@@ -424,35 +453,11 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, nCells: Int, nProbe: Int,
       iters: Int = 2, simDecimals: Int = 4): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, "need 1 <= nProbe <= nCells")
-    val corpusCodes = quantizeInt8(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut)
-      .cache()
-    val cents = kmeansTrain(corpusCodes, nCells, iters)
-    val assigned = withAssignedCell(corpusCodes, "codes", cents)
-      .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
-        col("cell"))
-    // nProbe nearest cells per query by the same exact distance
-    // ((distance, cell-id) order)
-    val qProbes = withProbedCells(
-        quantizeInt8(queries, idCol, vecCol)
-          .select(col(idCol).cast("long").as("query_id"),
-            col("codes").as("qcodes")),
-        "qcodes", cents, nProbe)
-      .select(col("query_id"), col("qcodes"),
-        nsqOf(col("qcodes")).as("qnsq"), col("cell"))
-    val scored = broadcast(qProbes).join(assigned, Seq("cell"))
-      .where(col("id") =!= col("query_id") &&
-        col("qnsq") > 0L && col("nsq") > 0L)
-      .withColumn("sim", round(
-        codesDot(col("qcodes"), col("codes")).cast("double") /
-          (sqrt(col("qnsq").cast("double")) * sqrt(col("nsq").cast("double"))),
-        simDecimals))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim").desc, col("id"))
-    val topk = scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
+    val corpusCodes = trainingCodes(corpus, idCol, vecCol)
+    val cents = kmeansTrain(corpusCodes, nCells, iters).cents
+    val assigned = postingsOf(corpusCodes, cents)
+    val topk = probeAndScore(queries, idCol, vecCol, k, nProbe, cents,
+      simDecimals)(_ => assigned)
     // training collects are eager; the serve plan still reads the
     // cache, so drop it only after the returned plan's first
     // consumption (unpersisting NOW would recompute the corpus chain
@@ -463,6 +468,43 @@ object Similarity {
     topk
   }
 
+  /** `(id, codes)` -> the plain-IVF postings `(id, codes, nsq, cell)`
+    * under `cents`: one assignment pass, map-side. */
+  private def postingsOf(codes: DataFrame,
+      cents: Map[Int, Array[Long]]): DataFrame =
+    withAssignedCell(codes, "codes", cents)
+      .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
+        col("cell"))
+
+  /** The plain-IVF probe-and-score serve, shared by the one-shot
+    * [[ivfTopKQuantized]] and the persistent [[ivfIndexTopK]]: each
+    * query's `nProbe` nearest cells under `cents` (exact milli
+    * distance, (distance, cell-id) order), broadcast into a join with
+    * the candidate postings `(id, codes, nsq, cell)` that `candidates`
+    * derives from the query-probe relation, quantized cosine by the
+    * exact int dot, and a per-query top-k window. Zero-norm vectors
+    * score null and are filtered, matching the cosine contract. */
+  private def probeAndScore(queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, nProbe: Int, cents: Map[Int, Array[Long]],
+      simDecimals: Int)(candidates: DataFrame => DataFrame): DataFrame = {
+    require(nProbe >= 1 && nProbe <= cents.size,
+      "need 1 <= nProbe <= nCells")
+    val qProbes = withProbedCells(
+        idCodes(queries, idCol, vecCol)
+          .select(col("id").as("query_id"), col("codes").as("qcodes")),
+        "qcodes", cents, nProbe)
+      .select(col("query_id"), col("qcodes"),
+        nsqOf(col("qcodes")).as("qnsq"), col("cell"))
+    val scored = broadcast(qProbes).join(candidates(qProbes), Seq("cell"))
+      .where(col("id") =!= col("query_id") &&
+        col("qnsq") > 0L && col("nsq") > 0L)
+      .withColumn("sim", round(
+        codesDot(col("qcodes"), col("codes")).cast("double") /
+          (sqrt(col("qnsq").cast("double")) * sqrt(col("nsq").cast("double"))),
+        simDecimals))
+    rankTopK(scored.withColumnRenamed("id", "neighbor_id"), k)
+  }
+
   /** Exact int64 squared norm of an int8 codes vector. */
   private def nsqOf(c: Column): Column =
     aggregate(c, lit(0L), (a, x) => a + x * x)
@@ -471,21 +513,54 @@ object Similarity {
   private def codesDot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, p) => acc + p)
 
-  /** Read a persisted centroid table back as the trained cell -> cent
-    * map (dimension-sized BY CONSTRUCTION: nCells x dim longs — the
-    * same query-side collect contract as the ANN probe tables).
-    * Resolves the live snapshot; callers needing artifact consistency
-    * across several reads resolve ONE [[IndexLayout.Snapshot]] and use
-    * [[readCentsAt]]. */
-  private def readCents(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[Int, Array[Long]] =
-    readCentsAt(spark, path.stripSuffix("/") + "/" +
-      IndexLayout.resolve(spark, path).centroids)
-
+  /** The persisted centroid table of `snap` as the trained cell ->
+    * cent map (dimension-sized BY CONSTRUCTION: nCells x dim longs —
+    * the same query-side collect contract as the ANN probe tables).
+    * Callers reading several artifacts resolve ONE snapshot first. */
   private def readCentsAt(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Map[Int, Array[Long]] =
-    spark.read.parquet(dir).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap
+      path: String, snap: IndexLayout.Snapshot): Map[Int, Array[Long]] =
+    spark.read.parquet(path.stripSuffix("/") + "/" + snap.centroids)
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap
+
+  /** Write one index version's coarse centroids: `centroids-v<v>`, a
+    * single dimension-sized parquet file. */
+  private def writeCents(spark: org.apache.spark.sql.SparkSession,
+      path: String, v: Long, cents: Map[Int, Array[Long]]): Unit = {
+    import spark.implicits._
+    cents.toSeq.sortBy(_._1).map { case (c, cent) => (c, cent.toSeq) }
+      .toDF("cell", "cent")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"${path.stripSuffix("/")}/centroids-v$v")
+  }
+
+  /** Write one index version's residual codebook: `pqcents-v<v>`. */
+  private def writePqCents(spark: org.apache.spark.sql.SparkSession,
+      path: String, v: Long, rcb: PqCodebook): Unit = {
+    import spark.implicits._
+    rcb.cents.toSeq.sortBy(_._1)
+      .map { case ((j, c), cent) => (j, c, cent.toSeq) }
+      .toDF("j", "cell", "cent")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"${path.stripSuffix("/")}/pqcents-v$v")
+  }
+
+  /** Write one index version's postings, `postings-g<v>` PARTITIONED
+    * BY CELL — the on-disk inverted file. Co-located: one shuffle on
+    * cell gives ~one file per inverted list instead of one per
+    * (task x cell). */
+  private def writePostings(postings: DataFrame, path: String,
+      v: Long): Unit =
+    postings.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"${path.stripSuffix("/")}/postings-g$v")
+
+  /** The snapshot a full (re)build publishes: version `v`'s artifacts,
+    * one postings generation, no tombstones. */
+  private def freshSnapshot(v: Long, pq: Boolean,
+      repoch: Long): IndexLayout.Snapshot =
+    IndexLayout.Snapshot(v, s"centroids-v$v",
+      if (pq) Some(s"pqcents-v$v") else None,
+      Seq(IndexLayout.Gen(s"postings-g$v", Nil)), repoch = repoch)
 
   /** The live postings relation of the index at `path` (union over
     * postings generations minus superseded cells — see
@@ -520,44 +595,39 @@ object Similarity {
   def ivfIndexBuild(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, iters: Int, path: String): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val root = path.stripSuffix("/")
     // single-writer lease (the Dedup-store discipline): a build racing
     // an append/maintain on the same path would silently lose the
     // other writer's postings at overwrite time — make it loud instead
     graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
     val v = IndexLayout.nextVersion(spark, path)
-    val codes = quantizeInt8(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut) // training + assignment
-      .cache()
-    val cents = kmeansTrain(codes, nCells, iters)
-    cents.toSeq.sortBy(_._1).map { case (c, v2) => (c, v2.toSeq) }
-      .toDF("cell", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids-v$v")
+    val codes = trainingCodes(corpus, idCol, vecCol)
+    val coarse = kmeansTrain(codes, nCells, iters)
+    writeCents(spark, path, v, coarse.cents)
     // pin the TRAINING-TIME corpus size next to the centroids: index
     // maintenance sizes its retrain cell count from the growth ratio
     // (cells' = cells x sqrt(n_now / n_trained)) — preserving the
     // builder's cells-per-point density choice without re-deriving it
-    Seq((codes.count(), nCells)).toDF("n", "cells")
-      .coalesce(1).write.mode("overwrite").parquet(path + "/train.meta")
-    withAssignedCell(codes, "codes", cents)
-      .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
-        col("cell"))
-      // co-located postings write: one shuffle on cell -> ~one file
-      // per inverted list instead of one per (task x cell)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/postings-g$v")
+    writeTrainMeta(spark, path, coarse.n, nCells)
+    writePostings(postingsOf(codes, coarse.cents), path, v)
     codes.unpersist()
     // atomic publish: readers flip from the previous snapshot (if
     // any) to this one manifest-at-a-time, never mid-write
-    IndexLayout.commit(spark, path, IndexLayout.Snapshot(v,
-      s"centroids-v$v", None, Seq(IndexLayout.Gen(s"postings-g$v", Nil)),
-      repoch = resetRepoch(spark, path)),
-      ctx.token)
+    IndexLayout.commit(spark, path,
+      freshSnapshot(v, pq = false, resetRepoch(spark, path)), ctx.token)
     IndexLayout.gc(spark, path)
     }
+  }
+
+  /** Pin `(n, cells)` — the corpus size and cell count the coarse
+    * quantizer was trained at — in `train.meta`. Plain overwrite: a
+    * crash in its delete-then-write window only costs the pin (the
+    * next maintain falls back to the fixed count and re-writes it),
+    * never the index. */
+  private def writeTrainMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String, n: Long, cells: Int): Unit = {
+    import spark.implicits._
+    Seq((n, cells)).toDF("n", "cells")
+      .coalesce(1).write.mode("overwrite").parquet(path + "/train.meta")
   }
 
   /** PERSISTENT IVF INDEX — incremental append: assign a delta batch
@@ -575,20 +645,12 @@ object Similarity {
     graft.ops.StoreLock.withLock(spark, path) {
       val snap = IndexLayout.resolve(spark, path)
       requireNotTombstoned(delta, idCol, snap, path)
-      val cents = readCentsAt(spark,
-        path.stripSuffix("/") + "/" + snap.centroids)
       // additive append into the NEWEST generation (the core layout's
       // file-atomic append): a concurrent reader's snapshot stays
       // complete — it just may not see the newest rows yet; no
       // manifest change needed
-      IndexLayout.appendPostings(
-        withAssignedCell(
-            quantizeInt8(delta, idCol, vecCol)
-              .select(col(idCol).cast("long").as("id"), col("codes")),
-            "codes", cents)
-          .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
-            col("cell")),
-        path)
+      IndexLayout.appendPostings(postingsOf(idCodes(delta, idCol, vecCol),
+        readCentsAt(spark, path, snap)), path)
     }
   }
 
@@ -615,41 +677,20 @@ object Similarity {
       vecCol: String, k: Int, nProbe: Int, path: String,
       snap: IndexLayout.Snapshot, simDecimals: Int): DataFrame = {
     val spark = queries.sparkSession
-    val cents = readCentsAt(spark,
-      path.stripSuffix("/") + "/" + snap.centroids)
-    require(nProbe >= 1 && nProbe <= cents.size,
-      "need 1 <= nProbe <= nCells")
-    val qProbes = withProbedCells(
-        quantizeInt8(queries, idCol, vecCol)
-          .select(col(idCol).cast("long").as("query_id"),
-            col("codes").as("qcodes")),
-        "qcodes", cents, nProbe)
-      .select(col("query_id"), col("qcodes"),
-        nsqOf(col("qcodes")).as("qnsq"), col("cell"))
-    // no cache: the probe derivation is query-side work (bounded by
-    // contract) and the result is lazy — a cache here would outlive
-    // the call and leak storage memory across serving calls. The
-    // distinct-cells collect recomputes it once; the broadcast join
-    // recomputes it once more.
-    val probed = qProbes.select("cell").distinct()
-      .collect().map(_.getInt(0)) // query-bounded by contract
-    // the probed-cell filter pushes through the generation Union into
-    // every child scan — partition pruning per generation
-    val postings = IndexLayout.postingsDf(spark, path, snap)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    val scored = broadcast(qProbes).join(postings, Seq("cell"))
-      .where(col("id") =!= col("query_id") &&
-        col("qnsq") > 0L && col("nsq") > 0L)
-      .withColumn("sim", round(
-        codesDot(col("qcodes"), col("codes")).cast("double") /
-          (sqrt(col("qnsq").cast("double")) * sqrt(col("nsq").cast("double"))),
-        simDecimals))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        col("sim"))
+    probeAndScore(queries, idCol, vecCol, k, nProbe,
+        readCentsAt(spark, path, snap), simDecimals) { qProbes =>
+      // no cache: the probe derivation is query-side work (bounded by
+      // contract) and the result is lazy — a cache here would outlive
+      // the call and leak storage memory across serving calls. The
+      // distinct-cells collect recomputes it once; the broadcast join
+      // recomputes it once more.
+      val probed = qProbes.select("cell").distinct()
+        .collect().map(_.getInt(0)) // query-bounded by contract
+      // the probed-cell filter pushes through the generation Union into
+      // every child scan — partition pruning per generation
+      IndexLayout.postingsDf(spark, path, snap)
+        .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    }
   }
 
   /** [[ivfIndexTopK]] with RECALL@K AS AN OBSERVABLE — the index-
@@ -669,7 +710,20 @@ object Similarity {
     * full-scan leg rides on a sliver of the query stream. */
   def ivfIndexTopKWithRecall(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int, path: String,
-      sampleMod: Long = 10L, simDecimals: Int = 4): DataFrame = {
+      sampleMod: Long = 10L, simDecimals: Int = 4): DataFrame =
+    withRecall(queries, idCol, nProbe, path, sampleMod) { (q, np, snap) =>
+      ivfIndexTopKAt(q, idCol, vecCol, k, np, path, snap, simDecimals)
+    }
+
+  /** The recall@k observable of either index family: `serveAt(q,
+    * nProbe, snap)` is the family's snapshot serve. The approx leg
+    * serves `queries` at `nProbe`; the exact leg serves the
+    * `idCol % sampleMod == 0` sample probing ALL cells of the same
+    * snapshot, and each approx row gains `n_exact`, `n_hit` and
+    * `recall_at_k` (null for unsampled queries). */
+  private def withRecall(queries: DataFrame, idCol: String, nProbe: Int,
+      path: String, sampleMod: Long)(
+      serveAt: (DataFrame, Int, IndexLayout.Snapshot) => DataFrame): DataFrame = {
     // ONE snapshot for BOTH legs and the cell count: a maintenance /
     // compaction commit (or append) landing between independent
     // resolutions would compare one index version's approx serve
@@ -677,13 +731,10 @@ object Similarity {
     // (tripping maintain's floor on a healthy index) or read high
     val spark = queries.sparkSession
     val snap = IndexLayout.resolve(spark, path)
-    val approx = ivfIndexTopKAt(queries, idCol, vecCol, k, nProbe,
-      path, snap, simDecimals)
-    val nCells = readCentsAt(spark,
-      path.stripSuffix("/") + "/" + snap.centroids).size
-    val sampled = queries.filter(col(idCol) % sampleMod === 0)
-    val exact = ivfIndexTopKAt(sampled, idCol, vecCol, k,
-      nProbe = nCells, path, snap, simDecimals)
+    val approx = serveAt(queries, nProbe, snap)
+    val nCells = readCentsAt(spark, path, snap).size
+    val exact = serveAt(queries.filter(col(idCol) % sampleMod === 0),
+      nCells, snap)
     val nEx = exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
     val hits = approx
       .join(exact.select(col("query_id"), col("neighbor_id")),
@@ -765,29 +816,12 @@ object Similarity {
     * same cost build paid, only paid when the floor trips). */
   def ivfIndexMaintain(queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int, path: String, recallFloor: Double,
-      iters: Int = 2): IvfMaintainReport = {
-    require(recallFloor >= 0.0 && recallFloor <= 1.0,
-      "recallFloor must be in [0, 1]")
+      iters: Int = 2): IvfMaintainReport =
+    maintainIndex("ivfIndexMaintain", queries, k, path, recallFloor,
+        ivfIndexTopKWithRecall(queries, idCol, vecCol, k, nProbe, path,
+          sampleMod = 1L)) { (snap, v) =>
     val spark = queries.sparkSession
-    def meanRecall(): Double = {
-      val r = ivfIndexTopKWithRecall(queries, idCol, vecCol, k, nProbe,
-          path, sampleMod = 1L)
-        .select("query_id", "recall_at_k").distinct()
-        .agg(avg("recall_at_k")).head()
-      if (r.isNullAt(0)) 1.0 else r.getDouble(0)
-    }
-    val before = meanRecall()
-    if (before >= recallFloor) return IvfMaintainReport(before, false, None)
-    log.info(f"ivfIndexMaintain: recall@$k $before%.4f < floor " +
-      f"$recallFloor%.4f at $path — retraining")
-    // the rebuild-and-publish is a store mutation like any other:
-    // lease it so a concurrent append cannot land between the
-    // postings read and the commit and be silently dropped from the
-    // rebuilt index
-    graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
-    val root = path.stripSuffix("/")
-    val snap = IndexLayout.resolve(spark, path)
-    val nCells = readCentsAt(spark, s"$root/${snap.centroids}").size
+    val nCells = readCentsAt(spark, path, snap).size
     val codes = IndexLayout.postingsDf(spark, path, snap)
       .select(col("id"), col("codes"))
       .transform(graft.util.Parallelism.fanOut) // training + assignment
@@ -819,50 +853,66 @@ object Similarity {
     if (kCells != nCells)
       log.info(s"ivfIndexMaintain: adaptive retrain $nCells -> $kCells " +
         s"cells ($nNow postings)")
-    val cents = kmeansTrain(codes, kCells, iters)
-    // versioned-snapshot publish (see IndexLayout): BOTH rebuilt
-    // artifacts land in fresh directories, then ONE atomic manifest
-    // write flips readers over — a serve racing this retrain reads
-    // the old snapshot or the new one, never a rename hole, and a
-    // crash anywhere before the commit leaves the old snapshot live
-    // (the orphaned fresh dirs are GC'd by the next maintenance)
-    val v = snap.version + 1
-    withAssignedCell(codes, "codes", cents)
-      .select(col("id"), col("codes"), nsqOf(col("codes")).as("nsq"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/postings-g$v")
+    val cents = kmeansTrain(codes, kCells, iters).cents
+    writePostings(postingsOf(codes, cents), path, v)
     codes.unpersist()
-    import spark.implicits._
-    cents.toSeq.sortBy(_._1).map { case (c, vv) => (c, vv.toSeq) }
-      .toDF("cell", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids-v$v")
-    IndexLayout.commit(spark, path, IndexLayout.Snapshot(v,
-      s"centroids-v$v", None,
-      Seq(IndexLayout.Gen(s"postings-g$v", Nil)),
-      // the rebuild read TOMBSTONE-FILTERED postings and resets the
-      // list: bump the retraction epoch (takedown-replay fence)
-      repoch = graft.ops.Tombstones.nextEpoch(
-        snap.repoch, snap.tombstones)), ctx.token)
-    IndexLayout.gc(spark, path)
+    writeCents(spark, path, v, cents)
     // re-pin the training size ONLY when the cell count actually
     // changed (or no pin existed yet): a maintain that merely
     // re-placed centroids must keep the prior (n0, c0) baseline, so
     // the growth ratio stays CUMULATIVE since the last resize —
     // re-pinning every maintain would reset the 4x hysteresis each
     // pass and sub-4x-per-maintain growth would never trigger a
-    // resize despite unbounded cumulative growth. Plain overwrite: a
-    // crash in its delete-then-write window only costs the pin (the
-    // next maintain falls back to the fixed count and re-writes it),
-    // never the index.
-    if (kCells != nCells || pinned.isEmpty)
-      Seq((nNow, kCells)).toDF("n", "cells")
-        .coalesce(1).write.mode("overwrite").parquet(path + "/train.meta")
-    val after = meanRecall()
-    log.info(f"ivfIndexMaintain: retrained $path — recall@$k " +
-      f"$before%.4f -> $after%.4f")
-    IvfMaintainReport(before, retrained = true, Some(after))
+    // resize despite unbounded cumulative growth. Written after the
+    // commit: the pin describes the live centroids.
+    () => if (kCells != nCells || pinned.isEmpty)
+      writeTrainMeta(spark, path, nNow, kCells)
+    }
+
+  /** The maintain protocol both index families share: measure served
+    * mean recall@k over `queries` (`recall`, the family's recall
+    * observable with every query sampled); at or above `recallFloor`, stop. Otherwise, under the
+    * single-writer lease — so a concurrent append cannot land between
+    * the rebuild's read and the commit and be silently dropped —
+    * resolve the live snapshot, let `rebuild(snap, v)` write version
+    * `v`'s artifacts to fresh directories, publish them in ONE atomic
+    * manifest commit (a serve racing the rebuild reads the old or the
+    * new snapshot, never a torn artifact set; a crash before the
+    * commit leaves the old snapshot live, orphans GC'd), run the
+    * post-commit step `rebuild` returned, and re-measure. The rebuild
+    * folds tombstoned ids out and the fresh snapshot resets the list,
+    * so the commit bumps the retraction epoch (takedown-replay fence). */
+  private def maintainIndex(what: String, queries: DataFrame, k: Int,
+      path: String, recallFloor: Double, recall: => DataFrame)(
+      rebuild: (IndexLayout.Snapshot, Long) => () => Unit): IvfMaintainReport = {
+    require(recallFloor >= 0.0 && recallFloor <= 1.0,
+      "recallFloor must be in [0, 1]")
+    val spark = queries.sparkSession
+    def meanRecall(): Double = {
+      val r = recall.select("query_id", "recall_at_k").distinct()
+        .agg(avg("recall_at_k")).head()
+      if (r.isNullAt(0)) 1.0 else r.getDouble(0)
+    }
+    val before = meanRecall()
+    if (before >= recallFloor) return IvfMaintainReport(before, false, None)
+    log.info(f"$what: recall@$k $before%.4f < floor $recallFloor%.4f " +
+      f"at $path — rebuilding")
+    graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
+      val snap = IndexLayout.resolve(spark, path)
+      val v = snap.version + 1
+      val afterCommit = rebuild(snap, v)
+      // the rebuilt index keeps its family: a residual codebook iff
+      // the live snapshot has one
+      IndexLayout.commit(spark, path, freshSnapshot(v,
+        snap.pqcents.isDefined,
+        graft.ops.Tombstones.nextEpoch(snap.repoch, snap.tombstones)),
+        ctx.token)
+      IndexLayout.gc(spark, path)
+      afterCommit()
+      val after = meanRecall()
+      log.info(f"$what: rebuilt $path — recall@$k " +
+        f"$before%.4f -> $after%.4f")
+      IvfMaintainReport(before, retrained = true, Some(after))
     }
   }
 
@@ -912,11 +962,8 @@ object Similarity {
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val byCell = qB.value
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-        def heapFor(qid: Long) = heaps.getOrElseUpdate(qid,
-          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-            Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+        val heaps = scala.collection.mutable.Map.empty[Long, TopK]
+        def heapFor(qid: Long) = heaps.getOrElseUpdate(qid, new TopK(kk))
         it.filter(_._2 != null).foreach { case (cid, cvA) =>
           val cell = {
             // assign this corpus vector to its nearest centroid
@@ -931,12 +978,7 @@ object Similarity {
           byCell.getOrElse(cell, Array.empty).foreach { case (qid, qv) =>
             if (qid != cid) {
               val sim = roundHalfUp(dotLoop(qv, cvA), dec)
-              val h = heapFor(qid)
-              if (h.size < kk) h.enqueue((sim, cid))
-              else {
-                val (ws, wid) = h.head
-                if (sim > ws || (sim == ws && cid < wid)) { h.dequeue(); h.enqueue((sim, cid)) }
-              }
+              heapFor(qid).offer(sim, cid)
             }
           }
         }
@@ -944,12 +986,7 @@ object Similarity {
           h.iterator.map { case (s, cid) => Scored(qid, cid, s) }
         }
       }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.toDF()
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored.toDF(), k)
   }
 
   /** EXACT all-pairs cosine near-dup above `threshold` — brute force,
@@ -1036,8 +1073,7 @@ object Similarity {
       .as[(Long, Array[Long])]
       .mapPartitions { it =>
         val qs = qB.value
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+        val heaps = qs.map(_ => new TopK(kk))
         it.foreach { case (cid, cc) =>
           var nb = 0L; var i = 0
           while (i < cc.length) { nb += cc(i) * cc(i); i += 1 }
@@ -1053,12 +1089,7 @@ object Similarity {
                 }
                 val sim = roundHalfUp(
                   d.toDouble / (math.sqrt(na.toDouble) * nbD), dec)
-                val h = heaps(qi)
-                if (h.size < kk) h.enqueue((sim, cid))
-                else {
-                  val (ws, wid) = h.head
-                  if (sim > ws || (sim == ws && cid < wid)) { h.dequeue(); h.enqueue((sim, cid)) }
-                }
+                heaps(qi).offer(sim, cid)
               }
               qi += 1
             }
@@ -1068,12 +1099,7 @@ object Similarity {
           heaps(qi).iterator.map { case (s, cid) => Scored(qid, cid, s) }
         }
       }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.toDF()
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored.toDF(), k)
   }
 
   /** Corpus augmented with a cosine-identical PLANTED copy of every
@@ -1227,10 +1253,7 @@ object Similarity {
     val dim = dimOf(df, vecCol)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    val codes = quantizeInt8(df, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut) // consumed iters+1 times
-      .cache()
+    val codes = trainingCodes(df, idCol, vecCol)
     // (id, j, sub): every subspace of every vector, one scan; subs are
     // pre-scaled to the milli grid so the generic Lloyd loop's
     // (x - cent)^2 / round(sum / n) arithmetic is bit-identical to the
@@ -1313,8 +1336,7 @@ object Similarity {
     import ss.implicits._
     val cbB = ss.sparkContext.broadcast(cb.dense)
     val (m, dsub) = (cb.m, cb.dsub)
-    quantizeInt8(df, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
+    idCodes(df, idCol, vecCol)
       .as[(Long, Array[Long])]
       .mapPartitions { it =>
         val cents = cbB.value
@@ -1413,8 +1435,7 @@ object Similarity {
       .mapPartitions { it =>
         val qs = qB.value
         val cnT = cnB.value
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+        val heaps = qs.map(_ => new TopK(kk))
         it.foreach { case (cid, codes, nsq) =>
           if (nsq != 0L) {
             // |x_hat|^2: m lookups, exact
@@ -1430,12 +1451,7 @@ object Similarity {
                   while (jj < mm) { d += ip(jj)(codes(jj)); jj += 1 }
                   val sim = roundHalfUp(
                     d.toDouble / (math.sqrt(q2.toDouble) * xD), dec)
-                  val h = heaps(qi)
-                  if (h.size < kk) h.enqueue((sim, cid))
-                  else {
-                    val (ws, wid) = h.head
-                    if (sim > ws || (sim == ws && cid < wid)) { h.dequeue(); h.enqueue((sim, cid)) }
-                  }
+                  heaps(qi).offer(sim, cid)
                 }
                 qi += 1
               }
@@ -1446,12 +1462,7 @@ object Similarity {
           heaps(qi).iterator.map { case (s, cid) => Scored(qid, cid, s) }
         }
       }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.toDF()
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored.toDF(), k)
   }
 
   /** End-to-end PQ: train the codebook on the corpus, encode it, and
@@ -1494,27 +1505,45 @@ object Similarity {
       itersCoarse: Int = 2, m: Int = 4, ks: Int = 4, itersPq: Int = 1,
       simDecimals: Int = 4): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, "need 1 <= nProbe <= nCells")
-    val dim = dimOf(corpus, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    // coarse quantizer (the ivfTopKQuantized training path)
-    val codes = quantizeInt8(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut)
-      .cache()
-    val coarse = kmeansTrain(codes, nCells, itersCoarse)
-    val res = ivfPqResiduals(codes, coarse).cache()
-    val rcb = ivfPqTrainResidual(res, m, dsub, ks, itersPq)
-    val served = ivfPqServe(queries, ivfPqEncodeRes(res, rcb), coarse,
-      rcb, idCol, vecCol, k, nProbe, simDecimals)
+    val t = ivfPqTrain(corpus, idCol, vecCol, nCells, itersCoarse, m, ks,
+      itersPq)
+    val encoded = ivfPqEncodeRes(t.res, t.rcb)
+    val served = ivfPqServe(queries, t.coarse, t.rcb, idCol, vecCol, k,
+      nProbe, simDecimals)(_ => encoded)
     // training is done (Lloyd collects are eager), but the returned
     // serve plan still reads both caches — drop them once a completed
     // action consumes the serve plan (plan-scoped: see
     // DeferredUnpersist; an eager unpersist recomputed the corpus
     // chain inside the serve, measured 4-10x on the trained-IVF gate)
     graft.util.DeferredUnpersist.afterConsumed(
-      corpus.sparkSession, served, res, codes)
+      corpus.sparkSession, served, t.res, t.codes)
     served
+  }
+
+  /** A trained IVFADC model: the cached training codes and coarse
+    * residuals (the caller unpersists both), the coarse centroids and
+    * the residual codebook. */
+  private final case class IvfPqTrained(codes: DataFrame,
+      coarse: Map[Int, Array[Long]], res: DataFrame, rcb: PqCodebook)
+
+  /** IVFADC TRAINING, shared by [[ivfPqTopK]] and the persistent
+    * builds: the coarse Lloyd loop over the corpus codes, the coarse
+    * residuals, and the residual-codebook Lloyd loop over them.
+    * `warmCoarse` / `warmRcb` seed the two loops from live artifacts
+    * (the drift-rebuild warm start) instead of the lowest-id sample —
+    * identical per-iteration arithmetic either way. */
+  private def ivfPqTrain(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, itersCoarse: Int, m: Int, ks: Int, itersPq: Int,
+      warmCoarse: Option[Map[Int, Array[Long]]] = None,
+      warmRcb: Option[PqCodebook] = None): IvfPqTrained = {
+    val dim = dimOf(corpus, vecCol)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    val codes = trainingCodes(corpus, idCol, vecCol)
+    val coarse = kmeansTrain(codes, nCells, itersCoarse, warmCoarse).cents
+    val res = ivfPqResiduals(codes, coarse).cache()
+    val rcb = ivfPqTrainResidual(res, m, dim / m, ks, itersPq,
+      warmRcb.map(_.cents))
+    IvfPqTrained(codes, coarse, res, rcb)
   }
 
   /** Coarse assignment + milli-grid residuals: `(id, codes)` ->
@@ -1531,7 +1560,7 @@ object Similarity {
     * `warmSeeds` (the live codebook, for drift-rebuild warm starts). */
   private def ivfPqTrainResidual(res: DataFrame, m: Int, dsub: Int,
       ks: Int, iters: Int,
-      warmSeeds: Option[Map[(Int, Int), Array[Long]]] = None): PqCodebook = {
+      warmSeeds: Option[Map[(Int, Int), Array[Long]]]): PqCodebook = {
     val sub = res.select(col("id"),
       posexplode(array((0 until m).map(j =>
         slice(col("res"), j * dsub + 1, dsub)): _*)).as(Seq("j", "sub")))
@@ -1592,11 +1621,14 @@ object Similarity {
 
   /** ADC serve over an IVFADC code relation `(id, cell, pq_codes,
     * nsq)` — see [[ivfPqTopK]] for the arithmetic and scale
-    * contract. */
-  private def ivfPqServe(queries: DataFrame, encoded: DataFrame,
+    * contract. The queries are collected once; `candidates` gets the
+    * union of their probed cells and returns the code relation to
+    * scan (the persistent index prunes its postings by it). */
+  private def ivfPqServe(queries: DataFrame,
       coarse: Map[Int, Array[Long]], rcb: PqCodebook, idCol: String,
-      vecCol: String, k: Int, nProbe: Int, simDecimals: Int): DataFrame = {
-    val ss = encoded.sparkSession
+      vecCol: String, k: Int, nProbe: Int, simDecimals: Int)(
+      candidates: Seq[Int] => DataFrame): DataFrame = {
+    val ss = queries.sparkSession
     import ss.implicits._
     val nCells = coarse.size
     val m = rcb.m; val ks = rcb.ks; val dsub = rcb.dsub
@@ -1624,8 +1656,7 @@ object Similarity {
     }
     // per-query: probed cells (exact milli distance, tie lower cell),
     // dot-with-coarse per cell, residual LUTs, milli norm
-    val qArr = quantizeInt8(queries, idCol, vecCol)
-      .select(col(idCol).cast("long"), col("codes"))
+    val qArr = idCodes(queries, idCol, vecCol)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .filter(_._2.exists(_ != 0L))
@@ -1655,6 +1686,7 @@ object Similarity {
       while (i < qc.length) { q2 += 1000L * qc(i) * 1000L * qc(i); i += 1 }
       (qid, probed, dotCoarse, ip, q2)
     }
+    val encoded = candidates(qTabs.flatMap(_._2).distinct.sorted.toSeq)
     val qB = ss.sparkContext.broadcast(qTabs)
     val cn2B = ss.sparkContext.broadcast(cn2)
     val crossB = ss.sparkContext.broadcast(cross)
@@ -1667,8 +1699,7 @@ object Similarity {
       .mapPartitions { it =>
       val qs = qB.value
       val cn2T = cn2B.value; val crossT = crossB.value; val rn2T = rn2B.value
-      val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }))
+      val heaps = qs.map(_ => new TopK(kk))
       it.foreach { case (cid, cell, pqc, nsq) =>
         if (nsq != 0L) {
           // |x_hat|^2 = |coarse|^2 + 2*cross + |r_hat|^2 — m lookups
@@ -1686,12 +1717,7 @@ object Similarity {
                 while (jj < mm) { d += ip(jj)(pqc(jj)); jj += 1 }
                 val sim = roundHalfUp(
                   d.toDouble / (math.sqrt(q2.toDouble) * xD), dec)
-                val h = heaps(qi)
-                if (h.size < kk) h.enqueue((sim, cid))
-                else {
-                  val (ws, wid) = h.head
-                  if (sim > ws || (sim == ws && cid < wid)) { h.dequeue(); h.enqueue((sim, cid)) }
-                }
+                heaps(qi).offer(sim, cid)
               }
               qi += 1
             }
@@ -1702,33 +1728,20 @@ object Similarity {
         heaps(qi).iterator.map { case (s, cid) => Scored(qid, cid, s) }
       }
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.toDF()
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+    rankTopK(scored.toDF(), k)
   }
 
-  /** The snapshot's residual-codebook dir, or a DESCRIPTIVE failure
-    * on a plain-IVF store (a bare `.get` would die with an opaque
-    * 'None.get' naming neither the path nor the layout mismatch). */
-  private def pqcentsDirOf(path: String,
-      snap: IndexLayout.Snapshot): String =
-    path.stripSuffix("/") + "/" + snap.pqcents.getOrElse(
+  /** The persisted residual codebook of `snap` as a [[PqCodebook]]
+    * (dimension-sized by construction: m x ks x dsub longs), or a
+    * DESCRIPTIVE failure on a plain-IVF store (a bare `.get` would die
+    * with an opaque 'None.get' naming neither the path nor the layout
+    * mismatch). */
+  private def readPqCentsAt(spark: org.apache.spark.sql.SparkSession,
+      path: String, snap: IndexLayout.Snapshot): PqCodebook = {
+    val dir = path.stripSuffix("/") + "/" + snap.pqcents.getOrElse(
       throw new IllegalStateException(
         s"index at $path carries no residual codebook (plain IVF " +
           "layout?) — expected an IVFADC index"))
-
-  /** Read a persisted residual codebook back as a [[PqCodebook]]
-    * (dimension-sized by construction: m x ks x dsub longs). */
-  private def readPqCents(spark: org.apache.spark.sql.SparkSession,
-      path: String): PqCodebook =
-    readPqCentsAt(spark,
-      pqcentsDirOf(path, IndexLayout.resolve(spark, path)))
-
-  private def readPqCentsAt(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PqCodebook = {
     val cents = spark.read.parquet(dir).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toArray)
       .toMap
@@ -1737,14 +1750,8 @@ object Similarity {
     PqCodebook(m, cents.head._2.length, ks, cents)
   }
 
-  /** PERSISTENT IVFADC INDEX — build: [[ivfIndexBuild]]'s lakehouse
-    * layout with PQ-compressed postings. Trains the coarse quantizer
-    * and the residual codebook on the corpus, persists both
-    * (dimension-sized parquets), and writes postings as
-    * `(id, pq_codes, nsq)` PARTITIONED BY CELL — the on-disk layout
-    * IS the inverted file AND each posting is ~m small ints instead
-    * of a dim-length code vector, so a probed cell's bytes shrink by
-    * ~dim/m on top of the partition pruning. */
+  /** Result of one [[ivfIndexCompact]] pass: cells rewritten and the
+    * live file counts before and after. */
   final case class IvfCompactReport(cellsCompacted: Int,
       filesBefore: Long, filesAfter: Long)
 
@@ -1839,8 +1846,7 @@ object Similarity {
       path: String): DataFrame = {
     import ss.implicits._
     val snap = IndexLayout.resolve(ss, path)
-    val nCells = readCentsAt(ss,
-      path.stripSuffix("/") + "/" + snap.centroids).size
+    val nCells = readCentsAt(ss, path, snap).size
     val files = IndexLayout.filesPerCell(ss, path, snap)
     val r = IndexLayout.postingsDf(ss, path, snap)
       .agg(countDistinct(col("id")).as("v"), count(lit(1)).as("p")).head()
@@ -1994,6 +2000,14 @@ object Similarity {
       path: String): Unit =
     IndexLayout.expire(ss, path)
 
+  /** PERSISTENT IVFADC INDEX — build: [[ivfIndexBuild]]'s lakehouse
+    * layout with PQ-compressed postings. Trains the coarse quantizer
+    * and the residual codebook on the corpus, persists both
+    * (dimension-sized parquets), and writes postings as
+    * `(id, pq_codes, nsq)` PARTITIONED BY CELL — the on-disk layout
+    * IS the inverted file AND each posting is ~m small ints instead
+    * of a dim-length code vector, so a probed cell's bytes shrink by
+    * ~dim/m on top of the partition pruning. */
   def ivfPqIndexBuild(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, itersCoarse: Int, m: Int, ks: Int, itersPq: Int,
       path: String): Unit = {
@@ -2005,51 +2019,29 @@ object Similarity {
       val v = IndexLayout.nextVersion(spark, path)
       ivfPqBuildVersion(corpus, idCol, vecCol, nCells, itersCoarse,
         m, ks, itersPq, path, v, None, None)
-      IndexLayout.commit(spark, path, IndexLayout.Snapshot(v,
-        s"centroids-v$v", Some(s"pqcents-v$v"),
-        Seq(IndexLayout.Gen(s"postings-g$v", Nil)),
-        repoch = resetRepoch(spark, path)), ctx.token)
+      IndexLayout.commit(spark, path,
+        freshSnapshot(v, pq = true, resetRepoch(spark, path)), ctx.token)
       IndexLayout.gc(spark, path)
     }
   }
 
   /** Train + write one IVFADC artifact version (no lease, no manifest
     * — the caller holds the lock and commits): centroids-v`v`,
-    * pqcents-v`v`, postings-g`v` under `path`. `warmCoarse` /
-    * `warmRcb` seed the two Lloyd loops from live artifacts (the
-    * drift-rebuild warm start) instead of the lowest-id sample —
-    * identical per-iteration arithmetic either way. */
+    * pqcents-v`v`, postings-g`v` under `path`, trained by
+    * [[ivfPqTrain]] (warm-started from `warmCoarse` / `warmRcb` when
+    * given). */
   private def ivfPqBuildVersion(corpus: DataFrame, idCol: String,
       vecCol: String, nCells: Int, itersCoarse: Int, m: Int, ks: Int,
       itersPq: Int, path: String, v: Long,
       warmCoarse: Option[Map[Int, Array[Long]]],
       warmRcb: Option[PqCodebook]): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val root = path.stripSuffix("/")
-    val dim = dimOf(corpus, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val codes = quantizeInt8(corpus, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("codes"))
-      .transform(graft.util.Parallelism.fanOut)
-      .cache()
-    val coarse = kmeansTrain(codes, nCells, itersCoarse, warmCoarse)
-    coarse.toSeq.sortBy(_._1).map { case (c, vv) => (c, vv.toSeq) }
-      .toDF("cell", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids-v$v")
-    val res = ivfPqResiduals(codes, coarse).cache()
-    val rcb = ivfPqTrainResidual(res, m, dim / m, ks, itersPq,
-      warmRcb.map(_.cents))
-    rcb.cents.toSeq.sortBy(_._1).map { case ((j, c), vv) => (j, c, vv.toSeq) }
-      .toDF("j", "cell", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/pqcents-v$v")
-    ivfPqEncodeRes(res, rcb)
-      // co-located postings write: one shuffle on cell -> ~one file
-      // per inverted list instead of one per (task x cell)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/postings-g$v")
-    res.unpersist(); codes.unpersist()
+    val t = ivfPqTrain(corpus, idCol, vecCol, nCells, itersCoarse, m, ks,
+      itersPq, warmCoarse, warmRcb)
+    writeCents(spark, path, v, t.coarse)
+    writePqCents(spark, path, v, t.rcb)
+    writePostings(ivfPqEncodeRes(t.res, t.rcb), path, v)
+    t.res.unpersist(); t.codes.unpersist()
   }
 
   /** PERSISTENT IVFADC INDEX — incremental append: assign + encode a
@@ -2064,17 +2056,14 @@ object Similarity {
       path: String): Unit = {
     val spark = delta.sparkSession
     graft.ops.StoreLock.withLock(spark, path) {
-      val root = path.stripSuffix("/")
       val snap = IndexLayout.resolve(spark, path)
       requireNotTombstoned(delta, idCol, snap, path)
-      val coarse = readCentsAt(spark, s"$root/${snap.centroids}")
-      val rcb = readPqCentsAt(spark, pqcentsDirOf(path, snap))
-      val codes = quantizeInt8(delta, idCol, vecCol)
-        .select(col(idCol).cast("long").as("id"), col("codes"))
       // additive append into the newest generation — reader-safe,
       // no manifest change (see ivfIndexAppend)
-      IndexLayout.appendPostings(
-        ivfPqEncodeRes(ivfPqResiduals(codes, coarse), rcb), path)
+      IndexLayout.appendPostings(ivfPqEncodeRes(
+        ivfPqResiduals(idCodes(delta, idCol, vecCol),
+          readCentsAt(spark, path, snap)),
+        readPqCentsAt(spark, path, snap)), path)
     }
   }
 
@@ -2098,46 +2087,18 @@ object Similarity {
       vecCol: String, k: Int, nProbe: Int, path: String,
       snap: IndexLayout.Snapshot, simDecimals: Int): DataFrame = {
     val spark = queries.sparkSession
-    val root = path.stripSuffix("/")
-    val coarse = readCentsAt(spark, s"$root/${snap.centroids}")
-    val rcb = readPqCentsAt(spark, pqcentsDirOf(path, snap))
+    val coarse = readCentsAt(spark, path, snap)
     require(nProbe >= 1 && nProbe <= coarse.size,
       "need 1 <= nProbe <= nCells")
-    // probed-cell union, query-bounded: derived from the same exact
-    // milli distance the serve kernel uses, driver-side
-    val coarseArr = coarse.toSeq.sortBy(_._1).map(_._2).toArray
-    val probedUnion = quantizeInt8(queries, idCol, vecCol)
-      .select(col(idCol).cast("long"), col("codes"))
-      .collect()
-      .map(r => r.getSeq[Long](1).toArray)
-      .filter(_.exists(_ != 0L))
-      .flatMap { qc =>
-        coarseArr.zipWithIndex.map { case (cent, cell) =>
-          var s = 0L; var i = 0
-          while (i < cent.length) {
-            val diff = 1000L * qc(i) - cent(i); s += diff * diff; i += 1
-          }
-          (s, cell)
-        }.sortBy { case (d, cell) => (d, cell) }.take(nProbe).map(_._2)
-      }.distinct
-    val postings = IndexLayout.postingsDf(spark, path, snap)
-      .filter(col("cell").isin(probedUnion.map(Integer.valueOf).toSeq: _*))
-    ivfPqServe(queries, postings, coarse, rcb, idCol, vecCol, k,
-      nProbe, simDecimals)
+    // the serve's own per-query probe sets give the union (query-
+    // bounded), pushed as a static partition filter
+    ivfPqServe(queries, coarse, readPqCentsAt(spark, path, snap), idCol,
+        vecCol, k, nProbe, simDecimals) { probed =>
+      IndexLayout.postingsDf(spark, path, snap)
+        .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    }
   }
 
-  /** [[ivfPqIndexTopK]] with RECALL@K AS AN OBSERVABLE — the
-    * [[ivfIndexTopKWithRecall]] monitor for the PQ-compressed index:
-    * appends never retrain EITHER quantizer, so coarse-centroid AND
-    * residual-codebook drift both erode served quality silently. The
-    * reference leg probes ALL cells over the same postings —
-    * identical ADC arithmetic, so the ratio isolates exactly what
-    * probe pruning sacrifices ON TOP of quantization (PQ loss is a
-    * rebuild-time property; pruning loss is the serving dial). Each
-    * approx row carries `n_exact`, `n_hit` and `recall_at_k` for
-    * queries in the `idCol % sampleMod == 0` sample (null
-    * otherwise); the exact pass costs one unpruned postings scan for
-    * the sampled slice. */
   /** IVFADC index MAINTENANCE — the drift response for the
     * PQ-compressed index: measure served recall via
     * [[ivfPqIndexTopKWithRecall]]; below `recallFloor`, REBUILD both
@@ -2182,31 +2143,15 @@ object Similarity {
   def ivfPqIndexMaintain(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int, path: String,
       recallFloor: Double, itersCoarse: Int = 2,
-      itersPq: Int = 1, warmStart: Boolean = false): IvfMaintainReport = {
-    require(recallFloor >= 0.0 && recallFloor <= 1.0,
-      "recallFloor must be in [0, 1]")
+      itersPq: Int = 1, warmStart: Boolean = false): IvfMaintainReport =
+    maintainIndex("ivfPqIndexMaintain", queries, k, path, recallFloor,
+        ivfPqIndexTopKWithRecall(queries, idCol, vecCol, k, nProbe, path,
+          sampleMod = 1L)) { (snap, v) =>
     val spark = queries.sparkSession
-    def meanRecall(): Double = {
-      val r = ivfPqIndexTopKWithRecall(queries, idCol, vecCol, k,
-          nProbe, path, sampleMod = 1L)
-        .select("query_id", "recall_at_k").distinct()
-        .agg(avg("recall_at_k")).head()
-      if (r.isNullAt(0)) 1.0 else r.getDouble(0)
-    }
-    val before = meanRecall()
-    if (before >= recallFloor) return IvfMaintainReport(before, false, None)
-    // lease the rebuild-and-swap (see ivfIndexMaintain): a concurrent
-    // append landing after `corpus` was read would otherwise vanish
-    // from the rebuilt postings at swap time
-    graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
-    val root = path.stripSuffix("/")
-    val snap = IndexLayout.resolve(spark, path)
-    val coarse0 = readCentsAt(spark, s"$root/${snap.centroids}")
-    val nCells = coarse0.size
-    val rcb0 = readPqCentsAt(spark, pqcentsDirOf(path, snap))
-    log.info(f"ivfPqIndexMaintain: recall@$k $before%.4f < floor " +
-      f"$recallFloor%.4f at $path — rebuilding ($nCells cells, " +
-      f"m=${rcb0.m} ks=${rcb0.ks}, warmStart=$warmStart)")
+    val coarse0 = readCentsAt(spark, path, snap)
+    val rcb0 = readPqCentsAt(spark, path, snap)
+    log.info(s"ivfPqIndexMaintain: ${coarse0.size} cells, " +
+      s"m=${rcb0.m} ks=${rcb0.ks}, warmStart=$warmStart")
     // REBUILD PRECONDITION — corpus covers the live postings: the
     // rebuild re-encodes `corpus` from scratch while the `.batches`
     // append markers stay in place, so a posting id absent from
@@ -2226,7 +2171,6 @@ object Similarity {
           s"${uncovered.mkString(", ")}) — rebuilding now would drop " +
           "them permanently (append markers block re-delivery). Feed " +
           "a corpus that includes every appended batch, then re-run.")
-    val v = snap.version + 1
     // tombstoned ids fold OUT here: the rebuild corpus is the caller's
     // lakehouse table, which still carries retracted docs — encode the
     // live set only, and the fresh snapshot resets the tombstone list
@@ -2234,52 +2178,23 @@ object Similarity {
     val liveCorpus = graft.ops.Tombstones.exclude(
       corpus.withColumn("__id64", col(idCol).cast("long")), "__id64",
       snap.tombstones).drop("__id64")
-    ivfPqBuildVersion(liveCorpus, idCol, vecCol, nCells, itersCoarse,
-      rcb0.m, rcb0.ks, itersPq, path, v,
+    ivfPqBuildVersion(liveCorpus, idCol, vecCol, coarse0.size,
+      itersCoarse, rcb0.m, rcb0.ks, itersPq, path, v,
       if (warmStart) Some(coarse0) else None,
       if (warmStart) Some(rcb0) else None)
-    IndexLayout.commit(spark, path, IndexLayout.Snapshot(v,
-      s"centroids-v$v", Some(s"pqcents-v$v"),
-      Seq(IndexLayout.Gen(s"postings-g$v", Nil)),
-      // tombstones fold out physically here and the list resets:
-      // bump the retraction epoch (takedown-replay fence)
-      repoch = graft.ops.Tombstones.nextEpoch(
-        snap.repoch, snap.tombstones)), ctx.token)
-    IndexLayout.gc(spark, path)
-    val after = meanRecall()
-    log.info(f"ivfPqIndexMaintain: rebuilt $path — recall@$k " +
-      f"$before%.4f -> $after%.4f")
-    IvfMaintainReport(before, true, Some(after))
+    () => ()
     }
-  }
 
+  /** [[ivfPqIndexTopK]] with RECALL@K AS AN OBSERVABLE — the
+    * [[ivfIndexTopKWithRecall]] monitor for the PQ-compressed index
+    * (appends retrain NEITHER quantizer). The exact leg is the
+    * all-cells ADC serve over the same postings, so the ratio isolates
+    * what probe pruning sacrifices ON TOP of quantization (PQ loss is
+    * a rebuild-time property; pruning loss is the serving dial). */
   def ivfPqIndexTopKWithRecall(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int, path: String,
-      sampleMod: Long = 10L, simDecimals: Int = 4): DataFrame = {
-    // ONE snapshot for both legs and the cell count — see
-    // ivfIndexTopKWithRecall: independent resolutions racing a
-    // maintenance commit would compare across index versions and
-    // spuriously trip (or mask) maintain's recall floor
-    val spark = queries.sparkSession
-    val snap = IndexLayout.resolve(spark, path)
-    val approx = ivfPqIndexTopKAt(queries, idCol, vecCol, k, nProbe,
-      path, snap, simDecimals)
-    val nCells = readCentsAt(spark,
-      path.stripSuffix("/") + "/" + snap.centroids).size
-    val sampled = queries.filter(col(idCol) % sampleMod === 0)
-    val exact = ivfPqIndexTopKAt(sampled, idCol, vecCol, k,
-      nProbe = nCells, path, snap, simDecimals)
-    val nEx = exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-    val hits = approx
-      .join(exact.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    approx
-      .join(nEx.join(hits, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_exact"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit")),
-        Seq("query_id"), "left")
-      .withColumn("recall_at_k",
-        round(col("n_hit").cast("double") / col("n_exact"), 4))
-  }
+      sampleMod: Long = 10L, simDecimals: Int = 4): DataFrame =
+    withRecall(queries, idCol, nProbe, path, sampleMod) { (q, np, snap) =>
+      ivfPqIndexTopKAt(q, idCol, vecCol, k, np, path, snap, simDecimals)
+    }
 }

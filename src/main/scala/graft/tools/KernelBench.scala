@@ -30,7 +30,6 @@ object KernelBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     val words = Seq("the", "der", "le", "el", "alpha", "beta", "gamma",
       "delta", "value", "row", "und", "est", "por", "was", "zu")

@@ -268,13 +268,32 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("recall observable: sampled queries carry honest recall, full probing reads 1.0") {
     import org.apache.spark.sql.functions._
+    // both index families, by path: build, recall observable
+    // (queries, nProbe, sampleMod), plain serve (queries, nProbe)
+    type Df = org.apache.spark.sql.DataFrame
+    val families: Seq[(String => Unit, String => (Df, Int, Long) => Df,
+        String => (Df, Int) => Df)] = Seq(
+      (path => Similarity.ivfIndexBuild(emb, "vec_id", "embedding",
+          nCells = 4, iters = 2, path = path),
+        path => (q, nProbe, sampleMod) => Similarity.ivfIndexTopKWithRecall(q,
+          "vec_id", "embedding", k = 3, nProbe = nProbe, path = path,
+          sampleMod = sampleMod),
+        path => (q, nProbe) => Similarity.ivfIndexTopK(q, "vec_id",
+          "embedding", k = 3, nProbe = nProbe, path = path)),
+      (path => Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+          nCells = 4, itersCoarse = 2, m = 4, ks = 4, itersPq = 1,
+          path = path),
+        path => (q, nProbe, sampleMod) => Similarity.ivfPqIndexTopKWithRecall(q,
+          "vec_id", "embedding", k = 3, nProbe = nProbe, path = path,
+          sampleMod = sampleMod),
+        path => (q, nProbe) => Similarity.ivfPqIndexTopK(q, "vec_id",
+          "embedding", k = 3, nProbe = nProbe, path = path)))
+    for ((build, withRecall, serve) <- families) {
     val path = graft.util.TempDirs.scoped("ivf-recall-spec").toString
-    Similarity.ivfIndexBuild(emb, "vec_id", "embedding",
-      nCells = 4, iters = 2, path = path)
+    build(path)
     val queries = emb.filter(col("vec_id") < 10)
     // sampleMod=2: odd query ids are unsampled -> null recall columns
-    val r = Similarity.ivfIndexTopKWithRecall(queries, "vec_id", "embedding",
-      k = 3, nProbe = 2, path = path, sampleMod = 2L).cache()
+    val r = withRecall(path)(queries, 2, 2L).cache()
     val sampledRows = r.filter(col("query_id") % 2 === 0)
     val unsampled = r.filter(col("query_id") % 2 =!= 0)
     assert(unsampled.count() > 0 &&
@@ -282,8 +301,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(sampledRows.filter(col("recall_at_k").isNull).count() == 0)
     // honesty: recall == n_hit/n_exact, and n_hit is the true overlap
     // with the all-cells exact serve
-    val exact = Similarity.ivfIndexTopK(queries.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", k = 3, nProbe = 4, path = path)
+    val exact = serve(path)(queries.filter(col("vec_id") % 2 === 0), 4)
       .select("query_id", "neighbor_id").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     val approx = sampledRows.select("query_id", "neighbor_id", "n_hit")
@@ -293,10 +311,20 @@ class SimilaritySpec extends AnyFunSuite {
       assert(rows.forall(_.getLong(2) == hits), s"n_hit mismatch for query $qid")
     }
     // full probing is exhaustive -> recall exactly 1 everywhere sampled
-    val full = Similarity.ivfIndexTopKWithRecall(queries, "vec_id", "embedding",
-      k = 3, nProbe = 4, path = path, sampleMod = 1L)
+    val full = withRecall(path)(queries, 4, 1L)
     assert(full.filter(col("recall_at_k") =!= 1.0).count() == 0)
     r.unpersist()
+    }
+  }
+
+  test("ivfIndexBuild pins the training corpus size in train.meta") {
+    val path = graft.util.TempDirs.scoped("ivf-meta-spec").toString
+    val corpus = emb.filter(col("vec_id") % 3 =!= 0)
+    Similarity.ivfIndexBuild(corpus, "vec_id", "embedding",
+      nCells = 4, iters = 2, path = path)
+    val meta = spark.read.parquet(path + "/train.meta").head()
+    assert(meta.getAs[Long]("n") == corpus.count())
+    assert(meta.getAs[Int]("cells") == 4)
   }
 
   test("ivfIndexMaintain: skewed appends degrade recall; retrain recovers it") {
