@@ -1265,7 +1265,7 @@ object Dedup {
     graft.ops.TableLayout.publish(
       graft.ops.TableLayout.readAt(ss, storePath, snap)
         .repartition(target),
-      storePath, None, token)
+      storePath, None, token, pins = snap.pins)
     log.info(s"compacted store $storePath: $nFiles files " +
       s"($totalBytes bytes) -> $target file(s)")
   }
@@ -1320,36 +1320,36 @@ object Dedup {
     * durable state of batch incremental dedup — daily drops are
     * checked against it, then extend it ([[incrementalIngest]]);
     * unlike the streaming first-seen state it lives as plain parquet,
-    * so any engine can audit it and a reprocess can rebuild it. */
+    * so any engine can audit it and a reprocess can rebuild it.
+    *
+    * PINS: every dedup store (this one, the LSH band store, the
+    * cluster table's labels) pins its write-once parameters in its
+    * snapshot manifest ([[graft.ops.TableLayout.Snapshot]]`.pins`),
+    * published in the same atomic commit as the rows they describe,
+    * and every ingest validates them — a drifted or missing pin fails
+    * loudly. MIGRATION: stores initialized before the pins moved into
+    * the manifest carry none and fail that check; re-initialize them
+    * (each is a derived artifact and rebuilds from its corpus). The
+    * one exception is a band store whose manifest has no pins (a
+    * round-10 store, the pre-manifest layout): [[lshIncrementalIngest]]
+    * reads them, read-only, from its `<storePath>.meta` parquet. */
   def fingerprintStoreInit(corpus: DataFrame, idCol: String,
       textCol: String, storePath: String, nfc: Boolean = true): Unit = {
     val ss = corpus.sparkSession
-    import ss.implicits._
     graft.ops.StoreLock.withLockCtx(ss, storePath) { ctx =>
-    // pin the fingerprint FUNCTION VERSION: NFC-folded and raw-byte
-    // fingerprints of the same canonical text differ, so a store built
-    // under one setting silently misses every row under the other —
-    // ingest validates the pin and fails loudly instead. The rows
-    // THEMSELVES carry the setting too (the lshStoreInit discipline):
-    // a crash between the meta overwrite and the row overwrite during
-    // a re-init that flips the setting leaves new-meta/old-rows, and
-    // the meta-alone check would validate that mix — after which every
-    // re-delivered doc silently misclassifies. Ingest requires meta
-    // AND rows to agree; either single source alone has an unsafe
-    // crash window, their conjunction does not.
-    Seq(Tuple1(nfc)).toDF("nfc")
-      .write.mode("overwrite")
-      .parquet(storePath.stripSuffix("/") + ".meta")
     // versioned publish ([[graft.ops.TableLayout]]): a RE-init lands
     // as one atomic manifest commit — readers see the old store or
-    // the new one, never the overwrite's deleted-then-rewriting gap
+    // the new one, never the overwrite's deleted-then-rewriting gap.
+    // The commit pins the fingerprint FUNCTION VERSION: NFC-folded and
+    // raw-byte fingerprints of the same canonical text differ, so a
+    // store built under one setting silently misses every row under
+    // the other — ingest validates the pin and fails loudly instead
     graft.ops.TableLayout.publish(
       corpus.select(col(idCol),
           TextFunctions.fingerprint(col(textCol), nfc).as("fingerprint"))
         .groupBy("fingerprint")
-        .agg(min(col(idCol)).as("first_id"))
-        .withColumn("nfc", lit(nfc)),
-      storePath, None, ctx.token)
+        .agg(min(col(idCol)).as("first_id")),
+      storePath, None, ctx.token, pins = Map("nfc" -> nfc.toString))
     }
   }
 
@@ -1391,67 +1391,28 @@ object Dedup {
     * later drop. The at-least-once idempotence documented above covers
     * RE-delivery of the same drop, not concurrent distinct drops —
     * run ingests from one scheduler slot, as a batch pipeline would.
-    *
-    * MIGRATION (breaking, loud): stores initialized before the
-    * fingerprint-version pin grew its IN-ROW leg (every store row now
-    * carries `nfc` alongside the `.meta` pin — the conjunction closes
-    * the crashed-re-init window where new-meta/old-rows would
-    * validate) fail this method's pin check with a "re-init the
-    * store" error. There is no in-place backfill BY DESIGN: rows
-    * without the pin might be EITHER fold's fingerprints (that
-    * ambiguity is the unsafe state the conjunction exists to reject),
-    * so stamping them from the meta would launder exactly the mix the
-    * check must catch. Re-run [[fingerprintStoreInit]] over the
-    * corpus once; the store is a derived artifact and rebuilds from
-    * the corpus it indexes. */
+    * The store's fold setting comes from its manifest pin (see
+    * [[fingerprintStoreInit]]). */
   def incrementalIngest(drop: DataFrame, idCol: String, textCol: String,
       storePath: String, compactAfterFiles: Int = 64,
       nfc: Boolean = true): DataFrame = {
     val spark = drop.sparkSession
     graft.ops.StoreLock.withLockCtx(spark, storePath) { ctx =>
     // fingerprint-version pin: a store hashed under the other fold
-    // setting would silently classify every re-delivered doc as
-    // novel. Meta read + in-row agreement are session-cached under
-    // the meta dir's content signature (cachedPin): the setting only
-    // changes via re-init, which rewrites the meta FIRST, so the
-    // crashed-re-init detection reruns exactly when it can newly fail
-    // — and steady-state drops skip two 1-row Spark jobs each.
-    val storeNfc = cachedPin(spark, storePath.stripSuffix("/") + ".meta") {
-      val pinned = try spark.read
-        .parquet(storePath.stripSuffix("/") + ".meta")
-        .head().getAs[Boolean]("nfc")
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"incrementalIngest: no fingerprint-version pin at " +
-            s"$storePath.meta — the store was not initialized by this " +
-            "version's fingerprintStoreInit (or predates the NFC fold); " +
-            "re-init the store", e)
-      }
-      val store0 = graft.ops.TableLayout.read(spark, storePath)
-      // the rows' own pin (fingerprintStoreInit writes it on every
-      // row): meta and rows must agree — disagreement marks a crashed
-      // re-init that flipped the fold. A rowless store (empty corpus)
-      // has no row to disagree: the meta pin alone governs. A store
-      // predating the in-row pin has no `nfc` column — fail loudly
-      // (re-init) rather than validate the single-source state.
-      require(store0.columns.contains("nfc"),
-        s"incrementalIngest: the store at $storePath carries no in-row " +
-          "nfc pin (predates this version's fingerprintStoreInit) — " +
-          "re-init the store")
-      val inRows = store0.select("nfc").take(1)
-        .headOption.map(_.getAs[Boolean]("nfc")).getOrElse(pinned)
-      require(pinned == inRows,
-        s"incrementalIngest: the store at $storePath disagrees with " +
-          s"its own pin (meta nfc=$pinned, rows nfc=$inRows) — an " +
-          "interrupted re-init; re-init the store")
-      pinned
-    }
+    // setting would silently classify every re-delivered doc as novel
+    val snap = graft.ops.TableLayout.resolve(spark, storePath)
+    val storeNfc = snap.pins.getOrElse("nfc",
+      throw new IllegalStateException(
+        s"incrementalIngest: no fingerprint-version pin in the manifest " +
+          s"at $storePath — the store was not initialized by this " +
+          "version's fingerprintStoreInit (or predates the NFC fold); " +
+          "re-init the store")).toBoolean
     require(storeNfc == nfc,
       s"incrementalIngest(nfc=$nfc) does not match the store at " +
-        s"$storePath (meta nfc=$storeNfc) — folded and " +
+        s"$storePath (pinned nfc=$storeNfc) — folded and " +
         "raw fingerprints of the same text differ; re-init or use the " +
         "store's setting")
-    val store = graft.ops.TableLayout.read(spark, storePath)
+    val store = graft.ops.TableLayout.readAt(spark, storePath, snap)
     val fp = drop.select(col(idCol),
       TextFunctions.fingerprint(col(textCol), nfc).as("fingerprint"))
     val keeper = fp.groupBy("fingerprint").agg(min(col(idCol)).as("__keeper"))
@@ -1491,8 +1452,8 @@ object Dedup {
     val classified = spark.read.parquet(batchPath)
     graft.ops.TableLayout.append(classified
       .where(col("status") === "accepted")
-      .select(col("fingerprint"), col(idCol).as("first_id"))
-      .withColumn("nfc", lit(nfc)), storePath, None)
+      .select(col("fingerprint"), col(idCol).as("first_id")),
+      storePath, None)
     // after the append, never before: the classification is already
     // committed to the batch dir, so the compaction commit can't
     // invalidate it
@@ -1501,14 +1462,6 @@ object Dedup {
     }
   }
 
-  /** Initialize a persisted LSH band-bucket STORE — the on-disk
-    * near-dup index of a standing corpus ([[bandBuckets]] rows as
-    * plain parquet). The near-dup counterpart of
-    * [[fingerprintStoreInit]]: daily drops probe it with one equi-join
-    * instead of re-running LSH over corpus + drop. A sibling
-    * `<storePath>.meta` parquet pins (n, numHashes, bands) so a later
-    * ingest with drifted parameters fails loudly instead of silently
-    * missing every near-dup (the bucket hashes would never collide). */
   /** NFC pre-fold as a column substitution (the [[minHashLshPairs]]
     * discipline): downstream keys, signatures and shingles all see one
     * canonical form. No-op when off. */
@@ -1519,33 +1472,61 @@ object Dedup {
       graft.plans.NormalizeTextExpr.normalizeText(df.sparkSession,
         col(textCol)))
 
+  /** The band-store pin keys, in [[lshPins]]' tuple order. */
+  private val LshPinKeys =
+    Seq("n", "num_hashes", "bands", "nfc", "id_buckets")
+
+  /** The band store's pinned (n, numHashes, bands, nfcFold, idBuckets)
+    * from the live snapshot `snap`. A round-10 store (the pre-manifest
+    * layout, whose implicit snapshot carries no pins) reads them,
+    * read-only, from its `<storePath>.meta` parquet; a store with
+    * neither fails loudly. */
+  private def lshPins(ss: SparkSession, storePath: String,
+      snap: graft.ops.TableLayout.Snapshot): (Int, Int, Int, Boolean, Int) = {
+    def missing(cause: Throwable) = new IllegalStateException(
+      s"no (or pre-layout-pin) parameter pin for the band store at " +
+        s"$storePath — the store was not initialized by this version's " +
+        "lshStoreInit; re-init the store", cause)
+    val vals =
+      if (snap.pins.nonEmpty)
+        LshPinKeys.map(k => snap.pins.getOrElse(k, throw missing(null)))
+      else {
+        val meta = storePath.stripSuffix("/") + ".meta"
+        val r = try ss.read.parquet(meta).head()
+          catch { case e: Exception => throw missing(e) }
+        LshPinKeys.map(k => scala.util.Try(r.getAs[Any](k).toString)
+          .getOrElse(throw missing(null)))
+      }
+    (vals(0).toInt, vals(1).toInt, vals(2).toInt, vals(3).toBoolean,
+      vals(4).toInt)
+  }
+
+  /** Initialize a persisted LSH band-bucket STORE — the on-disk
+    * near-dup index of a standing corpus ([[bandBuckets]] rows as
+    * plain parquet). The near-dup counterpart of
+    * [[fingerprintStoreInit]]: daily drops probe it with one equi-join
+    * instead of re-running LSH over corpus + drop. The manifest pins
+    * (n, numHashes, bands, nfcFold, idBuckets) so a later ingest with
+    * drifted parameters fails loudly instead of silently missing every
+    * near-dup (the bucket hashes would never collide). */
   def lshStoreInit(corpus: DataFrame, idCol: String, textCol: String,
       storePath: String, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16, nfcFold: Boolean = true,
       idBuckets: Int = 0,
       precomputedBuckets: Option[DataFrame] = None): Unit = {
     val ss = corpus.sparkSession
-    import ss.implicits._
     graft.ops.StoreLock.withLockCtx(ss, storePath) { ctx =>
-    // meta FIRST, then the bucket rows — and the rows THEMSELVES carry
-    // the parameters. Ingest validates BOTH sources: a crash between
-    // the two writes (or a failed re-init with new parameters) leaves
-    // them disagreeing, so every subsequent ingest is rejected until
-    // re-init, instead of one parameter choice silently probing
-    // buckets hashed under the other (either single source alone has
-    // an unsafe crash window; their conjunction does not). The NFC
-    // fold rides the pin too: folded and unfolded texts hash into
+    // the pins ride the publish commit with the bucket rows. The NFC
+    // fold is pinned too: folded and unfolded texts hash into
     // different buckets, so a drifted fold setting is the same silent
     // recall-loss hazard as drifted n/bands. `idBuckets` (the LAYOUT
-    // pin, also on both sources) > 0 partitions the store by
-    // `ib = pmod(hash(id), idBuckets)` — the stable id-bucket layout
-    // that makes retraction a touched-partition rewrite instead of an
-    // O(corpus) full-store rewrite; 0 keeps the flat single-dir
-    // layout for small standalone stores.
-    Seq((n, numHashes, bands, nfcFold, idBuckets))
-      .toDF("n", "num_hashes", "bands", "nfc", "id_buckets")
-      .write.mode("overwrite")
-      .parquet(storePath.stripSuffix("/") + ".meta")
+    // pin) > 0 partitions the store by `ib = pmod(hash(id),
+    // idBuckets)` — the stable id-bucket layout that makes retraction
+    // a touched-partition rewrite instead of an O(corpus) full-store
+    // rewrite; 0 keeps the flat single-dir layout for small
+    // standalone stores.
+    val pins = LshPinKeys.zip(Seq(n, numHashes, bands, nfcFold, idBuckets)
+      .map(_.toString)).toMap
     // precomputedBuckets: the same shared-signature-pass contract as
     // [[minHashLshPairs]] — (idCol, band, bh) from [[bandBuckets]] over
     // the nfc-folded corpus, so clusterTableInit runs the minhash
@@ -1554,9 +1535,6 @@ object Dedup {
       .map(_.select(col(idCol), col("band"), col("bh")))
       .getOrElse(bandBuckets(nfcFolded(corpus, textCol, nfcFold), idCol,
         textCol, n, numHashes, bands))
-      .withColumn("n", lit(n)).withColumn("num_hashes", lit(numHashes))
-      .withColumn("bands", lit(bands)).withColumn("nfc", lit(nfcFold))
-      .withColumn("id_buckets", lit(idBuckets))
     // versioned publish ([[graft.ops.TableLayout]]): one atomic
     // manifest commit, no overwrite gap for concurrent readers
     if (idBuckets > 0)
@@ -1564,8 +1542,9 @@ object Dedup {
         rows.withColumn("ib",
           pmod(graft.functions.Sampling.hashBucket(col(idCol)),
             lit(idBuckets.toLong))),
-        storePath, Some("ib"), ctx.token)
-    else graft.ops.TableLayout.publish(rows, storePath, None, ctx.token)
+        storePath, Some("ib"), ctx.token, pins = pins)
+    else graft.ops.TableLayout.publish(rows, storePath, None, ctx.token,
+      pins = pins)
     }
   }
 
@@ -1575,7 +1554,7 @@ object Dedup {
     * ([[graft.streaming.PipelineStreams.lshCandidates]]) with durable
     * parquet state any engine can audit. Steps:
     *
-    *   1. parameters validated against `<storePath>.meta` (drifted
+    *   1. parameters validated against the store's pins (drifted
     *      n/numHashes/bands would silently hash into disjoint buckets);
     *   2. drop band-buckets ([[bandBuckets]], increment-sized);
     *   3. candidates = ONE equi-join drop-buckets x store on
@@ -1607,15 +1586,8 @@ object Dedup {
     * SINGLE WRITER: as with [[incrementalIngest]], ingests must be
     * serialized per store — two concurrent drops can each pass the
     * not-already-indexed check and append overlapping bucket rows,
-    * duplicating candidates on all later probes.
-    *
-    * MIGRATION (breaking, loud): the meta pin now includes
-    * `id_buckets` (the partitioned band-store layout), so stores
-    * initialized before the partitioned layout fail the pin read with
-    * a "re-init the store" error. No in-place upgrade: the flat
-    * layout's files would need a full rewrite into `ib=` partitions
-    * anyway — re-running [[lshStoreInit]] over the corpus IS that
-    * rewrite, minus a bespoke migration path to maintain. */
+    * duplicating candidates on all later probes. Stores initialized
+    * before the manifest pins: see [[fingerprintStoreInit]]. */
   def lshIncrementalIngest(drop: DataFrame, texts: DataFrame,
       idCol: String, textCol: String, storePath: String, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
@@ -1624,48 +1596,17 @@ object Dedup {
       precomputedBuckets: Option[DataFrame] = None): DataFrame = {
     val ss = drop.sparkSession
     graft.ops.StoreLock.withLockCtx(ss, storePath) { ctx =>
-    def params(row: org.apache.spark.sql.Row): (Int, Int, Int, Boolean, Int) =
-      (row.getAs[Int]("n"), row.getAs[Int]("num_hashes"),
-        row.getAs[Int]("bands"), row.getAs[Boolean]("nfc"),
-        row.getAs[Int]("id_buckets"))
-    // the meta read and the head-row agreement check are two 1-row
-    // Spark jobs per ingest — cached per session under the meta dir's
-    // content signature (cachedPin): params can only drift through a
-    // re-init, which rewrites the meta and invalidates the cache, so
-    // the crashed-re-init detection (meta/rows disagreement) reruns
-    // exactly when it can newly fail.
-    val pinned = cachedPin(ss, storePath.stripSuffix("/") + ".meta") {
-      val meta = try params(
-        ss.read.parquet(storePath.stripSuffix("/") + ".meta").head())
-      catch { case e: Exception =>
-        throw new IllegalStateException(
-          s"lshIncrementalIngest: no (or pre-layout-pin) parameter pin " +
-            s"at $storePath.meta — the store was not initialized by this " +
-            "version's lshStoreInit; re-init the store", e)
-      }
-      // head-row params travel WITH the bucket rows — the meta and the
-      // store must agree (see lshStoreInit: disagreement marks an
-      // interrupted re-init). A rowless store (every corpus doc
-      // shorter than n tokens) has no row to disagree: the meta pin
-      // alone governs. The id-bucket LAYOUT is store-intrinsic (never
-      // a caller parameter — a drifted value would append a key's
-      // rows into a different partition than its live rows), so it
-      // only has to agree between meta and rows.
-      val inStore = graft.ops.TableLayout.read(ss, storePath)
-        .select("n", "num_hashes", "bands", "nfc", "id_buckets").take(1)
-        .headOption.map(params).getOrElse(meta)
-      require(inStore == meta,
-        s"lshIncrementalIngest: the store at $storePath disagrees with " +
-          s"its own pin (meta=$meta, rows=$inStore) — an interrupted " +
-          "re-init; re-init the store")
-      meta
-    }
+    val snap = graft.ops.TableLayout.resolve(ss, storePath)
+    val pinned = lshPins(ss, storePath, snap)
     require((pinned._1, pinned._2, pinned._3, pinned._4) ==
         ((n, numHashes, bands, nfcFold)),
       s"lshIncrementalIngest(n=$n, numHashes=$numHashes, bands=$bands, " +
         s"nfcFold=$nfcFold) does not match the store at $storePath " +
-        s"(meta=$pinned) — mismatched bucket hashes " +
+        s"(pinned=$pinned) — mismatched bucket hashes " +
         "would never collide; re-init the store or use its parameters")
+    // the id-bucket LAYOUT is store-intrinsic, never a caller
+    // parameter: a drifted value would append a key's rows into a
+    // different partition than its live rows
     val idBuckets = pinned._5
     // the SAME fold the store was built under — folded and unfolded
     // texts of the same canonical doc hash into disjoint buckets.
@@ -1680,7 +1621,7 @@ object Dedup {
         textCol, n, numHashes, bands))
       .withColumnRenamed(idCol, "drop_id")
       .cache()
-    val store = graft.ops.TableLayout.read(ss, storePath)
+    val store = graft.ops.TableLayout.readAt(ss, storePath, snap)
       .select(col(idCol).as("store_id"), col("band"), col("bh"))
     // STORE-SIDE BLOOM PRUNES (the incrementalIngest discipline; the
     // blooms build over the CACHED dropB, so each costs one cheap
@@ -1716,9 +1657,6 @@ object Dedup {
         .select(col("store_id").as("drop_id")).distinct(),
         Seq("drop_id"), "left_anti")
       .select(col("drop_id").as(idCol), col("band"), col("bh"))
-      .withColumn("n", lit(n)).withColumn("num_hashes", lit(numHashes))
-      .withColumn("bands", lit(bands)).withColumn("nfc", lit(nfcFold))
-      .withColumn("id_buckets", lit(idBuckets))
     // TableLayout.append co-locates each bucket's rows before the
     // partitioned append: without that every shuffle task writes a
     // file into every bucket dir it touches — up to tasks x buckets
@@ -1829,16 +1767,7 @@ object Dedup {
       checkpointDir: Option[String] = None,
       idBuckets: Int = 64, nfcFold: Boolean = true): Unit = {
     val ss = corpus.sparkSession
-    import ss.implicits._
     graft.ops.StoreLock.withLock(ss, storePath) {
-    // pin the LAYOUT parameters next to the labels: a later ingest or
-    // retraction run with a different idBuckets would put a key's
-    // update row in a different partition than its live row — the
-    // keys-don't-move precondition of the partition-scoped merge —
-    // leaving duplicate (or, for retraction, mass-deleted) labels.
-    // The NFC fold is pinned for the same reason as the band store's.
-    Seq((idBuckets, nfcFold)).toDF("id_buckets", "nfc")
-      .write.mode("overwrite").parquet(storePath + "/labels.meta")
     // ONE minhash signature pass over the corpus, shared by the pair
     // generation AND the band store below — the two artifacts need the
     // same full-corpus band-bucket table, and the signature kernel
@@ -1882,10 +1811,17 @@ object Dedup {
           lit(idBuckets.toLong)))
     // the labels store takes its OWN nested lease (the lsh sibling
     // already does): TableLayout's commit re-verifies the epoch at
-    // the store root it publishes to
+    // the store root it publishes to. The commit pins the LAYOUT
+    // parameters: a later ingest or retraction run with a different
+    // idBuckets would put a key's update row in a different partition
+    // than its live row — the keys-don't-move precondition of the
+    // partition-scoped merge — leaving duplicate (or, for retraction,
+    // mass-deleted) labels. The NFC fold is pinned for the same reason
+    // as the band store's.
     graft.ops.StoreLock.withLockCtx(ss, storePath + "/labels") { lctx =>
       graft.ops.TableLayout.publish(labelRows, storePath + "/labels",
-        Some("ib"), lctx.token)
+        Some("ib"), lctx.token, pins = Map(
+          "id_buckets" -> idBuckets.toString, "nfc" -> nfcFold.toString))
     }
     fullBuckets.unpersist()
     }
@@ -1923,6 +1859,38 @@ object Dedup {
           "folded in automatically — then reads and ingests resume.")
   }
 
+  /** Validate the labels-layout pin ([[clusterTableInit]]) and return
+    * (idBuckets, nfcFold) — every mutation path must run under the
+    * pinned layout or the partition merge corrupts the table. Also
+    * rejects a table with a pending retraction marker (ingesting over
+    * silently-incomplete state would bake the partial retraction in);
+    * [[clusterTableRetract]] itself reads the pin unchecked, since
+    * completing the pending retraction is exactly its job. */
+  private def labelsPin(ss: SparkSession, storePath: String): (Int, Boolean) = {
+    requireNoPendingRetraction(ss, storePath)
+    labelsPinUnchecked(ss, storePath)
+  }
+
+  private def labelsPinUnchecked(ss: SparkSession,
+      storePath: String): (Int, Boolean) = {
+    val pins = graft.ops.TableLayout.resolveOpt(ss, storePath + "/labels")
+      .fold(Map.empty[String, String])(_.pins)
+    (for (ib <- pins.get("id_buckets"); nfc <- pins.get("nfc"))
+      yield (ib.toInt, nfc.toBoolean)).getOrElse(
+      throw new IllegalStateException(
+        s"no labels-layout pin in the manifest at $storePath/labels — " +
+          "the cluster table was not initialized by this version's " +
+          "clusterTableInit; re-init the table"))
+  }
+
+  /** The labels table's last-written version per store — valid only
+    * while our own mutation was the store's LAST (the lock context's
+    * `priorEpoch` proves it), in which case the max-ver aggregate job
+    * every drop otherwise pays is skipped. Any other writer's
+    * mutation stamps a different epoch and forces the recompute. */
+  private val verCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
+
   /** INCREMENTAL cluster-table maintenance — near-dup clustering as an
     * always-on ingest instead of a batch rebuild. Classifies a new
     * drop against the persisted table and extends it:
@@ -1951,77 +1919,6 @@ object Dedup {
     * Re-delivering a drop recomputes the same labels at a higher
     * version — idempotent. Returns the drop's `(id, cluster)` labels.
     */
-  // ---- session pin caches: per-drop fixed-overhead trimming ----
-  // Every store pin (labels layout, LSH params) is a 1-row parquet
-  // read — a full Spark job with scheduling overhead, paid PER DROP
-  // by the always-on ingests (and per micro-batch by the streaming
-  // wrappers). Pins only change on re-init, which rewrites the meta
-  // dir, so a session cache keyed by the meta dir's FILE-LEVEL
-  // content signature (names + mtimes + lengths — reliable on object
-  // stores where directory mtimes are not) serves every later drop
-  // from memory and still revalidates the moment any re-init (this
-  // session's or another writer's) touches the meta.
-  private val pinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
-
-  private def metaSig(ss: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    try {
-      val fs = p.getFileSystem(ss.sessionState.newHadoopConf())
-      fs.listStatus(p).filter(_.isFile)
-        .map(s => s"${s.getPath.getName}:${s.getModificationTime}:${s.getLen}")
-        .sorted.mkString("|")
-    } catch { case _: Exception => "" }
-  }
-
-  private def cachedPin[T](ss: SparkSession, metaDir: String)
-      (compute: => T): T = {
-    val sig = metaSig(ss, metaDir)
-    if (sig.isEmpty) compute // missing/unreadable: never cache
-    else Option(pinCache.get(metaDir)) match {
-      case Some((s, v)) if s == sig => v.asInstanceOf[T]
-      case _ =>
-        val v = compute
-        pinCache.put(metaDir, (sig, v))
-        v
-    }
-  }
-
-  /** Validate the labels-layout pin ([[clusterTableInit]]) and return
-    * (idBuckets, nfcFold) — every mutation path must run under the
-    * pinned layout or the partition merge corrupts the table. Also
-    * rejects a table with a pending retraction marker (ingesting over
-    * silently-incomplete state would bake the partial retraction in);
-    * [[clusterTableRetract]] itself reads the pin unchecked, since
-    * completing the pending retraction is exactly its job. */
-  private def labelsPin(ss: SparkSession, storePath: String): (Int, Boolean) = {
-    requireNoPendingRetraction(ss, storePath)
-    labelsPinUnchecked(ss, storePath)
-  }
-
-  private def labelsPinUnchecked(ss: SparkSession,
-      storePath: String): (Int, Boolean) =
-    cachedPin(ss, storePath + "/labels.meta") {
-      try {
-        val r = ss.read.parquet(storePath + "/labels.meta").head()
-        (r.getAs[Int]("id_buckets"), r.getAs[Boolean]("nfc"))
-      } catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no labels-layout pin at $storePath/labels.meta — the cluster " +
-            "table was not initialized by this version's " +
-            "clusterTableInit; re-init the table", e)
-      }
-    }
-
-  /** The labels table's last-written version per store — valid only
-    * while our own mutation was the store's LAST (the lock context's
-    * `priorEpoch` proves it), in which case the max-ver aggregate job
-    * every drop otherwise pays is skipped. Any other writer's
-    * mutation stamps a different epoch and forces the recompute. */
-  private val verCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-
   def clusterTableIngest(drop: DataFrame, texts: DataFrame,
       idCol: String, textCol: String, storePath: String, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
@@ -2167,6 +2064,14 @@ object Dedup {
     // UNCHECKED read: a pending marker is not an error HERE — this
     // method is how a pending retraction completes.
     val (idBuckets, nfcFold) = labelsPinUnchecked(ss, storePath)
+    // the band store's layout through the same validated pin read
+    // ingest uses, BEFORE anything commits: an unreadable pin fails
+    // loudly with both stores unchanged (a fallback to the flat layout
+    // would republish an `ib`-partitioned store unpartitioned, and
+    // every later append would then fail its layout check)
+    val lshPath = storePath + "/lsh"
+    val lshBuckets =
+      lshPins(ss, lshPath, graft.ops.TableLayout.resolve(ss, lshPath))._5
     val marker = new Path(retractMarkerPath(storePath))
     val fs = marker.getFileSystem(ss.sessionState.newHadoopConf())
     // fold a pending marker's ids into this run: both retractions are
@@ -2199,14 +2104,8 @@ object Dedup {
     // store's OWN lease is taken too: a standalone lshIncrementalIngest
     // racing the purge would otherwise re-append the retracted ids'
     // buckets mid-swap.
-    val lshPath = storePath + "/lsh"
     graft.ops.StoreLock.withLockCtx(ss, lshPath) { lshCtx =>
-    val lshBuckets = try {
-      val m = ss.read.parquet(storePath + "/lsh.meta").head()
-      if (m.schema.fieldNames.contains("id_buckets"))
-        m.getAs[Int]("id_buckets")
-      else 0
-    } catch { case _: Exception => 0 }
+    val lshSnap = graft.ops.TableLayout.resolve(ss, lshPath)
     if (lshBuckets > 0) {
       val ibOfLsh = pmod(graft.functions.Sampling.hashBucket(col(idCol)),
         lit(lshBuckets.toLong))
@@ -2220,7 +2119,7 @@ object Dedup {
       // lazy plan's source partitions are never swapped out from
       // under it — and a concurrent reader keeps the prior complete
       // snapshot through the GC grace window
-      val replacement = graft.ops.TableLayout.read(ss, lshPath)
+      val replacement = graft.ops.TableLayout.readAt(ss, lshPath, lshSnap)
         .filter(col("ib").isin(touchedVals: _*))
         .join(remove.withColumnRenamed(idCol, "__rm"),
           col(idCol) === col("__rm"), "left_anti")
@@ -2234,11 +2133,11 @@ object Dedup {
       // IO; re-init with the bucketed layout to make retraction
       // delta-sized
       graft.ops.TableLayout.publish(
-        graft.ops.TableLayout.read(ss, lshPath)
+        graft.ops.TableLayout.readAt(ss, lshPath, lshSnap)
           .join(remove.withColumnRenamed(idCol, "__rm"),
             col(idCol) === col("__rm"), "left_anti")
           .drop("__rm"),
-        lshPath, None, lshCtx.token)
+        lshPath, None, lshCtx.token, pins = lshSnap.pins)
     }
     }
     // 2. re-cluster the affected clusters' survivors

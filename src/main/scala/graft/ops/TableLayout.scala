@@ -129,10 +129,19 @@ private[graft] object TableLayout {
     * commit, and a takedown stream that recorded the epoch it first
     * ran a batch under fails loudly on re-delivery across a reset —
     * the structural fence for the crash-between-retract-and-marker +
-    * vacuum replay window (the text index's `retract_epoch` twin). */
+    * vacuum replay window (the text index's `retract_epoch` twin).
+    *
+    * `pins` are the store's WRITE-ONCE parameters (`pin=<key>;<value>`
+    * manifest lines): the settings its rows were hashed or laid out
+    * under (a dedup store's fold and LSH parameters, an index's
+    * training size). Published in the same atomic commit as the data
+    * they describe, so a reader never sees rows under one setting and
+    * a pin naming another; every commit built from a live snapshot
+    * carries them forward, and a full republish states them anew. */
   final case class Snapshot(version: Long, pcol: Option[String],
       gens: Seq[Gen], artifacts: Map[String, String] = Map.empty,
-      tombstones: Seq[String] = Nil, repoch: Long = 0L)
+      tombstones: Seq[String] = Nil, repoch: Long = 0L,
+      pins: Map[String, String] = Map.empty)
 
   /** A LAYOUT FAMILY: the naming/legacy contract one store kind uses
     * on top of the shared snapshot algebra. ONE implementation of
@@ -231,6 +240,7 @@ private[graft] object TableLayout {
     val arts = Map.newBuilder[String, String]
     val gens = Seq.newBuilder[Gen]
     val tombs = Seq.newBuilder[String]
+    val pins = Map.newBuilder[String, String]
     text.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
       line.split("=", 2) match {
         case Array("v", _) => ()
@@ -241,6 +251,11 @@ private[graft] object TableLayout {
           if (parts.length != 2) throw new IllegalStateException(
             s"unparseable ${fam.what} manifest artifact line: '$line'")
           arts += parts(0) -> parts(1)
+        case Array("pin", spec) =>
+          val parts = spec.split(";", 2)
+          if (parts.length != 2) throw new IllegalStateException(
+            s"unparseable ${fam.what} manifest pin line: '$line'")
+          pins += parts(0) -> parts(1)
         case Array("tomb", spec) =>
           tombs ++= spec.split(",").toSeq.filter(_.nonEmpty)
         // pre-unification INDEX manifests spelled the two artifacts as
@@ -266,7 +281,7 @@ private[graft] object TableLayout {
     // compactCells on an old-format index would fail the layout-match
     // require even though reads (which force pcol via toCore) work
     Snapshot(v, pcol.orElse(fam.defaultPcol), gens.result(),
-      arts.result(), tombs.result(), repoch)
+      arts.result(), tombs.result(), repoch, pins.result())
   }
 
   private def serialize(s: Snapshot): String = {
@@ -276,6 +291,12 @@ private[graft] object TableLayout {
     if (s.repoch != 0L) b ++= s"repoch=${s.repoch}\n"
     s.artifacts.toSeq.sortBy(_._1).foreach { case (k, d) =>
       b ++= s"art=$k;$d\n"
+    }
+    s.pins.toSeq.sortBy(_._1).foreach { case (k, x) =>
+      require(!hasDelimiter(k) && !hasDelimiter(x),
+        s"TableLayout: pin '$k' -> '$x' contains a manifest delimiter " +
+          "(,;\\n)")
+      b ++= s"pin=$k;$x\n"
     }
     if (s.tombstones.nonEmpty) {
       requireCleanVals(s.tombstones)
@@ -317,7 +338,7 @@ private[graft] object TableLayout {
     * engine-named data artifact no kept manifest references. Runs
     * under the store lease, right after a commit — so the grace
     * window for an in-flight reader is a FULL rewrite cycle. Never
-    * touches sidecars (`.meta`, `.batch`, lease files — all siblings
+    * touches sidecars (`.batch`, `.epoch`, lease files — all siblings
     * of the root) or anything the family did not name itself. */
   def gc(ss: SparkSession, path: String,
       keepManifests: Int = KeepManifests,
@@ -520,11 +541,14 @@ private[graft] object TableLayout {
           "column (or an integral one)")))).otherwise(v))
     }
 
+  private def hasDelimiter(v: String): Boolean =
+    v.exists(c => c == ',' || c == ';' || c == '\n')
+
   private def requireCleanVals(vals: Seq[String]): Unit =
     vals.foreach { v =>
       require(v != null, "TableLayout: null partition values are not " +
         "supported (partition on a non-null key-derived column)")
-      require(!v.exists(c => c == ',' || c == ';' || c == '\n'),
+      require(!hasDelimiter(v),
         s"TableLayout: partition value '$v' contains a manifest " +
           "delimiter (,;\\n) — partition on a clean key-derived column")
     }
@@ -565,10 +589,13 @@ private[graft] object TableLayout {
     * old store or the new one, never a mix; the old generations
     * survive [[KeepManifests]] further rewrites for in-flight
     * readers. Must run under the store lease (`token` = the
-    * [[StoreLock.LockCtx]] epoch token). */
+    * [[StoreLock.LockCtx]] epoch token). `pins` are the published
+    * snapshot's write-once parameters: an init states them, a
+    * rewrite of a live store passes the live snapshot's. */
   def publish(df: DataFrame, path: String, pcol: Option[String],
       token: String, beforeCommit: Path => Unit = _ => (),
-      fam: Family = StoreFamily): Unit = {
+      fam: Family = StoreFamily,
+      pins: Map[String, String] = Map.empty): Unit = {
     val ss = df.sparkSession
     val prior = resolveOpt(ss, path, fam)
     val v = prior.map(_.version + 1L).getOrElse(1L)
@@ -594,7 +621,7 @@ private[graft] object TableLayout {
     // ignore
     beforeCommit(dir)
     commit(ss, path, Snapshot(v, pcol, Seq(Gen(genDirName(fam, v), Nil)),
-      repoch = repoch), token, fam)
+      repoch = repoch, pins = pins), token, fam)
     gc(ss, path, fam = fam)
   }
 
@@ -677,15 +704,15 @@ private[graft] object TableLayout {
     val newGens = liveOld :+ Gen(genDirName(fam, v), Nil)
     // client sidecars (e.g. the text index's paired stats) land in
     // the new generation BEFORE the manifest references it; named
-    // artifacts (the ANN index's centroids/codebook) and tombstones
-    // are untouched by a partition rewrite and carry forward into the
-    // new snapshot
+    // artifacts (the ANN index's centroids/codebook), tombstones and
+    // pins are untouched by a partition rewrite and carry forward into
+    // the new snapshot
     // `tweak` lets a tombstone-folding rewrite (the ANN vacuum) clear
     // the list and bump the retraction epoch in the SAME atomic
     // commit as the fold — default identity carries both forward
     beforeCommit(newDir)
-    commit(ss, path, tweak(Snapshot(v, snap.pcol, newGens, snap.artifacts,
-      snap.tombstones, snap.repoch)), token, fam)
+    commit(ss, path, tweak(snap.copy(version = v, gens = newGens)), token,
+      fam)
     gc(ss, path, fam = fam)
     log.info(s"replaced ${touchedVals.length} partition(s) of $path " +
       s"at snapshot v$v${if (fold) " (generation fold)" else ""}")

@@ -1046,7 +1046,8 @@ object PipelineQueries {
     // value-invisible: same fixture as q_incremental_neardup, but the
     // band store is id-bucketed, then FLATTENED to the pre-manifest
     // on-disk shape (bare ib=* partition dirs at the root, no
-    // manifest — the exact layout round-10 stores left behind), and
+    // manifest, the parameters in a `.meta` sidecar — the exact layout
+    // round-10 stores left behind), and
     // the ingest runs with compactAfterFiles=1 so the per-bucket
     // compaction must resolve the implicit v0 snapshot, backfill
     // _manifest-v0, and commit the generation layout on top. The
@@ -1076,6 +1077,13 @@ object PipelineQueries {
       fs.listStatus(root).map(_.getPath)
         .filter(_.getName.startsWith("_manifest-v"))
         .foreach(pth => fs.delete(pth, false))
+      // round-10 stores pinned their parameters in a sibling
+      // `<store>.meta` parquet, which the band store still reads when
+      // its manifest carries no pins
+      import s.implicits._
+      Seq((3, 64, 16, true, 4))
+        .toDF("n", "num_hashes", "bands", "nfc", "id_buckets")
+        .write.parquet(dir + ".meta")
       val drop = docs.where(col("doc_id") % 3 === 0).select("doc_id", "text")
         .unionByName(docs.where(col("doc_id") % 3 =!= 0 && col("doc_id") % 10 === 4)
           .select((col("doc_id") + 5000000L).as("doc_id"),

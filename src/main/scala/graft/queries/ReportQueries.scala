@@ -13,8 +13,9 @@ object ReportQueries {
 
   val defs: Map[String, Q] = Map(
     // 3d. Ratio.R:95-123 — per (month, group, IS slice): newRTT volume
-    // vs completed volume, inner-joined on the multi-column key (J3),
-    // plus a summed "Total" slice (U2), ratio, and the reference's
+    // vs completed volume, kept where both pathways occur (the
+    // reference's multi-key inner join, J3), plus a summed "Total"
+    // slice (U2), ratio, and the reference's
     // '01-MMM-yy' date reconstruction from the monthyr tag (§2.9 dates;
     // 4-digit years here — Spark's 'yy' pivots to 2000-2099 while DuckDB's
     // '%y' pivots at 1969, so 2-digit parses diverge before 2000).
@@ -28,19 +29,20 @@ object ReportQueries {
           .when(col("l_returnflag") === "N", "completed")
           .otherwise("other").as("pathway"),
         col("l_quantity"))
-      // cached: the Total-slice reagg + union would otherwise replay
-      // the fact aggregation twice
-      val base = f0.groupBy("monthyr", "grp", "is_slice", "pathway")
-        .agg(sum("l_quantity").as("n")).cache()
-      val slices = base
-        .groupBy("monthyr", "grp", "pathway")
-        .agg(sum("n").as("n")).withColumn("is_slice", lit("Total"))
-        .unionByName(base)
-      val newRtt = slices.filter(col("pathway") === "newRTT")
-        .select(col("monthyr"), col("grp"), col("is_slice"), col("n").as("n_new"))
-      val fin = slices.filter(col("pathway") === "completed")
-        .select(col("monthyr"), col("grp"), col("is_slice"), col("n").as("n_fin"))
-      newRtt.join(fin, Seq("monthyr", "grp", "is_slice")) // multi-key inner
+      // ONE aggregation over the grouping sets {(month, grp, slice),
+      // (month, grp)}: the second set is the Total slice, and each
+      // pathway's volume is a conditional sum (null where the pathway
+      // never occurs, which the inner-join filter drops). l_quantity
+      // holds whole numbers, so the sums are exact in any order.
+      val (m, g, is) = (col("monthyr"), col("grp"), col("is_slice"))
+      def volume(pathway: String) =
+        sum(when(col("pathway") === pathway, col("l_quantity")))
+      f0.groupingSets(Seq(Seq(m, g, is), Seq(m, g)), m, g, is)
+        .agg(volume("newRTT").as("n_new"), volume("completed").as("n_fin"),
+          grouping(is).as("__total"))
+        .filter(col("n_new").isNotNull && col("n_fin").isNotNull)
+        .withColumn("is_slice",
+          when(col("__total") === 1, lit("Total")).otherwise(is))
         .withColumn("date", date_format(
           to_date(concat(lit("01-"), substring(col("monthyr"), 1, 3), lit("-"),
             substring(col("monthyr"), 4, 4)), "dd-MMM-yyyy"), "yyyy-MM-dd"))
@@ -61,17 +63,19 @@ object ReportQueries {
           // region renamed, matching the reference's manual fixes
           when(col("r_name") === "REGION_0", "REGION_ZERO")
             .otherwise(col("r_name")).as("region")))
-      val vol = Tables.orders(s, d)
+      // ONE aggregation over the grouping sets {(region, priority),
+      // (priority)}: the second set is the ENGLAND block
+      val (r, p) = (col("region"), col("priority"))
+      Tables.orders(s, d)
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .join(region, col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("region"), col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("n"))
-        .cache() // England block re-aggregates this small result
-      val england = vol.groupBy("priority").agg(sum("n").as("n"))
-        .withColumn("region", lit("ENGLAND"))
-      val all = vol.unionByName(england)
-      all
+        .select(r, col("o_orderpriority").as("priority"))
+        .groupingSets(Seq(Seq(r, p), Seq(p)), r, p)
+        .agg(count(lit(1)).as("n"), grouping(r).as("__england"))
+        .withColumn("region",
+          when(col("__england") === 1, lit("ENGLAND")).otherwise(r))
+        .drop("__england")
         // share as x10k-bigint fixed point (260417 = 26.0417%): rounded
         // doubles drift at ulp level between engines (VERDICT r1).
         .withColumn("share_x10k", bround(
@@ -96,14 +100,20 @@ object ReportQueries {
           .otherwise("completenonadmitted").as("typ"),
         when(col("l_discount") > 0.05, "IS").otherwise("NHS").as("independent"),
         when(col("l_quantity") <= 18, 1L).otherwise(0L).as("le18"))
-      // monthly grain first (the reference's input is monthly files);
-      // cached — the All-slice reagg would replay the fact scan
-      val base = f0.groupBy("mdate", "specialty", "typ", "independent")
-        .agg(count(lit(1)).as("n"), sum("le18").as("n18")).cache()
-      val slices = base.unionByName(
-        base.groupBy("mdate", "specialty", "typ")
-          .agg(sum("n").as("n"), sum("n18").as("n18"))
-          .withColumn("independent", lit("All")))
+      // monthly grain first (the reference's input is monthly files),
+      // as ONE aggregation over the grouping sets {(month, specialty,
+      // type, slice), (month, specialty, type)}: the second set is the
+      // All slice
+      val (md, sp, ty, ind) = (col("mdate"), col("specialty"), col("typ"),
+        col("independent"))
+      val slices = f0
+        .groupingSets(Seq(Seq(md, sp, ty, ind), Seq(md, sp, ty)),
+          md, sp, ty, ind)
+        .agg(count(lit(1)).as("n"), sum("le18").as("n18"),
+          grouping(ind).as("__all"))
+        .withColumn("independent",
+          when(col("__all") === 1, lit("All")).otherwise(ind))
+        .drop("__all")
       val byPeriod = slices
         .withColumn("period", graft.schema.Dimensions.covidPeriod(
           col("mdate"), onset = "1994-01-01", reopen = "1996-01-01"))

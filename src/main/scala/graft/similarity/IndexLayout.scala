@@ -61,10 +61,15 @@ private[graft] object IndexLayout {
     * `repoch` is the retraction epoch (the core's `repoch=` line):
     * bumped by every commit that RESETS the tombstone list (maintain
     * rebuilds, [[graft.similarity.Similarity.annIndexVacuum]]) — the
-    * takedown streams' structural replay fence. */
+    * takedown streams' structural replay fence.
+    *
+    * `pins` are the core's write-once parameters (`pin=` lines): the
+    * IVF index pins the corpus size and cell count its coarse
+    * quantizer was trained at (`train_n`, `train_cells`). */
   final case class Snapshot(version: Long, centroids: String,
       pqcents: Option[String], gens: Seq[Gen],
-      tombstones: Seq[Long] = Nil, repoch: Long = 0L)
+      tombstones: Seq[Long] = Nil, repoch: Long = 0L,
+      pins: Map[String, String] = Map.empty)
 
   private[similarity] def fsOf(ss: SparkSession, path: String): FileSystem =
     TableLayout.fsOf(ss, path)
@@ -108,7 +113,7 @@ private[graft] object IndexLayout {
         s"index manifest v${s.version} names no centroids artifact")),
       s.artifacts.get("pqcents"),
       s.gens.map(g => Gen(g.dir, g.exclude.map(_.toInt).sorted)),
-      s.tombstones.map(_.toLong).sorted, s.repoch)
+      s.tombstones.map(_.toLong).sorted, s.repoch, s.pins)
 
   private[similarity] def toCore(s: Snapshot): TableLayout.Snapshot =
     TableLayout.Snapshot(s.version, Some("cell"),
@@ -116,7 +121,7 @@ private[graft] object IndexLayout {
         g.exclude.sorted.map(_.toString))),
       Map("centroids" -> s.centroids) ++
         s.pqcents.map("pqcents" -> _).toMap,
-      s.tombstones.sorted.map(_.toString), s.repoch)
+      s.tombstones.sorted.map(_.toString), s.repoch, s.pins)
 
   /** Highest committed snapshot; `None` for a root with neither a
     * manifest nor a legacy layout (a store not yet built). */
@@ -146,7 +151,7 @@ private[graft] object IndexLayout {
   /** The core GC under the index family's naming contract: drop
     * manifests beyond the newest [[KeepManifests]] and every
     * engine-named artifact no kept manifest references. Never touches
-    * `.batches`, `train.meta`, or lease sidecars. */
+    * `.batches` or lease sidecars. */
   def gc(ss: SparkSession, path: String,
       keepManifests: Int = KeepManifests): Unit =
     TableLayout.gc(ss, path, keepManifests, Fam)

@@ -555,12 +555,18 @@ object Similarity {
       .parquet(s"${path.stripSuffix("/")}/postings-g$v")
 
   /** The snapshot a full (re)build publishes: version `v`'s artifacts,
-    * one postings generation, no tombstones. */
-  private def freshSnapshot(v: Long, pq: Boolean,
-      repoch: Long): IndexLayout.Snapshot =
+    * one postings generation, no tombstones, the given pins. */
+  private def freshSnapshot(v: Long, pq: Boolean, repoch: Long,
+      pins: Map[String, String] = Map.empty): IndexLayout.Snapshot =
     IndexLayout.Snapshot(v, s"centroids-v$v",
       if (pq) Some(s"pqcents-v$v") else None,
-      Seq(IndexLayout.Gen(s"postings-g$v", Nil)), repoch = repoch)
+      Seq(IndexLayout.Gen(s"postings-g$v", Nil)), repoch = repoch,
+      pins = pins)
+
+  /** The IVF index's training-size pins: the corpus size and cell
+    * count its coarse quantizer was trained at. */
+  private def trainPins(n: Long, cells: Int): Map[String, String] =
+    Map("train_n" -> n.toString, "train_cells" -> cells.toString)
 
   /** The live postings relation of the index at `path` (union over
     * postings generations minus superseded cells — see
@@ -603,31 +609,19 @@ object Similarity {
     val codes = trainingCodes(corpus, idCol, vecCol)
     val coarse = kmeansTrain(codes, nCells, iters)
     writeCents(spark, path, v, coarse.cents)
-    // pin the TRAINING-TIME corpus size next to the centroids: index
-    // maintenance sizes its retrain cell count from the growth ratio
-    // (cells' = cells x sqrt(n_now / n_trained)) — preserving the
-    // builder's cells-per-point density choice without re-deriving it
-    writeTrainMeta(spark, path, coarse.n, nCells)
     writePostings(postingsOf(codes, coarse.cents), path, v)
     codes.unpersist()
     // atomic publish: readers flip from the previous snapshot (if
-    // any) to this one manifest-at-a-time, never mid-write
+    // any) to this one manifest-at-a-time, never mid-write. The
+    // snapshot pins the TRAINING-TIME corpus size with the centroids:
+    // index maintenance sizes its retrain cell count from the growth
+    // ratio (cells' = cells x sqrt(n_now / n_trained)) — preserving
+    // the builder's cells-per-point density choice
     IndexLayout.commit(spark, path,
-      freshSnapshot(v, pq = false, resetRepoch(spark, path)), ctx.token)
+      freshSnapshot(v, pq = false, resetRepoch(spark, path),
+        trainPins(coarse.n, nCells)), ctx.token)
     IndexLayout.gc(spark, path)
     }
-  }
-
-  /** Pin `(n, cells)` — the corpus size and cell count the coarse
-    * quantizer was trained at — in `train.meta`. Plain overwrite: a
-    * crash in its delete-then-write window only costs the pin (the
-    * next maintain falls back to the fixed count and re-writes it),
-    * never the index. */
-  private def writeTrainMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, n: Long, cells: Int): Unit = {
-    import spark.implicits._
-    Seq((n, cells)).toDF("n", "cells")
-      .coalesce(1).write.mode("overwrite").parquet(path + "/train.meta")
   }
 
   /** PERSISTENT IVF INDEX — incremental append: assign a delta batch
@@ -837,13 +831,12 @@ object Similarity {
     // the trained size (cell count would double) — below that,
     // centroid re-placement alone restores recall, and a re-size
     // would churn the serving nProbe/nCells ratio for nothing. An
-    // index predating the train.meta pin retrains at the current
-    // count (old behavior) and writes the pin for the next pass.
+    // index without the pin retrains at the current count and pins
+    // it for the next pass.
     val nNow = codes.count()
-    val pinned: Option[(Long, Int)] = try {
-      val r = spark.read.parquet(path + "/train.meta").head()
-      Some((r.getAs[Long]("n"), r.getAs[Int]("cells")))
-    } catch { case _: Exception => None }
+    val pinned: Option[(Long, Int)] = for {
+      n0 <- snap.pins.get("train_n"); c0 <- snap.pins.get("train_cells")
+    } yield (n0.toLong, c0.toInt)
     val kCells = (pinned match {
       case Some((n0, c0)) if n0 > 0 && nNow >= 4L * n0 =>
         math.max(nCells,
@@ -863,10 +856,10 @@ object Similarity {
     // the growth ratio stays CUMULATIVE since the last resize —
     // re-pinning every maintain would reset the 4x hysteresis each
     // pass and sub-4x-per-maintain growth would never trigger a
-    // resize despite unbounded cumulative growth. Written after the
-    // commit: the pin describes the live centroids.
-    () => if (kCells != nCells || pinned.isEmpty)
-      writeTrainMeta(spark, path, nNow, kCells)
+    // resize despite unbounded cumulative growth. The pins ride the
+    // rebuild's own commit, so they always describe the live centroids.
+    if (kCells != nCells || pinned.isEmpty) trainPins(nNow, kCells)
+    else snap.pins
     }
 
   /** The maintain protocol both index families share: measure served
@@ -875,16 +868,16 @@ object Similarity {
     * single-writer lease — so a concurrent append cannot land between
     * the rebuild's read and the commit and be silently dropped —
     * resolve the live snapshot, let `rebuild(snap, v)` write version
-    * `v`'s artifacts to fresh directories, publish them in ONE atomic
-    * manifest commit (a serve racing the rebuild reads the old or the
-    * new snapshot, never a torn artifact set; a crash before the
-    * commit leaves the old snapshot live, orphans GC'd), run the
-    * post-commit step `rebuild` returned, and re-measure. The rebuild
+    * `v`'s artifacts to fresh directories and return the fresh
+    * snapshot's pins, publish them in ONE atomic manifest commit (a
+    * serve racing the rebuild reads the old or the new snapshot, never
+    * a torn artifact set; a crash before the commit leaves the old
+    * snapshot live, orphans GC'd), and re-measure. The rebuild
     * folds tombstoned ids out and the fresh snapshot resets the list,
     * so the commit bumps the retraction epoch (takedown-replay fence). */
   private def maintainIndex(what: String, queries: DataFrame, k: Int,
       path: String, recallFloor: Double, recall: => DataFrame)(
-      rebuild: (IndexLayout.Snapshot, Long) => () => Unit): IvfMaintainReport = {
+      rebuild: (IndexLayout.Snapshot, Long) => Map[String, String]): IvfMaintainReport = {
     require(recallFloor >= 0.0 && recallFloor <= 1.0,
       "recallFloor must be in [0, 1]")
     val spark = queries.sparkSession
@@ -894,21 +887,24 @@ object Similarity {
       if (r.isNullAt(0)) 1.0 else r.getDouble(0)
     }
     val before = meanRecall()
-    if (before >= recallFloor) return IvfMaintainReport(before, false, None)
+    if (before >= recallFloor) {
+      log.info(f"$what: recall@$k $before%.4f >= floor " +
+        f"$recallFloor%.4f at $path — no rebuild")
+      return IvfMaintainReport(before, false, None)
+    }
     log.info(f"$what: recall@$k $before%.4f < floor $recallFloor%.4f " +
       f"at $path — rebuilding")
     graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
       val snap = IndexLayout.resolve(spark, path)
       val v = snap.version + 1
-      val afterCommit = rebuild(snap, v)
+      val pins = rebuild(snap, v)
       // the rebuilt index keeps its family: a residual codebook iff
       // the live snapshot has one
       IndexLayout.commit(spark, path, freshSnapshot(v,
         snap.pqcents.isDefined,
-        graft.ops.Tombstones.nextEpoch(snap.repoch, snap.tombstones)),
-        ctx.token)
+        graft.ops.Tombstones.nextEpoch(snap.repoch, snap.tombstones),
+        pins), ctx.token)
       IndexLayout.gc(spark, path)
-      afterCommit()
       val after = meanRecall()
       log.info(f"$what: rebuilt $path — recall@$k " +
         f"$before%.4f -> $after%.4f")
@@ -2182,7 +2178,7 @@ object Similarity {
       itersCoarse, rcb0.m, rcb0.ks, itersPq, path, v,
       if (warmStart) Some(coarse0) else None,
       if (warmStart) Some(rcb0) else None)
-    () => ()
+    snap.pins
     }
 
   /** [[ivfPqIndexTopK]] with RECALL@K AS AN OBSERVABLE — the

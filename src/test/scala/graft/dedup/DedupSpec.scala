@@ -749,19 +749,18 @@ class DedupSpec extends AnyFunSuite {
     val rowsN = graft.ops.TableLayout.read(spark, dirN).collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(rowsC == rowsN)
-    // health observable: profile rows for all store columns (incl. the
-    // in-row nfc pin) + file stats
+    // health observable: profile rows for all store columns + file stats
     val health = Dedup.storeHealth(spark, dirC).collect()
-    assert(health.length == 3)
+    assert(health.length == 2)
     val fpRow = health.find(_.getString(0) == "fingerprint").get
     assert(fpRow.getAs[Long]("n_rows") == 2L + 5L)
     assert(fpRow.getAs[Long]("n_distinct") == 7L)
     assert(fpRow.getAs[Long]("n_files") >= 1L)
     assert(fpRow.getAs[Long]("total_bytes") > 0L)
     assert(fpRow.getAs[Long]("max_files_per_dir") >= 1L)
-    // the in-row pin is uniform across batches and swaps
-    val nfcRow = health.find(_.getString(0) == "nfc").get
-    assert(nfcRow.getAs[Long]("n_distinct") == 1L)
+    // the manifest pin survives the compaction swaps
+    assert(graft.ops.TableLayout.resolve(spark, dirC).pins ==
+      Map("nfc" -> "true"))
   }
 
   test("LSH store compaction: candidate sets invariant across the swap") {
@@ -790,7 +789,7 @@ class DedupSpec extends AnyFunSuite {
       val expect = ((10L +: (0 until i).map(100L + _)).map(s => (100L + i, s))).toSet
       assert(pairs == expect, s"drop $i: got $pairs, want $expect")
     }
-    // params still validate after swaps (meta + in-row agreement)
+    // params still validate after swaps (the manifest pins)
     val ex = intercept[IllegalArgumentException] {
       Dedup.lshIncrementalIngest(
         Seq((999L, "x y z a b c")).toDF("doc_id", "text"),
@@ -800,7 +799,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("cluster table: persisted-derived artifacts equal from-scratch") {
-    import spark.implicits._
     val dir = graft.util.TempDirs.scoped("dedup-clustertable").toString + "/store"
     Dedup.clusterTableInit(docs, "doc_id", "text", dir)
     // from-scratch labels (the same pipeline, not persisted)
@@ -1075,6 +1073,200 @@ class DedupSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("does not match the store"))
   }
 
+  /** The live manifest's pins of the store at `dir`. */
+  private def pinsAt(dir: String): Map[String, String] =
+    graft.ops.TableLayout.resolve(spark, dir).pins
+
+  /** Commit the live snapshot again WITHOUT its pins — a store whose
+    * manifest carries none (one initialized before the pins moved
+    * there). */
+  private def dropPins(dir: String): Unit =
+    graft.ops.StoreLock.withLockCtx(spark, dir) { ctx =>
+      val s = graft.ops.TableLayout.resolve(spark, dir)
+      graft.ops.TableLayout.commit(spark, dir,
+        s.copy(version = s.version + 1L, pins = Map.empty), ctx.token)
+    }
+
+  /** Run `mutate`, which must commit a new snapshot of `dir`, and check
+    * that the commit carried `want` forward. */
+  private def rewriteKeepsPins(dir: String, want: Map[String, String],
+      what: String)(mutate: => Unit): Unit = {
+    val v0 = graft.ops.TableLayout.resolve(spark, dir).version
+    mutate
+    assert(graft.ops.TableLayout.resolve(spark, dir).version > v0,
+      s"$what must commit a snapshot of $dir")
+    assert(pinsAt(dir) == want, s"$what dropped the pins of $dir")
+  }
+
+  test("fingerprint store: the nfc pin rides the manifest through every " +
+      "rewrite") {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.scoped("dedup-fppin").toString + "/store"
+    Dedup.fingerprintStoreInit(
+      Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text"),
+      "doc_id", "text", dir, nfc = false)
+    val want = Map("nfc" -> "false")
+    assert(pinsAt(dir) == want)
+    assert(!new java.io.File(dir + ".meta").exists(), "no sidecar pin")
+    assert(graft.ops.TableLayout.read(spark, dir).columns.toSeq ==
+      Seq("fingerprint", "first_id"), "no in-row pin")
+    def ingest(i: Int, nfc: Boolean) = Dedup.incrementalIngest(
+        Seq((10L + i, s"novel text $i")).toDF("doc_id", "text"),
+        "doc_id", "text", dir, compactAfterFiles = 1, nfc = nfc)
+      .collect()
+    (0 until 2).foreach { i =>
+      // threshold 1: every ingest's append triggers the compaction
+      // republish
+      rewriteKeepsPins(dir, want, s"compaction $i")(ingest(i, nfc = false))
+      val e = intercept[IllegalArgumentException](ingest(100 + i, nfc = true))
+      assert(e.getMessage.contains("does not match the store"))
+    }
+    rewriteKeepsPins(dir, want, "expire")(
+      graft.ops.TableLayout.expire(spark, dir))
+    // a manifest without the pin fails loudly
+    dropPins(dir)
+    val e = intercept[IllegalStateException](ingest(200, nfc = false))
+    assert(e.getMessage.contains("no fingerprint-version pin"))
+  }
+
+  test("band store: parameter pins ride the manifest through every " +
+      "rewrite; a round-10 store validates against its .meta") {
+    import spark.implicits._
+    // unrelated fillers spread the standing ids over every id bucket,
+    // so each drop's append lands a second file in some bucket and the
+    // per-bucket compaction (threshold 1) fires on every ingest
+    val standing = (Seq(
+      (10L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (11L, "one two three four five six seven eight nine")) ++
+      (12L until 20L).map(j => (j, (0 to 8).map(w => s"f$j-$w").mkString(" "))))
+      .toDF("doc_id", "text")
+    def drop(i: Int) = Seq(
+      (100L + i, s"alpha beta gamma delta epsilon zeta eta theta tail$i"))
+      .toDF("doc_id", "text")
+    val texts = (0 until 4).map(drop).foldLeft(standing)(_ unionByName _)
+    def ingest(dir: String, i: Int, bands: Int = 16) =
+      Dedup.lshIncrementalIngest(drop(i), texts, "doc_id", "text", dir,
+        bands = bands, compactAfterFiles = 1).collect()
+    def driftFails(dir: String): Unit = {
+      val e = intercept[IllegalArgumentException](ingest(dir, 3, bands = 8))
+      assert(e.getMessage.contains("does not match the store"))
+    }
+    // flat (whole-store compaction) and id-bucketed (per-bucket
+    // compaction) layouts
+    Seq(0, 4).foreach { ib =>
+      val dir = graft.util.TempDirs.scoped(s"dedup-lshpin$ib").toString +
+        "/store"
+      Dedup.lshStoreInit(standing, "doc_id", "text", dir, idBuckets = ib)
+      val want = Map("n" -> "3", "num_hashes" -> "64", "bands" -> "16",
+        "nfc" -> "true", "id_buckets" -> ib.toString)
+      assert(pinsAt(dir) == want)
+      assert(!new java.io.File(dir + ".meta").exists(), "no sidecar pin")
+      assert(graft.ops.TableLayout.read(spark, dir).columns.toSet ==
+        Set("doc_id", "band", "bh") ++ (if (ib > 0) Set("ib") else Set()),
+        "no in-row pins")
+      (0 until 2).foreach { i =>
+        rewriteKeepsPins(dir, want, s"compaction $i (idBuckets=$ib)")(
+          ingest(dir, i))
+        driftFails(dir)
+      }
+      dropPins(dir)
+      val e = intercept[IllegalStateException](ingest(dir, 2))
+      assert(e.getMessage.contains("parameter pin"))
+    }
+    // a round-10 store: bare ib=* partition dirs at the root, no
+    // manifest, the parameters in a sibling <store>.meta parquet
+    val dir = graft.util.TempDirs.scoped("dedup-lshround10").toString +
+      "/store"
+    Dedup.lshStoreInit(standing, "doc_id", "text", dir, idBuckets = 4)
+    val root = new java.io.File(dir)
+    new java.io.File(root, "data-g1").listFiles()
+      .filter(_.getName.startsWith("ib="))
+      .foreach(d => assert(d.renameTo(new java.io.File(root, d.getName))))
+    root.listFiles().filter(f => f.getName.startsWith("_manifest-v") ||
+        f.getName == "data-g1")
+      .foreach(f => org.apache.commons.io.FileUtils.forceDelete(f))
+    val meta = dir + ".meta"
+    Seq((3, 64, 16, true, 4))
+      .toDF("n", "num_hashes", "bands", "nfc", "id_buckets")
+      .write.parquet(meta)
+    assert(graft.ops.TableLayout.resolve(spark, dir).pins.isEmpty)
+    assert(ingest(dir, 0).map(_.getLong(1)).toSet == Set(10L))
+    driftFails(dir)
+    // without the .meta the store has no pins at all: loud
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(meta))
+    val e = intercept[IllegalStateException](ingest(dir, 1))
+    assert(e.getMessage.contains("parameter pin"))
+  }
+
+  test("cluster table: labels and band-store pins ride the manifests " +
+      "through ingest merges and retraction purges") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (3L, "one two three four five six seven eight nine"),
+      (4L, "red orange yellow green blue indigo violet white"))
+      .toDF("doc_id", "text")
+    val drop = Seq((10L, "one two three four five six seven eight nine ten"))
+      .toDF("doc_id", "text")
+    val texts = corpus.unionByName(drop)
+    val dir = graft.util.TempDirs.scoped("dedup-ctpin").toString + "/store"
+    Dedup.clusterTableInit(corpus, "doc_id", "text", dir, idBuckets = 4)
+    val (labels, lsh) = (dir + "/labels", dir + "/lsh")
+    val wantLabels = Map("id_buckets" -> "4", "nfc" -> "true")
+    val wantLsh = Map("n" -> "3", "num_hashes" -> "64", "bands" -> "16",
+      "nfc" -> "true", "id_buckets" -> "4")
+    assert(pinsAt(labels) == wantLabels && pinsAt(lsh) == wantLsh)
+    assert(!new java.io.File(labels + ".meta").exists() &&
+      !new java.io.File(dir + "/labels.meta").exists() &&
+      !new java.io.File(lsh + ".meta").exists(), "no sidecar pins")
+    assert(graft.ops.TableLayout.read(spark, labels).columns.toSet ==
+      Set("doc_id", "cluster", "ver", "ib"), "no in-row pins")
+    def driftFails(): Unit = {
+      val e = intercept[IllegalArgumentException](
+        Dedup.clusterTableIngest(drop, texts, "doc_id", "text", dir,
+          bands = 8))
+      assert(e.getMessage.contains("does not match the store"))
+    }
+    // ingest: the labels merge (mergeByKey -> partition rewrite)
+    rewriteKeepsPins(labels, wantLabels, "ingest merge")(
+      Dedup.clusterTableIngest(drop, texts, "doc_id", "text", dir)
+        .collect())
+    assert(pinsAt(lsh) == wantLsh)
+    driftFails()
+    // retraction: partition purges of both stores
+    val lshV0 = graft.ops.TableLayout.resolve(spark, lsh).version
+    rewriteKeepsPins(labels, wantLabels, "retract purge")(
+      Dedup.clusterTableRetract(Seq(3L).toDF("doc_id"), texts,
+        "doc_id", "text", dir))
+    assert(graft.ops.TableLayout.resolve(spark, lsh).version > lshV0,
+      "the retraction must purge the band store")
+    assert(pinsAt(lsh) == wantLsh, "the band-store purge dropped its pins")
+    driftFails()
+    assert(Dedup.clusterTable(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 10L -> 10L))
+    // a band store whose pins cannot be read: the retraction fails
+    // loudly BEFORE any commit — both stores and the table unchanged
+    dropPins(lsh)
+    def state(p: String) = (graft.ops.TableLayout.resolve(spark, p).version,
+      graft.ops.TableLayout.read(spark, p).collect().map(_.toString).sorted
+        .toSeq)
+    val (labels0, lsh0) = (state(labels), state(lsh))
+    val e = intercept[IllegalStateException](
+      Dedup.clusterTableRetract(Seq(4L).toDF("doc_id"), texts,
+        "doc_id", "text", dir))
+    assert(e.getMessage.contains("parameter pin"))
+    assert(state(labels) == labels0 && state(lsh) == lsh0)
+    assert(!new java.io.File(dir + "/retract.intent").exists(),
+      "no retraction intent may be left pending")
+    // a labels store without its pin fails loudly too
+    dropPins(labels)
+    val e2 = intercept[IllegalStateException](
+      Dedup.clusterTableIngest(drop, texts, "doc_id", "text", dir))
+    assert(e2.getMessage.contains("labels-layout pin"))
+  }
+
   /** Live md5s per bucket across the store's snapshot generations —
     * the byte-identical observable for the partition-scoped-purge
     * contract, on the manifest-versioned layout. */
@@ -1281,18 +1473,17 @@ class DedupSpec extends AnyFunSuite {
     assert(after == before)
   }
 
-  test("session pin cache revalidates after a re-init (meta rewrite " +
-      "invalidates the cached fold)") {
+  test("a re-init under the other fold re-pins the store: the old " +
+      "setting then fails loudly") {
     import spark.implicits._
     val dir = graft.util.TempDirs.scoped("dedup-pincache").toString + "/store"
     val corpus = Seq((1L, "alpha beta")).toDF("doc_id", "text")
     Dedup.fingerprintStoreInit(corpus, "doc_id", "text", dir, nfc = true)
-    // warm the session pin cache
     Dedup.incrementalIngest(Seq((10L, "x y")).toDF("doc_id", "text"),
       "doc_id", "text", dir).collect()
-    // re-init under the OTHER fold: the meta rewrite must invalidate
-    // the cached pin, so an nfc=true ingest now fails loudly instead of
-    // riding the stale cache into silent misclassification
+    // re-init under the OTHER fold: the re-init's commit re-pins the
+    // store, so an nfc=true ingest now fails loudly instead of
+    // silently misclassifying
     Dedup.fingerprintStoreInit(corpus, "doc_id", "text", dir, nfc = false)
     val e = intercept[IllegalArgumentException] {
       Dedup.incrementalIngest(Seq((11L, "p q")).toDF("doc_id", "text"),

@@ -8,7 +8,6 @@ class SamplingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("splitLabel partitions every key into exactly one split, near the target fractions") {
-    import spark.implicits._
     val n = 100000L
     val df = spark.range(n).toDF("id")
       .withColumn("split", Sampling.splitLabel(col("id")))
@@ -21,7 +20,6 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("split membership is a pure function of the key (repartition-invariant)") {
-    import spark.implicits._
     val base = spark.range(10000).toDF("id")
     def labels(parts: Int): Map[Long, String] =
       base.repartition(parts)
@@ -31,7 +29,6 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("sampled keeps ~keepBp/10000 and is a subset relation across rates") {
-    import spark.implicits._
     val df = spark.range(100000).toDF("id")
     val at1pct = df.filter(Sampling.sampled(col("id"), 100))
       .collect().map(_.getLong(0)).toSet
@@ -71,7 +68,6 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("stratifiedQuota: exact quotas, small strata kept whole, prune == plain window") {
-    import spark.implicits._
     val df = spark.range(1000).toDF("id")
       .withColumn("stratum",
         when(col("id") < 900, concat(lit("big"), (col("id") % 3).cast("string")))
@@ -101,7 +97,6 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("shuffledPositions: permutation, equals global-order rank, seed-sensitive, shard-invariant") {
-    import spark.implicits._
     val n = 5000L
     val df = spark.range(n).toDF("id").repartition(7)
     val out = Sampling.shuffledPositions(df, "id", seed = 7L, shards = 16)
@@ -224,7 +219,6 @@ class SamplingSpec extends AnyFunSuite {
     var cum = 0L
     val cums = rows.map { r => cum += r._2; cum }
     val budget = cums(rows.length / 2)
-    var c2 = 0L
     val expected = rows.zip(cums).flatMap { case (r, c) =>
       if (c <= budget) Some(r._1 -> c) else None }.toMap
     for (shards <- Seq(3, 64)) {

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 

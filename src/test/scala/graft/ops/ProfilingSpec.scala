@@ -48,7 +48,6 @@ class ProfilingSpec extends AnyFunSuite {
   }
 
   test("approxDistinct stays within the HLL envelope") {
-    import spark.implicits._
     val t = spark.range(10000).toDF("id")
     val exact = Profiling.profile(t, Seq("id")).head().getLong(3)
     val approx = Profiling.profile(t, Seq("id"), approxDistinct = true)

@@ -48,7 +48,6 @@ class SnapshotDiffSpec extends AnyFunSuite {
   }
 
   test("round-trip law: applyDiff(old, diff(old, new)) == new on random snapshots") {
-    import spark.implicits._
     val rnd = new scala.util.Random(11)
     def snapRand(keys: Seq[Long]) = snap(keys.map { k =>
       (k, Seq("A", "B", "C")(rnd.nextInt(3)),

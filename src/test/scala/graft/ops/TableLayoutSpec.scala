@@ -56,6 +56,24 @@ class TableLayoutSpec extends AnyFunSuite {
       "the PREVIOUS generation is the reader grace window")
   }
 
+  test("pins round-trip through the manifest; a pin carrying a manifest " +
+      "delimiter is rejected before anything commits") {
+    val path = graft.util.TempDirs.scoped("tl-pins").toString + "/store"
+    val pins = Map("n" -> "3", "nfc" -> "true", "k=v" -> "a=b c")
+    lockedToken(path)(t =>
+      TableLayout.publish(mk(0L to 3L, "x"), path, Some("ib"), t,
+        pins = pins))
+    assert(TableLayout.resolve(spark, path).pins == pins)
+    Seq("a;b", "a,b", "a\nb").foreach { bad =>
+      val e = intercept[IllegalArgumentException](lockedToken(path)(t =>
+        TableLayout.publish(mk(0L to 3L, "y"), path, Some("ib"), t,
+          pins = Map("p" -> bad))))
+      assert(e.getMessage.contains("manifest delimiter"))
+    }
+    assert(TableLayout.resolve(spark, path).version == 1L)
+    assert(rows(TableLayout.read(spark, path)) == rows(mk(0L to 3L, "x")))
+  }
+
   test("reader isolation: a snapshot resolved before a rewrite serves " +
       "its complete pre-rewrite content afterwards") {
     val path = graft.util.TempDirs.scoped("tl-iso").toString + "/store"

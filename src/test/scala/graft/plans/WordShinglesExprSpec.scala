@@ -44,7 +44,6 @@ class WordShinglesExprSpec extends AnyFunSuite {
   }
 
   test("Dedup.shingles relation unchanged by the kernel rewrite") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
     // old shape restated inline: explode HOF grams + distinct
     val old = docs.select(col("doc_id"),

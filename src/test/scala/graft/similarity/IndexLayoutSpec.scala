@@ -271,7 +271,6 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   test("annIndexRetract on the IVFADC layout: the PQ serve excludes " +
       "tombstoned ids through the same snapshot reader") {
-    import spark.implicits._
     val path = graft.util.TempDirs.scoped("layout-retract-pq").toString
     val corpus = emb.filter(col("vec_id") < 64)
     Similarity.ivfPqIndexBuild(corpus, "vec_id", "embedding",
@@ -404,7 +403,6 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   test("pre-unification manifest (no pcol= line, dedicated centroids= " +
       "key) stays fully mutable: append and compact succeed on it") {
-    import spark.implicits._
     val path = graft.util.TempDirs.scoped("layout-preuni").toString
     val f = fs(path)
     val corpus = emb.filter(col("vec_id") < 60)

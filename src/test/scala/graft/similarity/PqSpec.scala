@@ -276,7 +276,6 @@ class PqSpec extends AnyFunSuite {
 
   test("ivfIndexCompact: touched cells rewritten to ~one file, " +
       "untouched cells byte-identical, serving value-invisible") {
-    import spark.implicits._
     val path = graft.util.TempDirs.scoped("ivfpq-compact").toString
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     Similarity.ivfPqIndexBuild(emb.filter(col("vec_id") % 4 === 0),
@@ -414,7 +413,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("index mutations hold the single-writer lease; contention is loud") {
-    import spark.implicits._
     val path = graft.util.TempDirs.scoped("pqspec-lease").toString
     val corpus = emb.filter(col("vec_id") < 40)
     Similarity.ivfPqIndexBuild(corpus, "vec_id", "embedding",

@@ -317,19 +317,61 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("ivfIndexBuild pins the training corpus size in train.meta") {
+  /** The live snapshot's IVF training-size pins as (n, cells). */
+  private def trainPin(path: String): (Long, Int) = {
+    val pins = IndexLayout.resolve(spark, path).pins
+    (pins("train_n").toLong, pins("train_cells").toInt)
+  }
+
+  test("ivfIndexBuild pins the training corpus size in the manifest") {
     val path = graft.util.TempDirs.scoped("ivf-meta-spec").toString
     val corpus = emb.filter(col("vec_id") % 3 =!= 0)
     Similarity.ivfIndexBuild(corpus, "vec_id", "embedding",
       nCells = 4, iters = 2, path = path)
-    val meta = spark.read.parquet(path + "/train.meta").head()
-    assert(meta.getAs[Long]("n") == corpus.count())
-    assert(meta.getAs[Int]("cells") == 4)
+    val (n, cells) = trainPin(path)
+    assert(n == corpus.count())
+    assert(cells == 4)
+  }
+
+  test("IVF training-size pins ride the manifest through every rewrite") {
+    import spark.implicits._
+    val path = graft.util.TempDirs.scoped("ivf-pin-rewrites").toString
+    val base = emb.filter(col("vec_id") % 2 === 0)
+    val nBase = base.count()
+    Similarity.ivfIndexBuild(base, "vec_id", "embedding",
+      nCells = 4, iters = 2, path = path)
+    assert(trainPin(path) == ((nBase, 4)))
+    assert(!new java.io.File(path, "train.meta").exists(),
+      "the pin lives in the manifest, not in a sidecar")
+    val ids = base.select("vec_id").as[Long].collect().sorted
+    // each rewrite commits a new snapshot and must carry the pin
+    def rewrite(what: String)(mutate: => Unit): Unit = {
+      val v0 = IndexLayout.resolve(spark, path).version
+      mutate
+      assert(IndexLayout.resolve(spark, path).version > v0,
+        s"$what must commit a snapshot")
+      assert(trainPin(path) == ((nBase, 4)), s"$what dropped the pin")
+    }
+    // appends add one file per touched cell; a threshold of 1 then
+    // rewrites every appended cell
+    Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 2 =!= 0),
+      "vec_id", "embedding", path)
+    rewrite("compaction")(
+      Similarity.ivfIndexCompact(spark, path, maxFilesPerCell = 1))
+    rewrite("retract")(Similarity.annIndexRetract(spark, path, ids.take(3)))
+    rewrite("vacuum")(Similarity.annIndexVacuum(spark, path))
+    rewrite("expire")(Similarity.annIndexExpire(spark, path))
+    // a maintain that re-places centroids without a resize (2x growth
+    // < the 4x hysteresis) keeps the pinned baseline
+    val queries = emb.filter(col("vec_id") < 10)
+    rewrite("maintain")(assert(Similarity.ivfIndexMaintain(queries,
+      "vec_id", "embedding", k = 5, nProbe = 1, path = path,
+      recallFloor = 1.0).retrained))
+    assert(Similarity.indexCentroids(spark, path).count() == 4L)
   }
 
   test("ivfIndexMaintain: skewed appends degrade recall; retrain recovers it") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val path = graft.util.TempDirs.scoped("ivf-maintain-spec").toString
     // deterministic jitter so clusters have spread without RNG
     def jit(i: Int, j: Int): Float = (((i * 31 + j * 17) % 7) - 3) * 0.02f
@@ -377,7 +419,6 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivfIndexMaintain: 10x skewed growth retrains at an adaptively " +
       "larger cell count; recall floor holds") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val path = graft.util.TempDirs.scoped("ivf-adaptive-spec").toString
     def jit(i: Int, j: Int): Float = (((i * 31 + j * 17) % 7) - 3) * 0.02f
     val baseA = (0 until 40).map(i => (i.toLong,
@@ -409,8 +450,8 @@ class SimilaritySpec extends AnyFunSuite {
     val cells = Similarity.indexCentroids(spark, path).count()
     assert(cells == 10L, s"adaptive cell count: expected 10, got $cells")
     // ... and the training-size pin advanced to the retrained state
-    val meta = spark.read.parquet(path + "/train.meta").head()
-    assert(meta.getAs[Long]("n") == 880L && meta.getAs[Int]("cells") == 10)
+    val (metaN, metaCells) = trainPin(path)
+    assert(metaN == 880L && metaCells == 10)
     // recall recovered despite 3x the cells at the same nProbe
     assert(r.recallAfter.get >= 0.9,
       s"recall floor did not hold after adaptive retrain: $r")
@@ -450,9 +491,9 @@ class SimilaritySpec extends AnyFunSuite {
     // THE FIX: the no-resize retrain must keep the (80, 3) baseline —
     // re-pinning (240, 3) here would reset the growth ratio and a
     // steady sub-4x-per-maintain stream would never resize
-    val m1 = spark.read.parquet(path + "/train.meta").head()
-    assert(m1.getAs[Long]("n") == 80L && m1.getAs[Int]("cells") == 3,
-      s"pin was reset on a no-resize retrain: (${m1.get(0)}, ${m1.get(1)})")
+    val m1 = trainPin(path)
+    assert(m1._1 == 80L && m1._2 == 3,
+      s"pin was reset on a no-resize retrain: (${m1._1}, ${m1._2})")
     // append 2: cumulative growth 340/80 = 4.25x >= 4x -> the NEXT
     // maintain resizes to round(3 * sqrt(340/80)) = 6 cells. The new
     // cluster must degrade nProbe=1 recall again, so it is placed ON
@@ -489,9 +530,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r2.retrained, f"expected retrain: recall=${r2.recallBefore}%.4f")
     assert(Similarity.indexCentroids(spark, path).count() == 6L,
       "cumulative 4.25x growth must resize 3 -> 6 cells")
-    val m2 = spark.read.parquet(path + "/train.meta").head()
-    assert(m2.getAs[Long]("n") == 340L && m2.getAs[Int]("cells") == 6,
-      s"resize must advance the pin: (${m2.get(0)}, ${m2.get(1)})")
+    val m2 = trainPin(path)
+    assert(m2._1 == 340L && m2._2 == 6,
+      s"resize must advance the pin: (${m2._1}, ${m2._2})")
   }
 
   test("retrievalEval: hand-computed MRR/hits/recall, zero-hit query") {

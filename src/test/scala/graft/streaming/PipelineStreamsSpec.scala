@@ -377,7 +377,6 @@ class PipelineStreamsSpec extends AnyFunSuite {
 
   test("clusterIngestStream: streamed drops yield from-scratch labels") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val c = "one two three four five six seven eight nine ten"
     val standing = Seq((10L, a), (30L, c)).toDF("doc_id", "text")

@@ -42,7 +42,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful sessionization closes the same sessions as the batch twin") {
-    import spark.implicits._
     val typed = EventStreams.toTypedEvents(Tables.events(spark, sf))
     // run the SAME stateful logic in batch mode (flatMapGroupsWithState
     // works on batch Datasets too): all sessions except each user's
