@@ -1835,12 +1835,8 @@ object Dedup {
     * must never be served silently. */
   def clusterTable(ss: SparkSession, storePath: String): DataFrame = {
     requireNoPendingRetraction(ss, storePath)
-    clusterTableUnchecked(ss, storePath)
-  }
-
-  private def clusterTableUnchecked(ss: SparkSession,
-      storePath: String): DataFrame =
     graft.ops.TableLayout.read(ss, storePath + "/labels")
+  }
 
   private def retractMarkerPath(storePath: String): String =
     storePath + "/retract.intent"
@@ -1859,37 +1855,36 @@ object Dedup {
           "folded in automatically — then reads and ingests resume.")
   }
 
-  /** Validate the labels-layout pin ([[clusterTableInit]]) and return
-    * (idBuckets, nfcFold) — every mutation path must run under the
-    * pinned layout or the partition merge corrupts the table. Also
-    * rejects a table with a pending retraction marker (ingesting over
-    * silently-incomplete state would bake the partial retraction in);
-    * [[clusterTableRetract]] itself reads the pin unchecked, since
-    * completing the pending retraction is exactly its job. */
-  private def labelsPin(ss: SparkSession, storePath: String): (Int, Boolean) = {
+  /** The labels snapshot a mutation starts from, resolved once, with
+    * its validated layout pin ([[clusterTableInit]]):
+    * `(idBuckets, nfcFold, snap)`. Every mutation path must run under
+    * the pinned layout or the partition merge corrupts the table. A
+    * mutation's rows carry `ver = snap.version + 1`, the version of
+    * the one labels commit that writes them: init writes `ver = 0` at
+    * version >= 1 and a compaction bumps the version alone, so every
+    * live `ver` is at most the live version and the merge's "strictly
+    * greater wins" holds. Also rejects a table with a pending
+    * retraction marker (ingesting over silently-incomplete state would
+    * bake the partial retraction in); [[clusterTableRetract]] itself
+    * reads the pin unchecked, since completing the pending retraction
+    * is exactly its job. */
+  private def labelsPin(ss: SparkSession,
+      storePath: String): (Int, Boolean, graft.ops.TableLayout.Snapshot) = {
     requireNoPendingRetraction(ss, storePath)
     labelsPinUnchecked(ss, storePath)
   }
 
-  private def labelsPinUnchecked(ss: SparkSession,
-      storePath: String): (Int, Boolean) = {
-    val pins = graft.ops.TableLayout.resolveOpt(ss, storePath + "/labels")
-      .fold(Map.empty[String, String])(_.pins)
-    (for (ib <- pins.get("id_buckets"); nfc <- pins.get("nfc"))
-      yield (ib.toInt, nfc.toBoolean)).getOrElse(
+  private def labelsPinUnchecked(ss: SparkSession, storePath: String)
+      : (Int, Boolean, graft.ops.TableLayout.Snapshot) = {
+    val snap = graft.ops.TableLayout.resolveOpt(ss, storePath + "/labels")
+    (for (s <- snap; ib <- s.pins.get("id_buckets");
+          nfc <- s.pins.get("nfc"))
+      yield (ib.toInt, nfc.toBoolean, s)).getOrElse(
       throw new IllegalStateException(
         s"no labels-layout pin in the manifest at $storePath/labels — " +
           "the cluster table was not initialized by this version's " +
           "clusterTableInit; re-init the table"))
   }
-
-  /** The labels table's last-written version per store — valid only
-    * while our own mutation was the store's LAST (the lock context's
-    * `priorEpoch` proves it), in which case the max-ver aggregate job
-    * every drop otherwise pays is skipped. Any other writer's
-    * mutation stamps a different epoch and forces the recompute. */
-  private val verCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
 
   /** INCREMENTAL cluster-table maintenance — near-dup clustering as an
     * always-on ingest instead of a batch rebuild. Classifies a new
@@ -1924,12 +1919,12 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       checkpointDir: Option[String] = None): DataFrame = {
     val ss = drop.sparkSession
-    graft.ops.StoreLock.withLockCtx(ss, storePath) { ctx =>
+    graft.ops.StoreLock.withLock(ss, storePath) {
     // layout comes from the PIN, never from a caller parameter — a
     // drifted idBuckets would violate the keys-don't-move merge
     // precondition (duplicate live rows); a drifted fold, the bucket
     // hashes (lshIncrementalIngest revalidates the latter)
-    val (idBuckets, nfcFold) = labelsPin(ss, storePath)
+    val (idBuckets, nfcFold, labelsSnap) = labelsPin(ss, storePath)
     if (drop.isEmpty) {
       // empty drop (idle streaming trigger): nothing to pair, label,
       // or version-bump — return the empty label set for the price of
@@ -1952,7 +1947,8 @@ object Dedup {
         storePath + "/lsh", n, numHashes, bands, threshold,
         nfcFold = nfcFold, precomputedBuckets = Some(dropBuckets))
       .select("drop_id", "store_id")
-    val labels = clusterTable(ss, storePath)
+    val labels = graft.ops.TableLayout.readAt(ss, storePath + "/labels",
+      labelsSnap)
     // cached: the upstream plan is the WHOLE probe-and-verify pipeline
     // (lazy on return from lshIncrementalIngest) — consumed by the CC
     // edge cache AND the node derivation, it would otherwise re-run
@@ -1974,14 +1970,7 @@ object Dedup {
     val comp = connectedComponents(nodes, idCol, edges,
       checkpointDir = checkpointDir).cache()
     xLab.unpersist()
-    // version source: the session cache when our own merge was the
-    // store's last mutation (priorEpoch proves no interloper), else
-    // the max-ver aggregate over the labels table
-    val newVer = Option(verCache.get(storePath))
-      .filter { case (_, tok) => ctx.priorEpoch.contains(tok) }
-      .map(_._1 + 1L)
-      .getOrElse(labels.agg(coalesce(max("ver"), lit(0L)))
-        .head().getLong(0) + 1L)
+    val newVer = labelsSnap.version + 1L
     val dropLab = comp
       .join(drop.select(col(idCol).as("id")), Seq("id"), "left_semi")
     // touched labels whose component min moved: remap old -> new
@@ -2007,7 +1996,6 @@ object Dedup {
         updates, Seq(idCol), "ver", lctx.token)
     }
     updates.unpersist()
-    verCache.put(storePath, (newVer, ctx.token))
     comp.unpersist()
     dropBuckets.unpersist()
     // read back from the COMMITTED store (the merge above swapped the
@@ -2063,7 +2051,8 @@ object Dedup {
     // and then REPLACE that partition's whole contents with them.
     // UNCHECKED read: a pending marker is not an error HERE — this
     // method is how a pending retraction completes.
-    val (idBuckets, nfcFold) = labelsPinUnchecked(ss, storePath)
+    val (idBuckets, nfcFold, labelsSnap) =
+      labelsPinUnchecked(ss, storePath)
     // the band store's layout through the same validated pin read
     // ingest uses, BEFORE anything commits: an unreadable pin fails
     // loudly with both stores unchanged (a fallback to the flat layout
@@ -2141,7 +2130,8 @@ object Dedup {
     }
     }
     // 2. re-cluster the affected clusters' survivors
-    val labels = clusterTableUnchecked(ss, storePath).cache()
+    val labels = graft.ops.TableLayout.readAt(ss, storePath + "/labels",
+      labelsSnap).cache()
     val affected = labels.join(remove, Seq(idCol), "left_semi")
       .select("cluster").distinct()
     val members = labels.join(affected, Seq("cluster"), "left_semi")
@@ -2168,8 +2158,7 @@ object Dedup {
     // bounded fetch takes the driver union-find, as for the ingest delta
     val relab = connectedComponents(surTexts.select(col(idCol)), idCol,
       pairs, checkpointDir = checkpointDir)
-    val newVer = labels.agg(coalesce(max("ver"), lit(0L)))
-      .head().getLong(0) + 1L
+    val newVer = labelsSnap.version + 1L
     val ibOf = (c: Column) =>
       pmod(graft.functions.Sampling.hashBucket(c), lit(idBuckets.toLong))
     val newRows = relab.select(col("id").as(idCol),

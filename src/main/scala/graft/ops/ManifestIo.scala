@@ -18,7 +18,8 @@ private[graft] object ManifestIo {
 
   /** Committed manifests under `root` with the given name `prefix`,
     * ordered oldest-first by version. */
-  def list(fs: FileSystem, root: Path, prefix: String): Seq[(Long, Path)] =
+  private[ops] def list(fs: FileSystem, root: Path,
+      prefix: String): Seq[(Long, Path)] =
     (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
       .flatMap { s =>
         val name = s.getPath.getName
@@ -28,7 +29,7 @@ private[graft] object ManifestIo {
       }
       .sortBy(_._1)
 
-  def readText(fs: FileSystem, p: Path): String = {
+  private[ops] def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -38,7 +39,7 @@ private[graft] object ManifestIo {
     * write a dot-tmp, rename to the final name. Returns false (tmp
     * dropped) when the final name already exists — the caller decides
     * whether that is a racing-backfill no-op or a hard error. */
-  def writeAtomic(fs: FileSystem, root: Path, prefix: String,
+  private[ops] def writeAtomic(fs: FileSystem, root: Path, prefix: String,
       version: Long, text: String): Boolean = {
     val tmp = new Path(root, ".manifest-tmp-" + java.util.UUID.randomUUID())
     val out = fs.create(tmp, true)

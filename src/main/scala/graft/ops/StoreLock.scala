@@ -68,13 +68,10 @@ object StoreLock {
       ttlMs: Long = 30L * 60 * 1000)(body: => T): T =
     withLockCtx(ss, storePath, ttlMs)(_ => body)
 
-  /** What a mutation can know about its lease: its own epoch `token`
-    * and the `priorEpoch` token the stamp replaced (None for a
-    * never-mutated store). `priorEpoch` is the session-cache
-    * invalidation key: a cached fact recorded under token X is still
-    * valid at the next mutation iff that mutation's priorEpoch is X —
-    * no other writer stamped in between. */
-  final case class LockCtx(token: String, priorEpoch: Option[String])
+  /** What a mutation knows about its lease: its own epoch `token`,
+    * which every manifest commit re-verifies before publishing
+    * ([[TableLayout.commit]]). */
+  final case class LockCtx(token: String)
 
   /** [[withLock]] variant handing the mutation its [[LockCtx]]. */
   def withLockCtx[T](ss: SparkSession, storePath: String,
@@ -84,12 +81,11 @@ object StoreLock {
     val fs = lock.getFileSystem(ss.sessionState.newHadoopConf())
     val token = java.util.UUID.randomUUID().toString
     acquire(fs, lock, ttlMs, token, reclaimTried = false)
-    val prior = readLease(fs, epoch).map(_._1)
     stampEpoch(fs, epoch, token)
     val hb = startHeartbeat(fs, lock, ttlMs)
     var bodyOk = false
     try {
-      val r = body(LockCtx(token, prior))
+      val r = body(LockCtx(token))
       bodyOk = true
       r
     } finally {

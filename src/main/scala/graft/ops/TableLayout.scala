@@ -129,15 +129,18 @@ private[graft] object TableLayout {
     * commit, and a takedown stream that recorded the epoch it first
     * ran a batch under fails loudly on re-delivery across a reset —
     * the structural fence for the crash-between-retract-and-marker +
-    * vacuum replay window (the text index's `retract_epoch` twin).
+    * vacuum replay window. The text index keeps its epoch here too.
     *
-    * `pins` are the store's WRITE-ONCE parameters (`pin=<key>;<value>`
+    * `pins` are the store's parameters and stats (`pin=<key>;<value>`
     * manifest lines): the settings its rows were hashed or laid out
     * under (a dedup store's fold and LSH parameters, an index's
-    * training size). Published in the same atomic commit as the data
-    * they describe, so a reader never sees rows under one setting and
-    * a pin naming another; every commit built from a live snapshot
-    * carries them forward, and a full republish states them anew. */
+    * training size), write-once; and the text index's corpus stats
+    * (`n_docs`, `total_tokens`, `n_buckets`, `max_doc_id`), restated
+    * by each append or retract commit. Published in the same atomic
+    * commit as the data they describe, so a reader never sees rows
+    * under one setting and a pin naming another; every commit built
+    * from a live snapshot carries them forward, and a full republish
+    * states them anew. */
   final case class Snapshot(version: Long, pcol: Option[String],
       gens: Seq[Gen], artifacts: Map[String, String] = Map.empty,
       tombstones: Seq[String] = Nil, repoch: Long = 0L,
@@ -590,11 +593,11 @@ private[graft] object TableLayout {
     * survive [[KeepManifests]] further rewrites for in-flight
     * readers. Must run under the store lease (`token` = the
     * [[StoreLock.LockCtx]] epoch token). `pins` are the published
-    * snapshot's write-once parameters: an init states them, a
-    * rewrite of a live store passes the live snapshot's. */
+    * snapshot's pins ([[Snapshot]]): an init or a text-index build
+    * states them, a rewrite of a live store passes the live
+    * snapshot's. */
   def publish(df: DataFrame, path: String, pcol: Option[String],
-      token: String, beforeCommit: Path => Unit = _ => (),
-      fam: Family = StoreFamily,
+      token: String, fam: Family = StoreFamily,
       pins: Map[String, String] = Map.empty): Unit = {
     val ss = df.sparkSession
     val prior = resolveOpt(ss, path, fam)
@@ -614,12 +617,6 @@ private[graft] object TableLayout {
       case None =>
         df.write.mode("overwrite").parquet(dir.toString)
     }
-    // sidecars a client snapshots WITH the data (e.g. the text
-    // index's corpus stats) land in the generation dir BEFORE the
-    // manifest commit, so a reader that resolves the snapshot always
-    // finds them — underscore/dot names only, which parquet readers
-    // ignore
-    beforeCommit(dir)
     commit(ss, path, Snapshot(v, pcol, Seq(Gen(genDirName(fam, v), Nil)),
       repoch = repoch, pins = pins), token, fam)
     gc(ss, path, fam = fam)
@@ -638,8 +635,7 @@ private[graft] object TableLayout {
     * partitions). Must run under the store lease. */
   def replacePartitions(ss: SparkSession, path: String,
       replacement: DataFrame, touchedVals: Seq[String],
-      token: String, beforeCommit: Path => Unit = _ => (),
-      fam: Family = StoreFamily,
+      token: String, fam: Family = StoreFamily,
       tweak: Snapshot => Snapshot = identity): Unit = {
     requireCleanVals(touchedVals)
     // a no-op rewrite (nothing touched; by the values-subset contract
@@ -702,15 +698,12 @@ private[graft] object TableLayout {
         .exists(d => !excluded.contains(d.getPath.getName))
     }
     val newGens = liveOld :+ Gen(genDirName(fam, v), Nil)
-    // client sidecars (e.g. the text index's paired stats) land in
-    // the new generation BEFORE the manifest references it; named
-    // artifacts (the ANN index's centroids/codebook), tombstones and
-    // pins are untouched by a partition rewrite and carry forward into
-    // the new snapshot
-    // `tweak` lets a tombstone-folding rewrite (the ANN vacuum) clear
-    // the list and bump the retraction epoch in the SAME atomic
-    // commit as the fold — default identity carries both forward
-    beforeCommit(newDir)
+    // named artifacts (the ANN index's centroids/codebook),
+    // tombstones, epoch and pins are untouched by a partition rewrite
+    // and carry forward into the new snapshot; `tweak` lets a
+    // tombstone-folding rewrite (the ANN and text vacuums) clear the
+    // list and bump the retraction epoch in the SAME atomic commit as
+    // the fold
     commit(ss, path, tweak(snap.copy(version = v, gens = newGens)), token,
       fam)
     gc(ss, path, fam = fam)
@@ -762,13 +755,10 @@ private[graft] object TableLayout {
     * counts come from the listings this pass takes anyway — callers
     * must not re-list just to report (object-store LIST calls are
     * the metadata cost here). An empty `touched` = nothing over
-    * threshold, no snapshot burned. `maxFiles <= 0` disables.
-    * `beforeCommit` is [[replacePartitions]]'s sidecar hook. Must run
-    * under the store lease. */
+    * threshold, no snapshot burned. `maxFiles <= 0` disables. Must
+    * run under the store lease. */
   def compactPartitions(ss: SparkSession, path: String, maxFiles: Int,
-      token: String,
-      beforeCommit: Path => Unit = _ => (),
-      fam: Family = StoreFamily): CompactReport = {
+      token: String, fam: Family = StoreFamily): CompactReport = {
     if (maxFiles <= 0) return CompactReport(Seq.empty, 0L, 0L)
     val snap = resolve(ss, path, fam)
     val pc = snap.pcol.getOrElse(throw new IllegalStateException(
@@ -783,8 +773,7 @@ private[graft] object TableLayout {
     // swapped out from under it
     val replacement = readAt(ss, path, snap)
       .filter(col(pc).cast("string").isin(over: _*))
-    replacePartitions(ss, path, replacement, over, token, beforeCommit,
-      fam)
+    replacePartitions(ss, path, replacement, over, token, fam)
     // one post-rewrite listing for the exact after-count (an emptied
     // partition writes zero files, so it is not derivable from
     // `before` alone)

@@ -75,22 +75,14 @@ object EventQueries {
         java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
       val typed = graft.streaming.EventStreams.toTypedEvents(
         graft.streaming.EventStreams.readEvents(s, dir.toString))
-      s.catalog.dropTempView("stream_sessions_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.sessionize(typed)
-          .writeStream.format("memory").queryName("stream_sessions_out")
-          .outputMode("append")
-          // explicit tmpfs checkpoint: the implicit default lands on
-          // the disk-backed java.io.tmpdir (see TempDirs)
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_sessions: streaming query timed out — refusing to read a partial sink")
+      // explicit tmpfs checkpoint: the implicit default lands on
+      // the disk-backed java.io.tmpdir (see TempDirs)
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_sessions", "stream_sessions_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.EventStreams.sessionize(typed)
       }
-      s.table("stream_sessions_out")
+      out
         .select(col("user_id"), col("session_idx"), col("n_events"),
           col("start_us"), col("end_us"),
           (col("end_us") - col("start_us")).as("dur_us"), col("sum_value_c"))
@@ -187,25 +179,17 @@ object EventQueries {
         raw, "event_id", 4, "graft-stream-join")
       val ev = graft.streaming.EventStreams.readEvents(
         s, dir.toString, maxFilesPerTrigger = Some(2))
-      s.catalog.dropTempView("stream_join_out")
       // 8 fat state partitions: a stream-stream join keeps 4 stores
       // per partition per micro-batch — see withShufflePartitions
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.attributionJoin(
-            ev.filter(col("event_type") === "purchase"),
-            ev.filter(col("event_type") === "view"),
-            horizonUs = 86400000000L)
-          .writeStream.format("memory").queryName("stream_join_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_join: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_join", "stream_join_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.EventStreams.attributionJoin(
+          ev.filter(col("event_type") === "purchase"),
+          ev.filter(col("event_type") === "view"),
+          horizonUs = 86400000000L)
       }
-      s.table("stream_join_out").orderBy("purchase_id", "view_id")
+      out.orderBy("purchase_id", "view_id")
     }),
 
     // AS-OF JOIN (J8 extension — absent from the reference and from

@@ -122,9 +122,9 @@ object PipelineQueries {
       tag: String): String = {
     val dst = graft.util.TempDirs.scoped(tag).toString + "/store"
     // HARDLINK clone, not a byte copy: every store mutation in the
-    // engine is new-file + atomic-rename + unlink (ManifestIo
-    // writeAtomic, TableLayout generation commits, gc, compaction) —
-    // never an in-place rewrite — so clones can share the immutable
+    // engine is new-file + atomic-rename + unlink (TableLayout
+    // manifest and generation commits, gc, compaction) — never an
+    // in-place rewrite — so clones can share the immutable
     // bytes; a mutation on the clone creates fresh files and unlinks
     // links without touching the shared inodes. Cuts the per-gate COW
     // staging from a full store copy to directory metadata. Falls
@@ -139,7 +139,8 @@ object PipelineQueries {
     // LIMIT: a process with CAP_DAC_OVERRIDE (root) writes through
     // read-only bits, so there the freeze guards nothing. The real
     // protection is that every store mutation is unlink + create-new
-    // (ManifestIo.writeAtomic, StoreLock.stampEpoch), never a rewrite.
+    // (a manifest commit is a temp write renamed to a fresh name, an
+    // epoch stamp is StoreLock.stampEpoch), never a rewrite.
     def freezeTree(f: java.io.File): Unit =
       if (f.isDirectory) f.listFiles().foreach(freezeTree)
       else require(f.setWritable(false, false), s"cow: cannot freeze $f")
@@ -1162,23 +1163,14 @@ object PipelineQueries {
         col("o_orderkey").as("arrival"))
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         changes, "arrival", 4, "graft-stream-upsert")
-      s.catalog.dropTempView("stream_upsert_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.upsertStream(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(2)))
-          .toDF()
-          .writeStream.format("memory").queryName("stream_upsert_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_upsert: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_upsert", "stream_upsert_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.upsertStream(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(2)))
       }
-      s.table("stream_upsert_out").orderBy("key", "ver")
+      out.orderBy("key", "ver")
     }),
 
     // Streaming deterministic reservoir: per-language top-20 samples
@@ -1192,47 +1184,29 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         docs, "doc_id", 4, "graft-stream-sample")
-      s.catalog.dropTempView("stream_sample_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_sample", "stream_sample_out",
+          dir.resolve("ckpt").toString) {
         val stream = graft.streaming.PipelineStreams.readDocs(
             s, dir.toString, maxFilesPerTrigger = Some(1))
           .select(col("lang").as("stratum"), col("doc_id"),
             graft.functions.Sampling.hashBucket(col("doc_id")).as("bucket"))
-        val q = graft.streaming.PipelineStreams.reservoirSample(stream, k = 20)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_sample_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_sample: streaming query timed out — refusing to read a partial sink")
+        graft.streaming.PipelineStreams.reservoirSample(stream, k = 20)
       }
-      s.table("stream_sample_out").orderBy("stratum", "bucket", "doc_id")
+      out.orderBy("stratum", "bucket", "doc_id")
     }),
 
     "q_stream_dedup" -> ((s, d) => {
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         Tables.documents(s, d), "doc_id", 4, "graft-stream-dedup")
-      s.catalog.dropTempView("stream_dedup_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.firstSeenDedup(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(2)))
-          .toDF()
-          .writeStream.format("memory").queryName("stream_dedup_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_dedup: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_dedup", "stream_dedup_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.firstSeenDedup(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(2)))
       }
-      s.table("stream_dedup_out").orderBy("fingerprint")
+      out.orderBy("fingerprint")
     }),
 
     // Streaming sequence packing through the real streaming engine:
@@ -1250,47 +1224,29 @@ object PipelineQueries {
     "q_stream_budget" -> ((s, d) => {
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         Tables.documents(s, d), "doc_id", 3, "graft-stream-budget")
-      s.catalog.dropTempView("stream_budget_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.budgetAdmitStream(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(1)),
-            budget = 800L)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_budget_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_budget: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_budget", "stream_budget_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.budgetAdmitStream(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(1)),
+          budget = 800L)
       }
-      s.table("stream_budget_out").orderBy("source", "doc_id")
+      out.orderBy("source", "doc_id")
     }),
 
     "q_stream_pack" -> ((s, d) => {
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         Tables.documents(s, d), "doc_id", 4, "graft-stream-pack")
-      s.catalog.dropTempView("stream_pack_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.packStream(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(2)),
-            budget = 512, shardSpan = 200)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_pack_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_pack: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_pack", "stream_pack_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.packStream(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(2)),
+          budget = 512, shardSpan = 200)
       }
-      graft.ops.Packing.packSummary(s.table("stream_pack_out"))
+      graft.ops.Packing.packSummary(out)
     }),
 
     // Streaming NEAR-dup through the real streaming engine: documents
@@ -1312,24 +1268,15 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         docs, "doc_id", 4, "graft-stream-neardup")
-      s.catalog.dropTempView("stream_neardup_cand")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.lshCandidates(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(2)),
-            n = 3, numHashes = 64, bands = 16)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_neardup_cand")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_neardup: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_neardup", "stream_neardup_cand",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.lshCandidates(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(2)),
+          n = 3, numHashes = 64, bands = 16)
       }
-      Dedup.verifyCandidatePairs(s.table("stream_neardup_cand"), docs,
+      Dedup.verifyCandidatePairs(out, docs,
           "doc_id", "text", n = 3, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")
@@ -1367,25 +1314,16 @@ object PipelineQueries {
         .drop("drop_idx")
       val dir = graft.streaming.PipelineStreams.stageKeyedDrops(
         staged, "drop_key", "graft-stream-dedup-ttl")
-      s.catalog.dropTempView("stream_dedup_ttl_out")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.firstSeenDedupTtl(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-                maxFilesPerTrigger = Some(1))
-              .withWatermark("event_time", "0 seconds"),
-            "event_time", horizonMs = 30L * 60L * 1000L)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_dedup_ttl_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_dedup_ttl: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_dedup_ttl", "stream_dedup_ttl_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.firstSeenDedupTtl(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+              maxFilesPerTrigger = Some(1))
+            .withWatermark("event_time", "0 seconds"),
+          "event_time", horizonMs = 30L * 60L * 1000L)
       }
-      s.table("stream_dedup_ttl_out").orderBy("fingerprint", "keeper")
+      out.orderBy("fingerprint", "keeper")
     }),
 
     // TTL-BOUNDED streaming LSH index: same hourly drops (drop =
@@ -1409,26 +1347,17 @@ object PipelineQueries {
         .drop("drop_idx")
       val dir = graft.streaming.PipelineStreams.stageKeyedDrops(
         staged, "drop_key", "graft-stream-neardup-ttl")
-      s.catalog.dropTempView("stream_neardup_ttl_cand")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.lshCandidatesTtl(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-                maxFilesPerTrigger = Some(1))
-              .withWatermark("event_time", "0 seconds"),
-            "event_time", horizonMs = 30L * 60L * 1000L,
-            n = 3, numHashes = 64, bands = 16)
-          .toDF()
-          .writeStream.format("memory").queryName("stream_neardup_ttl_cand")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_neardup_ttl: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_neardup_ttl", "stream_neardup_ttl_cand",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.lshCandidatesTtl(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+              maxFilesPerTrigger = Some(1))
+            .withWatermark("event_time", "0 seconds"),
+          "event_time", horizonMs = 30L * 60L * 1000L,
+          n = 3, numHashes = 64, bands = 16)
       }
-      Dedup.verifyCandidatePairs(s.table("stream_neardup_ttl_cand"), docs,
+      Dedup.verifyCandidatePairs(out, docs,
           "doc_id", "text", n = 3, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")
@@ -1483,28 +1412,20 @@ object PipelineQueries {
           regexp_extract(col("source"), "[0-9]+", 0).cast("bigint") * 937 % 9000)
       val dir = graft.streaming.PipelineStreams.stageOrderedDrops(
         docs, "doc_id", 4, "graft-stream-ingest")
-      s.catalog.dropTempView("stream_ingest_out")
       val aug = concat(col("text"),
         when(col("doc_id") % 3 === 0,
           concat(lit(" contact user"), col("doc_id").cast("string"),
             lit("@example.com now"))).otherwise(lit("")))
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.PipelineStreams.hygieneTransform(
-            graft.streaming.PipelineStreams.readDocs(s, dir.toString,
-              maxFilesPerTrigger = Some(2))
-              .withColumn("text", aug),
-            weights)
-          .writeStream.format("memory").queryName("stream_ingest_out")
-          .outputMode("append")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_ingest: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_ingest", "stream_ingest_out",
+          dir.resolve("ckpt").toString) {
+        graft.streaming.PipelineStreams.hygieneTransform(
+          graft.streaming.PipelineStreams.readDocs(s, dir.toString,
+            maxFilesPerTrigger = Some(2))
+            .withColumn("text", aug),
+          weights)
       }
-      s.table("stream_ingest_out").orderBy("doc_id")
+      out.orderBy("doc_id")
     }),
 
     // Per-label L2-norm stats: per-row deterministic fold, scaled

@@ -183,23 +183,15 @@ object StatsQueries {
       // fact scans at fixture scale, unbounded at a real month count)
       val dir = graft.streaming.PipelineStreams.stageKeyedDrops(
         rttFact(s, d), "monthyr", "graft-cube-drop")
-      s.catalog.dropTempView("stream_cube_base")
-      graft.streaming.PipelineStreams.withShufflePartitions(s, 8) {
-        val q = graft.streaming.DashboardStreams.incrementalBase(
-            graft.streaming.DashboardStreams.readFacts(s, dir.toString),
-            "provider", B)
-          .writeStream.format("memory").queryName("stream_cube_base")
-          .outputMode("complete")
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val finished = q.awaitTermination(300000)
-        q.stop()
-        require(finished,
-          "q_stream_cube: streaming query timed out — refusing to read a partial sink")
+      val out = graft.streaming.PipelineStreams.runToMemory(s,
+          "q_stream_cube", "stream_cube_base",
+          dir.resolve("ckpt").toString, "complete") {
+        graft.streaming.DashboardStreams.incrementalBase(
+          graft.streaming.DashboardStreams.readFacts(s, dir.toString),
+          "provider", B)
       }
       orderedStats(DashboardStats.statsFromBase(
-        s.table("stream_cube_base"), DashboardStats.Config(maxBands = B)))
+        out, DashboardStats.Config(maxBands = B)))
     }))
 
   // One SQL, THREE engines-under-test: the batch plan, the streaming

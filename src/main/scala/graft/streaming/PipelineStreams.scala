@@ -77,6 +77,32 @@ object PipelineStreams {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Run `stream` to completion into the in-memory table `sink` and
+    * return that table — the runner every memory-sink fixture query
+    * shares: drop a stale `sink` view, build and start the stream at 8
+    * shuffle partitions ([[withShufflePartitions]]) checkpointing to
+    * `checkpoint`, replay every staged drop (`Trigger.AvailableNow`),
+    * and refuse to hand back a partial sink: a replay not finished
+    * within 300 s fails naming `query`. `outputMode` is the sink's
+    * (`append`, or `complete` for an aggregation's full state). */
+  def runToMemory(spark: SparkSession, query: String, sink: String,
+      checkpoint: String, outputMode: String = "append")(
+      stream: => Dataset[_]): DataFrame = {
+    spark.catalog.dropTempView(sink)
+    withShufflePartitions(spark, 8) {
+      val q = stream.writeStream.format("memory").queryName(sink)
+        .outputMode(outputMode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      val finished = q.awaitTermination(300000)
+      q.stop()
+      require(finished,
+        s"$query: streaming query timed out — refusing to read a partial sink")
+    }
+    spark.table(sink)
+  }
+
   /** Stage a static table as an ORDERED DROP FOLDER: `chunks` id-ranged
     * single-file parquet drops with ascending mtimes, so a file stream
     * with `maxFilesPerTrigger=1` replays them as one ordered

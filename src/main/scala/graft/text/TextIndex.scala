@@ -1,12 +1,11 @@
 package graft.text
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.ops.{ManifestIo, StoreLock, TableLayout}
+import graft.ops.{StoreLock, TableLayout}
 import graft.plans.PortableHash64Expr
 
 /** PERSISTENT INVERTED TEXT INDEX + BM25 top-k — the keyword-retrieval
@@ -26,11 +25,12 @@ import graft.plans.PortableHash64Expr
   * generation, rewrites land in new generations behind one atomic
   * manifest, so a serve racing maintenance always sees a complete
   * index. Corpus statistics (doc count, total token count — the BM25
-  * `N` and `avgdl` inputs) live in tiny versioned `_textmeta-v*`
-  * files INSIDE the data generations (atomic create-new, written
-  * before the manifest commit), so the stats snapshot WITH the
-  * postings: one resolve serves bucketing-consistent stats and data
-  * even while a rebuild with different `nBuckets` races the serve.
+  * `N` and `avgdl` inputs — plus the bucket count and the ingested-id
+  * bound) are `pin=` lines of that manifest, the retracted ids its
+  * `tomb=` lines and the retraction epoch its `repoch=` line, so the
+  * stats snapshot WITH the postings: one resolve serves
+  * bucketing-consistent stats and data even while a rebuild with
+  * different `nBuckets` races the serve.
   *
   * Scoring contract (PORTABLE-EXACT, the house oracle discipline):
   * Okapi BM25 with k1 = 1.2, b = 0.75 and the Robertson-Sparck-Jones
@@ -71,11 +71,11 @@ object TextIndex {
   val K1 = 1.2
   val B = 0.75
 
-  /** Corpus stats + the RETRACTED doc ids. Tombstones live IN the
-    * meta (not the manifest) because a retraction must decrement
-    * `nDocs`/`totalTokens` atomically with the list — one meta file
-    * is one atomic create, so a serve reads stats and tombstones that
-    * always agree. Small by contract
+  /** Corpus stats + the RETRACTED doc ids, as one snapshot manifest
+    * carries them: the stats are its pins, the ids its tombstones. A
+    * retraction decrements `nDocs`/`totalTokens` in the same atomic
+    * manifest commit that extends the list, so a serve reads stats and
+    * tombstones that always agree. Small by contract
     * ([[graft.ops.Tombstones.MaxTombstones]]); [[vacuum]] folds the
     * rows out physically and resets the list.
     *
@@ -84,8 +84,8 @@ object TextIndex {
     * lowers it — a tombstoned id stays "used"): a delta whose ids all
     * exceed it is provably new, so [[append]]'s idempotence probe can
     * skip its index scan entirely — the monotonic-id ingest common
-    * case. `None` = unknown (a meta written before the field
-    * existed); the probe then always runs.
+    * case. `None` = unknown (a corpus or delta with null ids); the
+    * probe then always runs.
     *
     * `retractEpoch` is the STRUCTURAL FENCE for the one residual
     * replay window the marker choreography leaves open (a crash
@@ -96,7 +96,7 @@ object TextIndex {
     * batch under, and a re-delivered batch under a CHANGED epoch
     * fails loudly instead of double-decrementing `N` (the list it
     * would have converged against idempotently no longer exists).
-    * Metas written before the field existed read as epoch 0. */
+    * It is the snapshot's `repoch` (absent = 0). */
   final case class Meta(nDocs: Long, totalTokens: Long, nBuckets: Int,
       tombstones: Seq[Long] = Nil, maxDocId: Option[Long] = None,
       retractEpoch: Long = 0L)
@@ -165,96 +165,50 @@ object TextIndex {
       s"CAST($rank AS DOUBLE))) + 0.5) AS BIGINT)"
 
   // ---------------------------------------------------------------
-  // meta sidecar
+  // corpus stats: snapshot pins
   // ---------------------------------------------------------------
 
-  private val MetaPrefix = "_textmeta-v"
-  private val KeepMetas = 2
-
-  /** Write `meta` INSIDE generation dir `genDir` (atomic create-new
-    * via the manifest primitive; underscore name, invisible to
-    * parquet readers). The meta SNAPSHOTS WITH the data: it lives in
-    * a generation the manifest references, so a serve that resolved
-    * ONE snapshot reads stats consistent with that snapshot's
-    * bucketing — a rebuild with a different `nBuckets` publishes its
-    * meta inside its own generation BEFORE the manifest commit (the
-    * `beforeCommit` hook), never beside another snapshot's postings,
-    * and superseded metas die with their generations under the
-    * ordinary GC grace window. */
-  private def writeMetaIn(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: Path, meta: Meta): Unit = {
-    val v = ManifestIo.list(fs, genDir, MetaPrefix).lastOption
-      .map(_._1 + 1L).getOrElse(1L)
-    val text = s"n_docs=${meta.nDocs}\ntotal_tokens=${meta.totalTokens}\n" +
-      s"n_buckets=${meta.nBuckets}\n" +
-      meta.maxDocId.fold("")(m => s"max_doc_id=$m\n") +
-      (if (meta.retractEpoch == 0L) ""
-       else s"retract_epoch=${meta.retractEpoch}\n") +
-      (if (meta.tombstones.isEmpty) ""
-       else meta.tombstones.sorted.grouped(512)
-         .map(c => s"tombstones=${c.mkString(",")}\n").mkString)
-    if (!ManifestIo.writeAtomic(fs, genDir, MetaPrefix, v, text))
-      throw new IllegalStateException(
-        s"text index: could not publish meta v$v in $genDir")
-    val all = ManifestIo.list(fs, genDir, MetaPrefix)
-    all.dropRight(KeepMetas).foreach { case (_, p) => fs.delete(p, false) }
-  }
-
-  /** The generation dir the NEWEST stats land in (and appends write
-    * to): the snapshot's last generation. */
-  private def newestGenDir(path: String,
-      snap: TableLayout.Snapshot): Path = {
-    val root = new Path(path.stripSuffix("/"))
-    if (snap.gens.last.dir.isEmpty) root
-    else new Path(root, snap.gens.last.dir)
-  }
-
-  /** The live corpus stats; fails descriptively on a root that has
-    * postings but no meta (not built by [[build]]). */
+  /** The live corpus stats; fails descriptively on an index whose
+    * manifest carries no stats pins (see [[metaAt]]). */
   def readMeta(ss: SparkSession, path: String): Meta =
-    readMetaAt(ss, path, TableLayout.resolve(ss, path))
+    metaAt(path, TableLayout.resolve(ss, path))
 
-  /** Corpus stats AT a resolved snapshot: newest generation first,
-    * highest meta version within it — always paired with the
-    * snapshot's own postings (the reader-isolation contract extended
-    * to the stats). */
-  private def readMetaAt(ss: SparkSession, path: String,
-      snap: TableLayout.Snapshot): Meta =
-    readMetaAtOpt(ss, path, snap).getOrElse(
-      throw new IllegalStateException(
-        s"no text-index meta in any generation of $path at snapshot " +
-          s"v${snap.version} — the index was not built by " +
-          "TextIndex.build (or the meta was deleted); rebuild it"))
-
-  /** [[readMetaAt]] that reports a genuinely ABSENT meta (no sidecar
-    * file in any generation — the path holds a non-index store) as
-    * None instead of throwing. A meta that EXISTS but fails to read
-    * or parse still propagates: callers that treat "can't read" as
-    * "fresh" (e.g. a rebuild deciding the epoch to carry) must not
-    * silently reset the replay fence on a transient IO error. */
-  private def readMetaAtOpt(ss: SparkSession, path: String,
-      snap: TableLayout.Snapshot): Option[Meta] = {
-    val root = new Path(path.stripSuffix("/"))
-    val fs = TableLayout.fsOf(ss, path)
-    val last = snap.gens.reverse.iterator
-      .map(g => if (g.dir.isEmpty) root else new Path(root, g.dir))
-      .filter(fs.exists)
-      .flatMap(d => ManifestIo.list(fs, d, MetaPrefix).lastOption)
-      .nextOption()
-    last.map(l => parseMeta(ManifestIo.readText(fs, l._2)))
+  /** Corpus stats AT a resolved snapshot: its pins, tombstones and
+    * epoch — always paired with the snapshot's own postings (the
+    * reader-isolation contract extended to the stats). A manifest
+    * without the stats pins is a root not built by [[build]], or an
+    * index built before the stats moved into the manifest: rebuild
+    * it. */
+  private def metaAt(path: String, snap: TableLayout.Snapshot): Meta = {
+    val p = snap.pins
+    (for (n <- p.get("n_docs"); t <- p.get("total_tokens");
+          b <- p.get("n_buckets"))
+      yield Meta(n.toLong, t.toLong, b.toInt,
+        snap.tombstones.map(_.toLong).sorted,
+        p.get("max_doc_id").map(_.toLong), snap.repoch))
+      .getOrElse(throw new IllegalStateException(
+        s"no text-index stats pins in the manifest of $path at snapshot " +
+          s"v${snap.version} — the index was not built by this " +
+          "version's TextIndex.build; rebuild the index"))
   }
 
-  private def parseMeta(text: String): Meta = {
-    val lines = text.split("\n").map(_.trim)
-      .filter(_.nonEmpty).map { l =>
-        val Array(k, v) = l.split("=", 2); k -> v
-      }.toSeq
-    val kv = lines.toMap
-    val tombs = lines.collect { case ("tombstones", v) =>
-      v.split(",").toSeq.filter(_.nonEmpty).map(_.toLong) }.flatten.sorted
-    Meta(kv("n_docs").toLong, kv("total_tokens").toLong,
-      kv("n_buckets").toInt, tombs, kv.get("max_doc_id").map(_.toLong),
-      kv.get("retract_epoch").map(_.toLong).getOrElse(0L))
+  /** `m` as manifest pins; an unknown id bound writes none. */
+  private def pinsOf(m: Meta): Map[String, String] =
+    Map("n_docs" -> m.nDocs.toString,
+      "total_tokens" -> m.totalTokens.toString,
+      "n_buckets" -> m.nBuckets.toString) ++
+      m.maxDocId.map(x => "max_doc_id" -> x.toString)
+
+  /** Commit `snap`'s data one version up carrying `m` — the
+    * metadata-only commit append, retract and a dataless vacuum share
+    * (the ANN index's retract shape: commit, then gc). Under the
+    * lease whose epoch `token` names. */
+  private def commitMeta(ss: SparkSession, path: String,
+      snap: TableLayout.Snapshot, m: Meta, token: String): Unit = {
+    TableLayout.commit(ss, path, snap.copy(version = snap.version + 1L,
+      tombstones = m.tombstones.map(_.toString), repoch = m.retractEpoch,
+      pins = pinsOf(m)), token)
+    TableLayout.gc(ss, path)
   }
 
   /** The live retraction epoch — the replay fence a retract stream
@@ -328,8 +282,11 @@ object TextIndex {
     * tokenize pass (persisted — stats and postings come from the same
     * materialization, see [[tokenized]]) + one (doc, term) count
     * shuffle, postings co-located by term bucket, published as a
-    * fresh store snapshot with the corpus stats committed alongside.
-    * Runs under the single-writer lease. */
+    * fresh store snapshot whose pins are the corpus stats. A rebuild
+    * over live tombstones resets the list, so the publish bumps the
+    * retraction epoch (a takedown replay cannot alias a fresh epoch);
+    * an unreadable prior manifest fails the build rather than
+    * resetting the epoch to 0. Runs under the single-writer lease. */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, "nBuckets must be positive")
@@ -338,25 +295,9 @@ object TextIndex {
       val tok = tokenized(docs, idCol, textCol).persist()
       try {
         val st = corpusStats(tok)
-        val fs = TableLayout.fsOf(spark, path)
-        // a REBUILD over a store with live tombstones resets the list
-        // exactly like a vacuum — carry the prior epoch forward and
-        // bump it, so a takedown replay cannot alias a fresh epoch 0.
-        // Only a genuinely ABSENT meta (prior store not a text index)
-        // reads as fresh; a read/parse FAILURE propagates rather than
-        // silently resetting the fence to 0 (readMetaAtOpt contract).
-        val epoch = TableLayout.resolveOpt(spark, path)
-          .flatMap(s => readMetaAtOpt(spark, path, s))
-          .map(m => graft.ops.Tombstones.nextEpoch(
-            m.retractEpoch, m.tombstones))
-          .getOrElse(0L)
-        // meta lands INSIDE the new generation before the manifest
-        // commit: a reader resolving the new snapshot always finds
-        // stats whose nBuckets matches the postings it reads
         TableLayout.publish(postingsOf(tok, nBuckets),
           path, Some("bucket"), ctx.token,
-          beforeCommit = dir => writeMetaIn(fs, dir,
-            Meta(st.n, st.t, nBuckets, Nil, st.maxId, epoch)))
+          pins = pinsOf(Meta(st.n, st.t, nBuckets, maxDocId = st.maxId)))
         log.info(s"built text index at $path: ${st.n} docs, ${st.t} " +
           s"tokens, $nBuckets buckets")
       } finally { tok.unpersist(); () }
@@ -368,7 +309,7 @@ object TextIndex {
     * bucket hash and add its postings to the newest generation
     * (file-atomic — a racing serve sees the old file set), then
     * commit updated corpus stats. A serve between the data append and
-    * the meta commit scores new postings under stats one delta stale
+    * the stats commit scores new postings under stats one delta stale
     * — bounded staleness, the documented ANN-append drift analog,
     * never a partial read.
     *
@@ -377,11 +318,11 @@ object TextIndex {
     * a LIVE-TOMBSTONED id would be hidden by the serve filter and
     * then physically dropped by the next [[vacuum]] while its stats
     * stayed counted — silent loss. BOTH contracts are GUARDED:
-    * tombstone collisions fail against the meta's driver-side list
-    * (delta-sized, no index IO), and replay collisions fail against
-    * the live postings of the buckets the delta's terms hash to.
-    * When the meta carries a `maxDocId` bound and the delta's ids all
-    * exceed it — the monotonic-id ingest common case, which every
+    * tombstone collisions fail against the snapshot's driver-side
+    * list (delta-sized, no index IO), and replay collisions fail
+    * against the live postings of the buckets the delta's terms hash
+    * to. When the stats carry a `maxDocId` bound and the delta's ids
+    * all exceed it — the monotonic-id ingest common case, which every
     * streamed drop satisfies — the replay probe is skipped as
     * provably clean (no index scan at all). Otherwise the probe scans
     * the touched buckets' (`bucket`, `doc_id`) columns only; a
@@ -399,9 +340,9 @@ object TextIndex {
   def append(delta: DataFrame, idCol: String, textCol: String,
       path: String, allowReplay: Boolean = false): Unit = {
     val spark = delta.sparkSession
-    StoreLock.withLock(spark, path) {
+    StoreLock.withLockCtx(spark, path) { ctx =>
       val snap = TableLayout.resolve(spark, path)
-      val meta = readMetaAt(spark, path, snap)
+      val meta = metaAt(path, snap)
       val tok = tokenized(delta, idCol, textCol).persist()
       try {
         requireNotTombstoned(tok, meta, path)
@@ -416,21 +357,19 @@ object TextIndex {
         // probe derived its pairs from the persisted tok instead
         TableLayout.append(postingsOf(tok, meta.nBuckets), path,
           Some("bucket"))
-        // updated stats into the SAME newest generation the postings
-        // landed in (the snapshot version is unchanged by an append,
-        // and nBuckets cannot change outside a rebuild, so a serve
-        // between the data and the stats sees bounded-stale N/avgdl,
-        // never inconsistent bucketing). The id bound only ever
-        // RISES, and stays unknown if it was unknown (a known-wrong
-        // bound would let a later probe skip incorrectly).
+        // updated stats commit over the SAME generations the postings
+        // landed in (nBuckets cannot change outside a rebuild, so a
+        // serve between the data and the stats sees bounded-stale
+        // N/avgdl, never inconsistent bucketing). The id bound only
+        // ever RISES, and stays unknown if it was unknown (a
+        // known-wrong bound would let a later probe skip incorrectly).
         val newMax = (meta.maxDocId, st.maxId) match {
           case (Some(a), Some(b)) => Some(math.max(a, b))
           case _ => None
         }
-        writeMetaIn(TableLayout.fsOf(spark, path), newestGenDir(path, snap),
-          meta.copy(nDocs = meta.nDocs + st.n,
-            totalTokens = meta.totalTokens + st.t,
-            maxDocId = newMax))
+        commitMeta(spark, path, snap, meta.copy(nDocs = meta.nDocs + st.n,
+          totalTokens = meta.totalTokens + st.t, maxDocId = newMax),
+          ctx.token)
       } finally { tok.unpersist(); () }
     }
   }
@@ -495,8 +434,8 @@ object TextIndex {
   }
 
   /** Document RETRACTION (takedown/opt-out deletion): tombstone
-    * `docIds` and decrement the corpus stats, in ONE atomic meta
-    * write — a serve that resolves the snapshot reads stats and
+    * `docIds` and decrement the corpus stats, in ONE atomic manifest
+    * commit — a serve that resolves the snapshot reads stats and
     * tombstones that agree, and scores the remaining corpus exactly
     * as a fresh build without those docs would (the `q_text_retract`
     * oracle). A doc's postings scatter across every bucket its terms
@@ -524,9 +463,9 @@ object TextIndex {
     * lease.
     *
     * `verifyExists = true` is the belt for a takedown feed that
-    * cannot be trusted at all (and for metas written before the
-    * `maxDocId` bound existed, where the cheap rejection cannot
-    * run): every fresh id must appear in that same live-postings
+    * cannot be trusted at all (and for indexes with an unknown
+    * `maxDocId` bound, where the cheap rejection cannot run): every
+    * fresh id must appear in that same live-postings
     * pass or the batch is rejected with the store unchanged. The
     * probe cannot distinguish a never-ingested id from an
     * already-vacuumed or genuinely-EMPTY ingested document (none
@@ -535,9 +474,9 @@ object TextIndex {
     * extra (the stats pass already computes presence). */
   def retract(ss: SparkSession, path: String, docIds: Seq[Long],
       verifyExists: Boolean = false): Unit =
-    StoreLock.withLock(ss, path) {
+    StoreLock.withLockCtx(ss, path) { ctx =>
       val snap = TableLayout.resolve(ss, path)
-      val meta = readMetaAt(ss, path, snap)
+      val meta = metaAt(path, snap)
       val (fresh, all) = graft.ops.Tombstones.merge(
         meta.tombstones, docIds, s"TextIndex.retract at $path")
       // the ingested-id bound partially ENFORCES the "ids must have
@@ -580,10 +519,10 @@ object TextIndex {
             "untrusted feed cannot silently deflate N/avgdl. The " +
             "store is unchanged.")
         val gone = liveStats.valuesIterator.sum
-        writeMetaIn(TableLayout.fsOf(ss, path), newestGenDir(path, snap),
-          meta.copy(nDocs = meta.nDocs - liveStats.size,
-            totalTokens = meta.totalTokens - gone,
-            tombstones = all))
+        commitMeta(ss, path, snap, meta.copy(
+          nDocs = meta.nDocs - liveStats.size,
+          totalTokens = meta.totalTokens - gone, tombstones = all),
+          ctx.token)
         log.info(s"retracted ${liveStats.size} live doc(s) / $gone " +
           s"token(s) from the text index at $path " +
           s"(${missing.length} fresh id(s) had no live postings; " +
@@ -598,14 +537,13 @@ object TextIndex {
     * column-pruned `(bucket, doc_id)` scan whose driver list is
     * bounded by `nBuckets`), untouched buckets' bytes are never read,
     * shuffled, or re-staged. No re-tokenization, stats unchanged
-    * (retract already decremented them); the fresh meta — empty
-    * tombstone list, bumped retraction epoch (the takedown-replay
-    * fence) — lands inside the new generation before its manifest
-    * commit, so no snapshot exists where the rows are folded but the
-    * fence has not moved. A natural-language doc's terms hash into
-    * MANY buckets, so a LARGE takedown set degrades toward a full
-    * rewrite — the honest floor for an inverted file — but the
-    * common small-batch fold (the takedown streams'
+    * (retract already decremented them); the empty tombstone list and
+    * the bumped retraction epoch (the takedown-replay fence) ride the
+    * fold's own manifest commit, so no snapshot exists where the rows
+    * are folded but the fence has not moved. A natural-language doc's
+    * terms hash into MANY buckets, so a LARGE takedown set degrades
+    * toward a full rewrite — the honest floor for an inverted file —
+    * but the common small-batch fold (the takedown streams'
     * `vacuumAfterTombstones` automation) stays touched-bucket-sized.
     * Run it when the tombstone list nears the cap or ahead of a
     * compliance deadline that demands physical deletion — the folded
@@ -620,9 +558,8 @@ object TextIndex {
   def vacuum(ss: SparkSession, path: String): Unit =
     StoreLock.withLockCtx(ss, path) { ctx =>
       val snap = TableLayout.resolve(ss, path)
-      val meta = readMetaAt(ss, path, snap)
+      val meta = metaAt(path, snap)
       if (meta.tombstones.nonEmpty) {
-        val fs = TableLayout.fsOf(ss, path)
         // the reset BUMPS the retraction epoch: any takedown batch
         // that first ran against the pre-vacuum list and is
         // re-delivered after it must fail loudly, not re-decrement
@@ -643,12 +580,12 @@ object TextIndex {
                 .isin(touched.map(Integer.valueOf): _*)),
               "doc_id", meta.tombstones),
             touched.map(_.toString), ctx.token,
-            beforeCommit = dir => writeMetaIn(fs, dir, reset))
+            tweak = _.copy(tombstones = Nil, repoch = reset.retractEpoch))
         else
           // no tombstoned doc has live postings (dataless snapshot,
           // ingested-empty docs, or a crash after a prior vacuum's
-          // fold): metadata-only reset, no snapshot burned
-          writeMetaIn(fs, newestGenDir(path, snap), reset)
+          // fold): metadata-only reset
+          commitMeta(ss, path, snap, reset, ctx.token)
         log.info(s"vacuumed ${meta.tombstones.length} tombstoned " +
           s"doc(s) out of the text index at $path " +
           s"(${touched.length} bucket(s) rewritten)")
@@ -677,19 +614,15 @@ object TextIndex {
     * partition-scoped rewrite: untouched buckets' bytes are never
     * read, readers racing the compaction keep the previous snapshot,
     * and the rewrite is value-invisible (the append gate serves the
-    * compacted index against the ordinary full-corpus oracle). Runs
-    * under the single-writer lease. */
+    * compacted index against the ordinary full-corpus oracle). The
+    * partition rewrite carries the stats pins, tombstones and epoch
+    * forward. Runs under the single-writer lease. */
   def compact(ss: SparkSession, path: String,
       maxFilesPerBucket: Int = 16): CompactReport =
     StoreLock.withLockCtx(ss, path) { ctx =>
-      // stats unchanged by a layout rewrite — but the new generation
-      // must carry its OWN meta copy (beforeCommit), because a
-      // compaction that touches every bucket drops all older
-      // generations (and their metas) from the manifest
-      val meta = readMeta(ss, path)
-      val fs = TableLayout.fsOf(ss, path)
+      readMeta(ss, path) // an index without stats pins fails here
       val r = TableLayout.compactPartitions(ss, path, maxFilesPerBucket,
-        ctx.token, beforeCommit = dir => writeMetaIn(fs, dir, meta))
+        ctx.token)
       CompactReport(r.touched.length, r.filesBefore, r.filesAfter)
     }
 
@@ -716,7 +649,7 @@ object TextIndex {
   def health(ss: SparkSession, path: String): DataFrame = {
     import ss.implicits._
     val snap = TableLayout.resolve(ss, path)
-    val meta = readMetaAt(ss, path, snap)
+    val meta = metaAt(path, snap)
     val (nFiles, _, _) = TableLayout.fileStats(ss, path, snap)
     val maxPerBucket = TableLayout.filesPerPartition(ss, path, snap)
       .values.maxOption.getOrElse(0L)
@@ -738,8 +671,8 @@ object TextIndex {
   }
 
   /** The serve scaffolding BOTH retrieval entry points share: ONE
-    * snapshot resolution for stats AND postings (meta is read from
-    * the snapshot's own generations, so a serve racing a rebuild can
+    * snapshot resolution for stats AND postings (the stats are the
+    * snapshot's own pins, so a serve racing a rebuild can
     * never pair one snapshot's nBuckets with another's postings —
     * the bucketing would prune matching rows silently), ONE
     * evaluation of the query lineage (queries are SMALL by the
@@ -756,7 +689,7 @@ object TextIndex {
       textCol: String, path: String): Option[Serve] = {
     val spark = queries.sparkSession
     val snap = TableLayout.resolve(spark, path)
-    val meta = readMetaAt(spark, path, snap)
+    val meta = metaAt(path, snap)
     val collected = queries
       .select(col(idCol).cast("long").as("query_id"),
         posexplode(toks(col(textCol))).as(Seq("qpos", "term")))
@@ -771,7 +704,7 @@ object TextIndex {
     val buckets = collected.map(_.getInt(3)).distinct.toSeq
     // retracted docs drop HERE, before df derivation — so document
     // frequencies, scores, and phrase anchors are all computed over
-    // the live corpus the meta's stats describe
+    // the live corpus the snapshot's stats describe
     val slice = graft.ops.Tombstones.exclude(
       liveOpt.get
         .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))

@@ -943,11 +943,11 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 30L -> 30L),
       s"standing labels must remap to the new min id, got $got")
-    // untouched cluster's row version is still the init version (its
-    // id-bucket was never rewritten unless it shares a bucket)
+    // the drop row and both remapped rows carry the version of the
+    // ingest's labels commit (init published v1, the merge v2)
     val vers = Dedup.clusterTable(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(vers(10L) == 1L && vers(11L) == 1L && vers(5L) == 1L)
+    assert(vers(10L) == 2L && vers(11L) == 2L && vers(5L) == 2L)
   }
 
   test("incremental paths fold NFC like batch: NFD drop finds its NFC standing twin") {
@@ -1495,41 +1495,65 @@ class DedupSpec extends AnyFunSuite {
       "doc_id", "text", dir, nfc = false).collect()
   }
 
-  test("ingest version cache: monotone across cached drops; an interloper " +
-      "mutation forces the recompute") {
+  test("label ver is the labels snapshot version that commits it: " +
+      "ingests, a compaction, a retraction and a later ingest") {
     import spark.implicits._
-    val dir = graft.util.TempDirs.scoped("dedup-vercache").toString + "/store"
+    val dir = graft.util.TempDirs.scoped("dedup-labelver").toString + "/store"
+    val labelsPath = dir + "/labels"
     // 5 and 6 are near-dups so the retraction below WRITES repair rows
-    // at its version (an interloper bump the cache cannot see)
+    // at its version
     val corpus = Seq(
       (1L, "one unique alpha doc"), (2L, "two unique beta doc"),
       (5L, "shared phrase common tail words here"),
       (6L, "shared phrase common tail words here too")).toDF("doc_id", "text")
     Dedup.clusterTableInit(corpus, "doc_id", "text", dir, idBuckets = 2)
-    def maxVer: Long = graft.ops.TableLayout.read(spark, dir + "/labels")
-      .agg(max("ver")).head().getLong(0)
-    assert(maxVer == 0L)
+    def version: Long = graft.ops.TableLayout.resolve(spark, labelsPath).version
+    def vers: Map[Long, Long] = graft.ops.TableLayout.read(spark, labelsPath)
+      .select("doc_id", "ver").as[(Long, Long)].collect().toMap
+    // every live ver is at most the live version, so an update at the
+    // next commit's version always wins the merge
+    def bounded(): Unit =
+      assert(vers.values.forall(_ <= version), s"$vers at v$version")
+    assert(vers.values.toSet == Set(0L)); bounded()
     var all = corpus
+    // each mutation writes its rows at exactly the version it commits
     def ingest(id: Long): Unit = {
       val drop = Seq((id, s"novel $id " + (0 to 5).map(j => s"w$id-$j")
         .mkString(" "))).toDF("doc_id", "text")
       all = all.unionByName(drop)
+      val before = version
       Dedup.clusterTableIngest(drop, all, "doc_id", "text", dir).count()
+      assert(version == before + 1L)
+      assert(vers(id) == version, s"drop row $id at ver ${vers(id)}, v$version")
+      bounded()
     }
-    ingest(10L); assert(maxVer == 1L)
-    ingest(11L); assert(maxVer == 2L) // cache-served version
-    // interloper: a retraction bumps the table's version out from under
-    // the session cache (its epoch stamp must invalidate it)
+    ingest(10L); ingest(11L)
+    // a compaction (full republish of the live rows and pins) moves
+    // the version alone
+    val live = vers
+    graft.ops.StoreLock.withLockCtx(spark, labelsPath) { ctx =>
+      val snap = graft.ops.TableLayout.resolve(spark, labelsPath)
+      graft.ops.TableLayout.publish(
+        graft.ops.TableLayout.readAt(spark, labelsPath, snap), labelsPath,
+        Some("ib"), ctx.token, pins = snap.pins)
+    }
+    assert(vers == live && vers.values.max < version); bounded()
+    val before = version
     Dedup.clusterTableRetract(Seq(Tuple1(6L)).toDF("doc_id"),
       all.where(col("doc_id") =!= 6L), "doc_id", "text", dir)
-    assert(maxVer == 3L, "retraction should write repair rows at ver 3")
+    assert(version == before + 1L)
+    assert(vers(5L) == version, "the retraction's repair row rides its commit")
+    bounded()
     all = all.where(col("doc_id") =!= 6L)
     ingest(12L)
-    assert(maxVer == 4L, "post-interloper ingest must recompute the version")
-    // and the final labels still read clean
-    val labels = Dedup.clusterTable(spark, dir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(labels == Set(1L, 2L, 5L, 10L, 11L, 12L))
+    // and the labels equal the from-scratch closure of the live corpus
+    val scratch = graft.util.TempDirs.scoped("dedup-labelver-scratch")
+      .toString + "/store"
+    Dedup.clusterTableInit(all, "doc_id", "text", scratch, idBuckets = 2)
+    def labels(p: String) = Dedup.clusterTable(spark, p)
+      .select("doc_id", "cluster").as[(Long, Long)].collect().toMap
+    assert(labels(dir) == labels(scratch))
+    assert(labels(dir).keySet == Set(1L, 2L, 5L, 10L, 11L, 12L))
   }
   test("per-drop store joins are bloom-pruned map-side: the executed " +
       "classification and probe plans carry might_contain over the " +

@@ -353,49 +353,6 @@ class TableLayoutSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("numeric/date-like"))
   }
 
-  test("beforeCommit hook: sidecars land inside the generation before " +
-      "the manifest references it, and die with it under gc") {
-    val path = graft.util.TempDirs.scoped("tl-hook").toString + "/store"
-    val fs = TableLayout.fsOf(spark, path)
-    def sidecarIn(gen: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$gen/_sidecar"))
-    // publish: at hook time the manifest must NOT yet name the new
-    // generation (the hook runs pre-commit), and the sidecar must be
-    // inside it afterwards
-    lockedToken(path) { t =>
-      TableLayout.publish(mk(0L to 3L, "a"), path, Some("ib"), t,
-        beforeCommit = dir => {
-          assert(TableLayout.resolveOpt(spark, path).isEmpty,
-            "hook must run before the first manifest commit")
-          fs.create(new org.apache.hadoop.fs.Path(dir, "_sidecar"), false)
-            .close()
-        })
-    }
-    assert(sidecarIn("data-g1"))
-    assert(rows(TableLayout.read(spark, path)) == rows(mk(0L to 3L, "a")))
-    // replacePartitions: same pre-commit ordering against the live
-    // version
-    lockedToken(path) { t =>
-      TableLayout.replacePartitions(spark, path,
-        mk(Seq(0L), "b"), Seq("0"), t,
-        beforeCommit = dir => {
-          assert(TableLayout.resolve(spark, path).version === 1L,
-            "hook must run before the rewrite's manifest commit")
-          fs.create(new org.apache.hadoop.fs.Path(dir, "_sidecar"), false)
-            .close()
-        })
-    }
-    assert(sidecarIn("data-g2"))
-    // two further publishes push data-g1 and data-g2 past the grace
-    // window: their sidecars must be reaped WITH their generations
-    lockedToken(path)(t =>
-      TableLayout.publish(mk(0L to 3L, "c"), path, Some("ib"), t))
-    lockedToken(path)(t =>
-      TableLayout.publish(mk(0L to 3L, "d"), path, Some("ib"), t))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/data-g1")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/data-g2")))
-  }
-
   test("gc reaps a partition dir excluded by EVERY kept manifest that " +
       "references its generation: superseded partitions leave disk " +
       "after the grace window, not never") {

@@ -199,19 +199,82 @@ class TextIndexSpec extends AnyFunSuite {
     val q = Seq((1L, "the quick brown fox")).toDF("query_id", "qtext")
     val before = TextIndex.topK(q, "query_id", "qtext", k = 5, path)
       .orderBy("rank").collect().toSeq
-    // full rebuild with DIFFERENT bucketing: meta lands inside the
-    // new generation before its manifest commit, so the live serve
-    // pairs the new stats with the new postings...
+    // full rebuild with DIFFERENT bucketing: the stats are pins of
+    // the rebuild's own manifest commit, so the live serve pairs the
+    // new stats with the new postings...
     TextIndex.build(corpus, "doc_id", "text", path, nBuckets = 4)
     assert(TextIndex.readMeta(spark, path).nBuckets === 4)
     assert(TextIndex.topK(q, "query_id", "qtext", k = 5, path)
       .orderBy("rank").collect().toSeq === before)
-    // ...and the SUPERSEDED generation still carries its own meta for
-    // in-flight readers of the previous snapshot (grace window)
-    val g1 = new java.io.File(path, "data-g1")
-    assert(g1.exists, "previous generation must survive the grace window")
-    assert(g1.listFiles().exists(_.getName.startsWith("_textmeta-v")),
-      "previous generation must keep its paired meta")
+    // ...and the KEPT previous manifest still pairs the superseded
+    // generation with its own stats for in-flight readers of the
+    // previous snapshot (grace window)
+    val prev = scala.io.Source.fromFile(
+      new java.io.File(path, "_manifest-v000000000001"), "UTF-8")
+    val prevLines = try prev.getLines().toSet finally prev.close()
+    assert(prevLines.contains("pin=n_buckets;8") &&
+      prevLines.contains("gen=data-g1;"), prevLines)
+    assert(new java.io.File(path, "data-g1").exists,
+      "previous generation must survive the grace window")
+  }
+
+  test("no mutation writes a _textmeta sidecar: build, append, " +
+      "retract, vacuum and compact commit through the manifest only") {
+    val path = graft.util.TempDirs.scoped("textidx-nosidecar").toString +
+      "/ix"
+    TextIndex.build(corpus.filter($"doc_id" <= 3), "doc_id", "text", path,
+      nBuckets = 2)
+    TextIndex.append(corpus.filter($"doc_id" > 3), "doc_id", "text", path)
+    assert(TextIndex.compact(spark, path, maxFilesPerBucket = 1)
+      .bucketsCompacted > 0)
+    TextIndex.retract(spark, path, Seq(1L))
+    TextIndex.vacuum(spark, path)
+    val root = new java.io.File(path)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val sidecars = walk(root).filter(_.getName.startsWith("_textmeta"))
+    assert(sidecars.isEmpty, sidecars)
+    // the stats, tombstones and epoch all read back from the manifest
+    val m = TextIndex.readMeta(spark, path)
+    assert(m.nDocs === 5L && m.tombstones === Nil && m.retractEpoch === 1L)
+    assert(m.maxDocId === Some(6L) && m.nBuckets === 2)
+  }
+
+  test("an index whose manifest lacks the stats pins (built before the " +
+      "stats moved into the manifest) fails every read and mutation " +
+      "with a rebuild message; build re-initializes it") {
+    val path = graft.util.TempDirs.scoped("textidx-pinless").toString +
+      "/ix"
+    TextIndex.build(corpus, "doc_id", "text", path, nBuckets = 4)
+    graft.ops.StoreLock.withLockCtx(spark, path) { ctx =>
+      val snap = graft.ops.TableLayout.resolve(spark, path)
+      graft.ops.TableLayout.commit(spark, path,
+        snap.copy(version = snap.version + 1L, pins = Map.empty), ctx.token)
+    }
+    val q = Seq((1L, "the quick brown fox")).toDF("query_id", "qtext")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "readMeta" -> (() => TextIndex.readMeta(spark, path)),
+      "retractEpoch" -> (() => TextIndex.retractEpoch(spark, path)),
+      "topK" -> (() => TextIndex.topK(q, "query_id", "qtext", k = 3, path)),
+      "phraseTopK" -> (() =>
+        TextIndex.phraseTopK(q, "query_id", "qtext", k = 3, path)),
+      "health" -> (() => TextIndex.health(spark, path)),
+      "append" -> (() => TextIndex.append(
+        Seq((7L, "late doc")).toDF("doc_id", "text"), "doc_id", "text",
+        path)),
+      "retract" -> (() => TextIndex.retract(spark, path, Seq(1L))),
+      "vacuum" -> (() => TextIndex.vacuum(spark, path)),
+      "compact" -> (() =>
+        TextIndex.compact(spark, path, maxFilesPerBucket = 1)))
+    val v = graft.ops.TableLayout.resolve(spark, path).version
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("rebuild the index"), s"$name: $e")
+    }
+    assert(graft.ops.TableLayout.resolve(spark, path).version === v,
+      "a refused mutation commits nothing")
+    TextIndex.build(corpus, "doc_id", "text", path, nBuckets = 4)
+    assert(TextIndex.readMeta(spark, path).nDocs === 6L)
   }
 
   test("empty-corpus build serves empty results, not a failure") {
@@ -514,24 +577,22 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.retract(spark, path, Seq(2L))
     TextIndex.vacuum(spark, path)
     assert(TextIndex.retractEpoch(spark, path) === 1L)
-    // corrupt every meta sidecar in place (a transient-IO / partial-
-    // write stand-in): the rebuild must PROPAGATE, not carry epoch 0
-    val fs = graft.ops.TableLayout.fsOf(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val metas = fs.listFiles(root, true)
-    var corrupted = 0
-    while (metas.hasNext) {
-      val f = metas.next().getPath
-      if (f.getName.startsWith("_textmeta-v")) {
-        val out = fs.create(f, true)
-        out.write("not a meta".getBytes("UTF-8")); out.close()
-        corrupted += 1
-      }
-    }
-    assert(corrupted > 0, "fixture must find a meta to corrupt")
-    intercept[Exception] {
+    // corrupt the live manifest in place (a transient-IO / partial-
+    // write stand-in): the rebuild must PROPAGATE, not publish over it
+    // with epoch 0
+    val manifests = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("_manifest-v")).sortBy(_.getName)
+    val live = manifests.last
+    val out = graft.ops.TableLayout.fsOf(spark, path).create(
+      new org.apache.hadoop.fs.Path(live.getPath), true)
+    out.write("not a manifest".getBytes("UTF-8")); out.close()
+    val e = intercept[IllegalStateException] {
       TextIndex.build(corpus, "doc_id", "text", path, nBuckets = 4)
     }
+    assert(e.getMessage.contains("unparseable"), e.getMessage)
+    assert(new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("_manifest-v")).sortBy(_.getName)
+      .last.getName === live.getName, "the failed build committed nothing")
   }
 
   test("textIndexRetractStream: streamed takedown == batch retract; " +
